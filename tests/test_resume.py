@@ -2,6 +2,7 @@
 an interrupted run + resume produces byte-identical tier tables to a
 clean full run, and completed units are not recomputed."""
 
+import json
 import os
 
 import pytest
@@ -126,11 +127,14 @@ def test_failed_unit_recorded_and_retried(spark, seq, tmp_path_factory, monkeypa
     monkeypatch.setattr(rj, "run_unit", flaky)
     with pytest.raises(RuntimeError):
         rj.run_rollup(spark, seq, out, n_units=4, write_raw=False)
-    statuses = {
-        r.unit_id: r.status
+    recs = {
+        r.unit_id: r
         for r in Manifest(spark, f"{out}/_manifest").metrics().collect()
     }
-    assert statuses["0"] == "done" and statuses["1"] == "failed"
+    assert recs["0"].status == "done" and recs["1"].status == "failed"
+    # the failed record carries the cause; the done record has none
+    assert json.loads(recs["1"].lineage)["error"] == "RuntimeError: injected"
+    assert "error" not in json.loads(recs["0"].lineage)
     # retry completes only the remaining units (incl. the failed one)
     s2 = rj.run_rollup(spark, seq, out, n_units=4, write_raw=False)
     assert s2["units_processed"] == 3
@@ -207,3 +211,119 @@ def test_resume_restages_when_input_changes(spark, seq, tmp_path_factory):
     rec = _hadoop_read_text(spark, f"{staged}/_INPUT_FPR")
     assert rec == _input_fingerprint(spark.read.parquet(in_b))
     assert rec is not None and rec.startswith("files:")
+
+
+def _old_spark_append(spark, path, unit_id, status, updated_at):
+    """A record appended by a Spark write job, the format of manifests
+    written before records were appended from the driver."""
+    from tsclust_spark.plans.manifest import MANIFEST_SCHEMA
+
+    rec = [(unit_id, status, 0, 0, 0.0, 0.0, "{}", updated_at)]
+    spark.createDataFrame(rec, MANIFEST_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(path)
+
+
+@pytest.mark.spark
+def test_manifest_record_starts_no_spark_job(spark, tmp_path_factory):
+    m = Manifest(spark, f"{tmp_path_factory.mktemp('nojob')}/_manifest")
+    sc = spark.sparkContext
+    group = "manifest-record-no-job"
+    sc.setJobGroup(group, "Manifest.record probe")
+    try:
+        before = list(sc.statusTracker().getJobIdsForGroup(group))
+        m.record("1", "done", rows=1, points=60, wall_ms=2.0)
+        after = list(sc.statusTracker().getJobIdsForGroup(group))
+        # the probe does see jobs run under the group
+        spark.range(3).count()
+        control = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert after == before
+    assert len(control) > len(after)
+    (r,) = m.read().collect()
+    assert (r.unit_id, r.status, r.rows, r.points) == ("1", "done", 1, 60)
+    assert r.wall_ms == 2.0 and r.points_per_sec == 30000.0
+
+
+@pytest.mark.spark
+def test_manifest_read_ignores_hidden_temp_files(spark, tmp_path_factory):
+    path = f"{tmp_path_factory.mktemp('hidden')}/_manifest"
+    m = Manifest(spark, path)
+    m.record("1", "done", rows=1, points=1, wall_ms=1.0)
+    # what a crashed append leaves behind: a hidden, partial temp file
+    with open(os.path.join(path, "_part-deadbeef.parquet.tmp"), "wb") as f:
+        f.write(b"PAR1 truncated")
+    with open(os.path.join(path, ".part-deadbeef.parquet.tmp"), "wb") as f:
+        f.write(b"PAR1 truncated")
+    assert [r.unit_id for r in m.read().collect()] == ["1"]
+    assert m.pending_units(["1", "2"]) == ["2"]
+
+
+@pytest.mark.spark
+def test_manifest_mixed_spark_and_driver_records(spark, tmp_path_factory):
+    """Resuming from a manifest written by the Spark-job appender: old
+    and driver-written records resolve latest-record-wins together."""
+    import time
+
+    path = f"{tmp_path_factory.mktemp('mixed')}/_manifest"
+    t = time.time() - 60.0
+    _old_spark_append(spark, path, "3", "done", t)
+    _old_spark_append(spark, path, "4", "failed", t)
+    _old_spark_append(spark, path, "5", "done", t)
+    m = Manifest(spark, path)
+    m.record("3", "failed")  # newer than the old done: 3 is pending again
+    m.record("4", "done", rows=1, points=1, wall_ms=1.0)
+    assert m.read().count() == 5
+    assert m.pending_units(["3", "4", "5", "6"]) == ["3", "6"]
+
+
+def _spy_upserts(monkeypatch, fail_target=None):
+    """Record each rollup upsert's target and optimized plan; raise
+    inside the upsert whose target ends with ``fail_target``."""
+    import tsclust_spark.plans.rollup_job as rj
+
+    seen = []
+    real = rj.upsert_partitioned
+
+    def spy(spark_, target, updates, *args, **kwargs):
+        plan = updates._jdf.queryExecution().optimizedPlan().toString()
+        seen.append((os.path.basename(target), plan))
+        if fail_target and target.endswith(fail_target):
+            raise RuntimeError(f"injected in {fail_target}")
+        return real(spark_, target, updates, *args, **kwargs)
+
+    monkeypatch.setattr(rj, "upsert_partitioned", spy)
+    return seen
+
+
+@pytest.mark.spark
+def test_unit_1m_kernel_evaluated_once(spark, seq, tmp_path_factory, monkeypatch):
+    """Every tier upsert reads the unit's materialized 1m scratch: no
+    tier plan re-runs the Arrow 1m kernel, and the scratch is gone
+    after the run."""
+    out = str(tmp_path_factory.mktemp("once"))
+    seen = _spy_upserts(monkeypatch)
+    run_rollup(spark, seq, out, n_units=2, write_raw=True)
+    agg = [(t, p) for t, p in seen if t.startswith("agg_")]
+    assert sorted(t for t, _ in agg) == sorted(
+        ["agg_1m", "agg_1h", "agg_1d"] * 2
+    )
+    for target, plan in agg:
+        assert "MapInArrow" not in plan, target
+    assert not os.path.exists(f"{out}/_work")
+
+
+@pytest.mark.spark
+def test_unit_scratch_removed_when_upsert_fails(
+    spark, seq, tmp_path_factory, monkeypatch
+):
+    out = str(tmp_path_factory.mktemp("scratchfail"))
+    _spy_upserts(monkeypatch, fail_target="agg_1h")
+    with pytest.raises(RuntimeError, match="injected in agg_1h"):
+        run_rollup(spark, seq, out, n_units=2, write_raw=False)
+    assert not os.path.exists(f"{out}/_work")
+    (r,) = Manifest(spark, f"{out}/_manifest").read().collect()
+    assert r.status == "failed"
+    assert json.loads(r.lineage)["error"] == "RuntimeError: injected in agg_1h"

@@ -33,20 +33,6 @@ from pyspark.sql import functions as F
 T0_EPOCH_DEFAULT = 1704067200  # 2024-01-01 00:00:00 UTC
 
 
-def rollup_1m_numpy(
-    doc_ids: np.ndarray, tokens: list, per_bucket: int = 60
-) -> dict[str, np.ndarray]:
-    """Vectorized per-batch 1m rollup over a list of per-row arrays."""
-    lengths = np.fromiter((len(t) for t in tokens), dtype=np.int64, count=len(tokens))
-    if not (lengths > 0).any():
-        return {k: np.empty(0, dtype=np.int64) for k in
-                ("row_idx", "bucket_idx", "min", "max", "sum", "count", "rep")}
-    values = np.concatenate(
-        [np.asarray(t, dtype=np.int32) for t, ln in zip(tokens, lengths) if ln > 0]
-    )
-    return rollup_1m_flat(values, lengths, per_bucket)
-
-
 def rollup_1m_flat(
     values: np.ndarray, lengths: np.ndarray, per_bucket: int = 60
 ) -> dict[str, np.ndarray]:

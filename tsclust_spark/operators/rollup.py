@@ -137,23 +137,6 @@ def cascade_tier(
     )
 
 
-def rollup_all_tiers(
-    points_df: DataFrame,
-    key_col: str = "doc_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    integer_values: bool = True,
-) -> dict[str, DataFrame]:
-    """The full cascade. The 1m tier is the only scan of raw points."""
-    tiers: dict[str, DataFrame] = {}
-    tiers["1m"] = rollup_tier(
-        points_df, "1m", key_col, ts_col, value_col, integer_values
-    )
-    tiers["1h"] = cascade_tier(tiers["1m"], "1h", key_col, integer_values)
-    tiers["1d"] = cascade_tier(tiers["1h"], "1d", key_col, integer_values)
-    return tiers
-
-
 def realtime_tier(
     points_df: DataFrame,
     materialized_df: DataFrame,
@@ -381,21 +364,3 @@ def rollup_sequences_1m_fast(
         "mean_value", F.col("sum_value").cast("double") / F.col("count_value")
     )
 
-
-def write_tier(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Full-write tier sink (SURVEY.md C2), partitioned for pruning.
-
-    Iceberg variant on a real cluster: ``df.writeTo(tbl).createOrReplace()``
-    with ``days(bucket_ts)`` partition transform; sandbox uses parquet
-    with an explicit ``bucket_date`` partition column.
-    """
-    (
-        df.withColumn("bucket_date", F.to_date("bucket_ts"))
-        # range partition (C6) + in-partition sort (C22): clusters files
-        # by (date, doc) so doc_id predicates prune row groups on read
-        .repartitionByRange("bucket_date", "doc_id")
-        .sortWithinPartitions("bucket_date", "doc_id")
-        .write.mode(mode)
-        .partitionBy("bucket_date")
-        .parquet(path)
-    )

@@ -9,6 +9,16 @@ A work unit is a deterministic horizontal slice of the input (default:
 on raw parquet the hash filter still prunes row groups when the input
 is doc_id-sorted).
 
+Appending a record starts no Spark job: the driver serializes the
+one-row record with pyarrow (the column names and types of
+``MANIFEST_SCHEMA``), writes the bytes through the Hadoop
+``FileSystem`` API under a hidden ``_part-<uuid>.parquet.tmp`` name,
+then renames it to ``part-<uuid>.parquet``. Spark's file listing skips
+``_``/``.`` names, so a reader never sees a partial record, and a
+crashed append leaves at most an ignored temp file. Records appended by
+a Spark write job have the same on-disk format, so manifests holding
+both kinds resolve latest-record-wins as one table.
+
 Resume = ``left_anti`` join of the unit list against completed records
 (SURVEY.md C12 shape) — no driver-side bookkeeping files beyond the
 manifest itself, so a killed job resumes from exactly the completed set.
@@ -42,11 +52,13 @@ class Manifest:
         self.spark = spark
         self.path = path
 
+    def _fs_root(self):
+        root = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
+        return root.getFileSystem(self.spark._jsc.hadoopConfiguration()), root
+
     def _exists(self) -> bool:
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs.exists(hpath)
+        fs, root = self._fs_root()
+        return fs.exists(root)
 
     def read(self) -> DataFrame:
         if not self._exists():
@@ -75,22 +87,42 @@ class Manifest:
         wall_ms: float = 0.0,
         lineage: dict | None = None,
     ) -> None:
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         pps = (points / (wall_ms / 1000.0)) if wall_ms > 0 else 0.0
-        rec = [
-            (
-                unit_id,
-                status,
-                int(rows),
-                int(points),
-                float(wall_ms),
-                float(pps),
-                json.dumps(lineage or {}, sort_keys=True),
-                time.time(),
-            )
-        ]
-        self.spark.createDataFrame(rec, MANIFEST_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.path)
+        rec = {
+            "unit_id": unit_id,
+            "status": status,
+            "rows": int(rows),
+            "points": int(points),
+            "wall_ms": float(wall_ms),
+            "points_per_sec": float(pps),
+            "lineage": json.dumps(lineage or {}, sort_keys=True),
+            "updated_at": time.time(),
+        }
+        buf = pa.BufferOutputStream()
+        pq.write_table(
+            pa.Table.from_pylist([rec], schema=to_arrow_schema(MANIFEST_SCHEMA)),
+            buf,
+        )
+        # write under a hidden name, then rename: Spark never lists a
+        # partial file
+        fs, root = self._fs_root()
+        Path = self.spark._jvm.org.apache.hadoop.fs.Path
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        final, tmp = Path(root, name), Path(root, f"_{name}.tmp")
+        out = fs.create(tmp, True)
+        try:
+            out.write(bytearray(buf.getvalue().to_pybytes()))
+        finally:
+            out.close()
+        if not fs.rename(tmp, final):
+            fs.delete(tmp, False)
+            raise OSError(f"manifest append: rename {tmp} -> {final} failed")
 
     def metrics(self) -> DataFrame:
         """Per-unit throughput table (lineage + points/sec)."""

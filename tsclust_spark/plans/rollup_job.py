@@ -7,12 +7,16 @@ Iceberg ``bucket(doc_id, N)``) so per-unit scans prune. Per unit:
 
 1. scan the unit's partition of the staged table (C1/C10)
 2. Gorilla-compress each row -> ``raw`` retention tier (C23/C24)
-3. explode to points (C7) -> 1m/1h/1d continuous aggregates (C16/C17)
-   with exact cascaded mean and a lower-medoid ``rep_value`` per window
-   (C27) cascading medoid-of-medoids
-4. MERGE each tier into its partitioned target (C3), partitions
-   ``(unit, bucket_date)`` so units never touch each other's files
-5. append a manifest record with lineage + points/sec (C4)
+3. map-only 1m tier (Arrow kernel, C16/C17) with exact sums and a
+   lower-medoid ``rep_value`` per window (C27), written ONCE to the
+   unit-scoped scratch parquet ``{out_dir}/_work/unit=<u>``
+4. 1h/1d cascade (medoid-of-medoids) read from that scratch, so the
+   scan and the 1m kernel run once per unit, not once per tier
+5. MERGE each tier into its partitioned target (C3), partitions
+   ``(unit, bucket_date)`` so units never touch each other's files;
+   the scratch is deleted on success and on failure
+6. append a manifest record with lineage + points/sec (C4), or, for a
+   failed unit, the error in its lineage
 
 A killed job resumes by skipping manifest-complete units. Tier tables
 are identical whether produced by one run or any interrupted/resumed
@@ -139,23 +143,35 @@ def _input_fingerprint(seq: DataFrame) -> str:
     return f"rows:{seq.count()}"
 
 
+def _hadoop_fs_path(spark: SparkSession, path: str):
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def _hadoop_write_text(spark: SparkSession, path: str, text: str) -> None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs_path(spark, path)
     out = fs.create(hpath, True)
     out.write(bytearray(text.encode()))
     out.close()
 
 
+def _delete_unit_scratch(spark: SparkSession, work: str) -> None:
+    """Delete a unit's scratch dir, then its ``_work`` parent once no
+    other unit's scratch is left in it."""
+    fs, hpath = _hadoop_fs_path(spark, work)
+    fs.delete(hpath, True)
+    parent = hpath.getParent()
+    if fs.exists(parent) and len(fs.listStatus(parent)) == 0:
+        fs.delete(parent, False)
+
+
 def _hadoop_read_text(spark: SparkSession, path: str) -> str | None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs_path(spark, path)
     if not fs.exists(hpath):
         return None
     stream = fs.open(hpath)
     try:
+        jvm = spark._jvm
         reader = jvm.java.io.BufferedReader(
             jvm.java.io.InputStreamReader(stream)
         )
@@ -232,19 +248,34 @@ def run_unit(
     t0_str = _dt.datetime.fromtimestamp(
         t0_epoch, _dt.timezone.utc
     ).strftime("%Y-%m-%d %H:%M:%S")
-    for tier, df in build_tiers_from_sequences(
-        part, t0=t0_str, step_seconds=step_seconds
-    ).items():
-        out = df.withColumn("unit", F.lit(unit)).withColumn(
-            "bucket_date", F.to_date("bucket_ts")
-        )
-        upsert_partitioned(
-            spark,
-            f"{out_dir}/agg_{tier}",
-            out,
-            key_cols=TIER_KEYS,
-            partition_cols=["unit", "bucket_date"],
-        )
+    # the unit's 1m tier is materialized ONCE to a unit-scoped scratch
+    # parquet and every tier upsert reads it back: otherwise each upsert
+    # re-runs the unit's scan and the Arrow 1m kernel under its cascade
+    # (three kernel passes per unit). The scratch lives and dies inside
+    # this unit, so nothing is reused across units or runs.
+    work = f"{out_dir}/_work/unit={unit}"
+    try:
+        tier_1m = build_tiers_from_sequences(
+            part, t0=t0_str, step_seconds=step_seconds
+        )["1m"]
+        tier_1m.write.mode("overwrite").parquet(work)
+        # the known schema spares the footer-inference job of a bare read
+        tier_df = spark.read.schema(tier_1m.schema).parquet(work)
+        for tier in TIER_ORDER:
+            if tier != "1m":
+                tier_df = _cascade_with_rep(tier_df, tier)
+            out = tier_df.withColumn("unit", F.lit(unit)).withColumn(
+                "bucket_date", F.to_date("bucket_ts")
+            )
+            upsert_partitioned(
+                spark,
+                f"{out_dir}/agg_{tier}",
+                out,
+                key_cols=TIER_KEYS,
+                partition_cols=["unit", "bucket_date"],
+            )
+    finally:
+        _delete_unit_scratch(spark, work)
     return rows, points_n
 
 
@@ -316,13 +347,17 @@ def run_rollup(
         t0 = time.time()
         try:
             rows, pts = run_unit(spark, seq, int(u), n_units, out_dir, write_raw)
-        except Exception:
-            # record the failure for observability, then surface it; the
-            # unit stays pending (latest-wins: failed != done) so the
-            # next run retries exactly this unit
+        except Exception as exc:
+            # record the failure and its cause for observability, then
+            # surface it; the unit stays pending (latest-wins: failed !=
+            # done) so the next run retries exactly this unit
             manifest.record(
                 u, "failed", wall_ms=(time.time() - t0) * 1000.0,
-                lineage={"out_dir": out_dir, "n_units": n_units},
+                lineage={
+                    "out_dir": out_dir,
+                    "n_units": n_units,
+                    "error": f"{type(exc).__name__}: {str(exc)[:200]}",
+                },
             )
             raise
         wall_ms = (time.time() - t0) * 1000.0
