@@ -6749,7 +6749,7 @@ _BEYOND_WINDOW_VETERANS = [
     "quantile_sketch_bounds",  # r4-green; pytest tests/test_basic_ops.py
     "semi_anti_resume",      # r4-green; pytest tests/test_plans.py
     "routed_tier_1h",        # r4-green; pytest tests/test_tierquery.py
-    "ewma_events",           # r4-green; pytest tests/test_ewma.py
+    "ewma_events",           # r4-green; pytest tests/test_ewma_tfidf.py
     "gopher_flags",          # r4-green; pytest tests/test_gopher.py
     "psi_view_vs_purchase",  # r4-green; pytest tests/test_drift.py
     "codec_roundtrip",       # r4-green; pytest tests/test_codec.py
@@ -6761,7 +6761,7 @@ _BEYOND_WINDOW_VETERANS = [
     "trend_slope_1h",        # r4-green; pytest tests/test_trend.py
     "cusum_events",          # r4-green; pytest tests/test_cusum.py
     "ccf_view_purchase_1d",  # r4-green; pytest tests/test_ccf.py
-    "ewvar_events",          # r4-green; pytest tests/test_ewma.py
+    "ewvar_events",          # r4-green; pytest tests/test_ewvar.py
     "unigram_surprisal",     # r4-green; pytest tests/test_surprisal.py
     "token_psi_sources",     # r4-green; pytest tests/test_drift.py
     "mp_selfcheck",          # r4-green; pytest tests/test_matrix_profile.py
@@ -6769,7 +6769,7 @@ _BEYOND_WINDOW_VETERANS = [
     "bigram_surprisal",      # r4-green; pytest tests/test_surprisal.py
     "rolling_median_10m",    # r4-green; pytest tests/test_rolling.py
     "zipf_slope_sources",    # r4-green; pytest tests/test_zipf.py
-    "holt_winters_events",   # r4-green; pytest tests/test_holt_winters.py
+    "holt_winters_events",   # r4-green; pytest tests/test_holtwinters.py
     "series_spearman_pairs", # r4-green; pytest tests/test_seriescorr.py
     "pmi_collocations",      # r4-green; pytest tests/test_collocation.py
     "mad_anomalies_1h",      # r4-green; pytest tests/test_anomaly.py

@@ -7,7 +7,8 @@ import datetime as dt
 import numpy as np
 import pytest
 
-from tsclust_spark.operators.cusum import _cusum_lockstep, _cusum_scalar, cusum
+from tsclust_spark.kernels import recurrence
+from tsclust_spark.operators.cusum import CusumSpec, _cusum_scalar, cusum
 
 T0 = dt.datetime(2024, 8, 1)
 RNG = np.random.default_rng(59)
@@ -24,7 +25,7 @@ def test_lockstep_bit_equals_scalar(mu, k):
     for shape in ([RNG.normal(mu, 2, RNG.integers(1, 9)) for _ in range(64)],
                   [RNG.normal(mu, 2, 500), RNG.normal(mu, 2, 3)]):
         x, starts = _concat(shape)
-        hi_l, lo_l = _cusum_lockstep(x, starts, mu, k)
+        hi_l, lo_l, _ = recurrence.run(CusumSpec(mu, k, h=1.0), x, starts)
         off = 0
         for seg in shape:
             hi_s, lo_s = _cusum_scalar(seg.astype(np.float64), mu, k)
@@ -38,9 +39,10 @@ def test_lockstep_carry_bit_equals_unbroken():
     x = RNG.normal(1.0, 2, 300).astype(np.float64)
     hi_f, lo_f = _cusum_scalar(x, 1.0, 0.3)
     cut = 89
-    h1, l1 = _cusum_lockstep(x[:cut], np.array([0]), 1.0, 0.3)
-    h2, l2 = _cusum_lockstep(
-        x[cut:], np.array([0]), 1.0, 0.3, carry=(float(h1[-1]), float(l1[-1]))
+    spec = CusumSpec(1.0, 0.3, h=1.0)
+    h1, l1, _ = recurrence.run(spec, x[:cut], np.array([0]))
+    h2, l2, _ = recurrence.run(
+        spec, x[cut:], np.array([0]), carry=(float(h1[-1]), float(l1[-1]))
     )
     assert (np.concatenate([h1, h2]) == hi_f).all()
     assert (np.concatenate([l1, l2]) == lo_f).all()

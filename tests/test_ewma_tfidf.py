@@ -50,7 +50,8 @@ def test_ewma_alpha_one_is_identity(spark):
 def test_ewma_lockstep_bit_equals_scalar():
     """The cross-series lockstep kernel must be BIT-identical to the
     per-point scalar recurrence (same IEEE ops elementwise)."""
-    from tsclust_spark.operators.ewma import _ewma_lockstep, _ewma_scalar
+    from tsclust_spark.kernels import recurrence
+    from tsclust_spark.operators.ewma import EwmaSpec, _ewma_scalar
 
     rng = np.random.default_rng(7)
     for alpha in (0.3, 0.05, 1.0, 0.731):
@@ -59,7 +60,7 @@ def test_ewma_lockstep_bit_equals_scalar():
         lens[5] = 500  # one long series dominating max_len
         x = rng.normal(scale=100.0, size=int(lens.sum()))
         starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        got = _ewma_lockstep(x, starts, alpha)
+        (got,) = recurrence.run(EwmaSpec(alpha), x, starts)
         bounds = np.append(starts, x.size)
         for i in range(lens.size):
             seg = x[bounds[i] : bounds[i + 1]]
@@ -73,7 +74,8 @@ def test_ewma_adaptive_paths_bit_equal():
     """Both dispatch paths (lockstep for many-short, scalar fallback
     for few-long batches) and the carry must be bit-identical across
     the crossover."""
-    from tsclust_spark.operators.ewma import _ewma_lockstep, _ewma_scalar
+    from tsclust_spark.kernels import recurrence
+    from tsclust_spark.operators.ewma import EwmaSpec, _ewma_scalar
 
     rng = np.random.default_rng(31)
     shapes = [
@@ -86,7 +88,9 @@ def test_ewma_adaptive_paths_bit_equal():
         starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
         bounds = np.append(starts, x.size)
         for carry in (None, 1.2345):
-            got = _ewma_lockstep(x, starts, 0.3, carry=carry)
+            (got,) = recurrence.run(
+                EwmaSpec(0.3), x, starts, carry=None if carry is None else (carry,)
+            )
             for i in range(lens.size):
                 seg = x[bounds[i] : bounds[i + 1]].copy()
                 if i == 0 and carry is not None:
@@ -107,15 +111,16 @@ def test_ewma_lockstep_carry_split():
     """Splitting one series across two lockstep calls with the carry
     must reproduce the unsplit recurrence bit-exactly (the mapInPandas
     cross-batch path)."""
-    from tsclust_spark.operators.ewma import _ewma_lockstep, _ewma_scalar
+    from tsclust_spark.kernels import recurrence
+    from tsclust_spark.operators.ewma import EwmaSpec, _ewma_scalar
 
     rng = np.random.default_rng(11)
     x = rng.normal(size=97)
     full = _ewma_scalar(x, 0.3)
     for cut in (1, 2, 50, 96):
-        y1 = _ewma_lockstep(x[:cut], np.array([0]), 0.3)
-        y2 = _ewma_lockstep(
-            x[cut:], np.array([0]), 0.3, carry=float(y1[-1])
+        (y1,) = recurrence.run(EwmaSpec(0.3), x[:cut], np.array([0]))
+        (y2,) = recurrence.run(
+            EwmaSpec(0.3), x[cut:], np.array([0]), carry=(float(y1[-1]),)
         )
         assert np.array_equal(np.concatenate([y1, y2]), full)
 

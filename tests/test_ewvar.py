@@ -6,7 +6,8 @@ import datetime as dt
 import numpy as np
 import pytest
 
-from tsclust_spark.operators.ewvar import _ewvar_lockstep, _ewvar_scalar, ewvar
+from tsclust_spark.kernels import recurrence
+from tsclust_spark.operators.ewvar import EwvarSpec, _ewvar_scalar, ewvar
 
 T0 = dt.datetime(2024, 10, 1)
 RNG = np.random.default_rng(71)
@@ -23,7 +24,7 @@ def test_lockstep_bit_equals_scalar(alpha):
     for shape in ([RNG.normal(size=RNG.integers(1, 9)) for _ in range(64)],
                   [RNG.normal(size=500), RNG.normal(size=3)]):
         x, starts = _concat(shape)
-        y_l, v_l, d_l = _ewvar_lockstep(x, starts, alpha)
+        y_l, v_l, d_l, _ = recurrence.run(EwvarSpec(alpha), x, starts)
         off = 0
         for seg in shape:
             y_s, v_s, d_s = _ewvar_scalar(seg.astype(np.float64), alpha)
@@ -38,9 +39,9 @@ def test_lockstep_carry_bit_equals_unbroken():
     x = RNG.normal(size=300).astype(np.float64)
     y_f, v_f, d_f = _ewvar_scalar(x, 0.3)
     cut = 127
-    y1, v1, d1 = _ewvar_lockstep(x[:cut], np.array([0]), 0.3)
-    y2, v2, d2 = _ewvar_lockstep(
-        x[cut:], np.array([0]), 0.3, carry=(float(y1[-1]), float(v1[-1]))
+    y1, v1, d1, _ = recurrence.run(EwvarSpec(0.3), x[:cut], np.array([0]))
+    y2, v2, d2, _ = recurrence.run(
+        EwvarSpec(0.3), x[cut:], np.array([0]), carry=(float(y1[-1]), float(v1[-1]))
     )
     assert (np.concatenate([y1, y2]) == y_f).all()
     assert (np.concatenate([v1, v2]) == v_f).all()

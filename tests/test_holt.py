@@ -6,7 +6,8 @@ import datetime as dt
 import numpy as np
 import pytest
 
-from tsclust_spark.operators.holt import _holt_lockstep, _holt_scalar, holt
+from tsclust_spark.kernels import recurrence
+from tsclust_spark.operators.holt import HoltSpec, _holt_scalar, holt
 
 T0 = dt.datetime(2024, 3, 1)
 RNG = np.random.default_rng(47)
@@ -24,7 +25,7 @@ def test_lockstep_bit_equals_scalar(alpha, beta):
     for shape in ([RNG.normal(size=RNG.integers(1, 9)) for _ in range(64)],
                   [RNG.normal(size=500), RNG.normal(size=3)]):
         x, starts = _concat(shape)
-        s_l, b_l = _holt_lockstep(x, starts, alpha, beta)
+        s_l, b_l = recurrence.run(HoltSpec(alpha, beta), x, starts)
         off = 0
         for seg in shape:
             s_s, b_s = _holt_scalar(seg.astype(np.float64), alpha, beta)
@@ -38,9 +39,10 @@ def test_lockstep_carry_bit_equals_unbroken():
     x = RNG.normal(size=300).astype(np.float64)
     s_full, b_full = _holt_scalar(x, 0.3, 0.2)
     cut = 113
-    s1, b1 = _holt_lockstep(x[:cut], np.array([0]), 0.3, 0.2)
-    s2, b2 = _holt_lockstep(
-        x[cut:], np.array([0]), 0.3, 0.2, carry=(float(s1[-1]), float(b1[-1]))
+    s1, b1 = recurrence.run(HoltSpec(0.3, 0.2), x[:cut], np.array([0]))
+    s2, b2 = recurrence.run(
+        HoltSpec(0.3, 0.2), x[cut:], np.array([0]),
+        carry=(float(s1[-1]), float(b1[-1])),
     )
     assert (np.concatenate([s1, s2]) == s_full).all()
     assert (np.concatenate([b1, b2]) == b_full).all()
@@ -94,25 +96,25 @@ def test_rejects_bad_params(spark):
 
 
 def test_damping_one_is_bit_identical_to_classic():
-    from tsclust_spark.operators.holt import _holt_lockstep, _holt_scalar
+    from tsclust_spark.operators.holt import _holt_scalar
 
     x = RNG.normal(size=300).astype(np.float64)
     s0, b0 = _holt_scalar(x, 0.3, 0.2)
     s1, b1 = _holt_scalar(x, 0.3, 0.2, damping=1.0)
     assert (s0 == s1).all() and (b0 == b1).all()
     starts = np.array([0, 100, 250])
-    l0 = _holt_lockstep(x, starts, 0.3, 0.2)
-    l1 = _holt_lockstep(x, starts, 0.3, 0.2, damping=1.0)
+    l0 = recurrence.run(HoltSpec(0.3, 0.2), x, starts)
+    l1 = recurrence.run(HoltSpec(0.3, 0.2, damping=1.0), x, starts)
     assert (l0[0] == l1[0]).all() and (l0[1] == l1[1]).all()
 
 
 def test_damped_lockstep_bit_equals_scalar_and_trend_decays():
-    from tsclust_spark.operators.holt import _holt_lockstep, _holt_scalar
+    from tsclust_spark.operators.holt import _holt_scalar
 
     xs = [RNG.normal(size=int(n)) for n in RNG.integers(5, 80, 40)]
     flat = np.concatenate(xs).astype(np.float64)
     starts = np.cumsum([0] + [x.size for x in xs[:-1]])
-    lo = _holt_lockstep(flat, starts, 0.3, 0.2, damping=0.9)
+    lo = recurrence.run(HoltSpec(0.3, 0.2, damping=0.9), flat, starts)
     pos = 0
     for x in xs:
         sc = _holt_scalar(x.astype(np.float64), 0.3, 0.2, damping=0.9)

@@ -8,8 +8,9 @@ import datetime as dt
 import numpy as np
 import pytest
 
+from tsclust_spark.kernels import recurrence
 from tsclust_spark.operators.holtwinters import (
-    _hw_lockstep,
+    HoltWintersSpec,
     _hw_scalar,
     holt_winters,
 )
@@ -34,7 +35,9 @@ def test_lockstep_bit_equals_scalar(alpha, beta, gamma, m):
         [RNG.normal(size=500), RNG.normal(size=3)],
     ):
         x, starts = _concat(shape)
-        s_l, b_l, c_l = _hw_lockstep(x, starts, alpha, beta, gamma, m)
+        s_l, b_l, c_l = recurrence.run(
+            HoltWintersSpec(alpha, beta, gamma, m), x, starts
+        )
         off = 0
         for seg in shape:
             s_s, b_s, c_s = _hw_scalar(seg.astype(np.float64), alpha, beta, gamma, m)
@@ -126,7 +129,7 @@ def test_multiplicative_lockstep_bitexact_and_recovers_ratio(spark):
     """mul=True: lockstep == scalar bit-exact; a pure multiplicative
     seasonal series is tracked with ratio ~ the true profile."""
     from tsclust_spark.operators.holtwinters import (
-        _hw_lockstep,
+        HoltWintersSpec,
         _hw_scalar,
         holt_winters,
     )
@@ -138,7 +141,9 @@ def test_multiplicative_lockstep_bitexact_and_recovers_ratio(spark):
     ]
     flat = np.concatenate(xs)
     starts = np.cumsum([0] + [x.size for x in xs[:-1]])
-    lo = _hw_lockstep(flat, starts, 0.5, 0.25, 0.5, 7, mul=True)
+    lo = recurrence.run(
+        HoltWintersSpec(0.5, 0.25, 0.5, 7, multiplicative=True), flat, starts
+    )
     pos = 0
     for x in xs:
         sc = _hw_scalar(x, 0.5, 0.25, 0.5, 7, mul=True)

@@ -11,7 +11,8 @@ from tsclust_spark.operators.bpe import (
     _word_symbols,
     segment_word,
 )
-from tsclust_spark.operators.holtwinters import _hw_lockstep, _hw_scalar
+from tsclust_spark.kernels import recurrence
+from tsclust_spark.operators.holtwinters import HoltWintersSpec, _hw_scalar
 
 finite = st.floats(
     allow_nan=False, allow_infinity=False, min_value=-1e6, max_value=1e6
@@ -32,7 +33,9 @@ def test_hw_lockstep_bit_equals_scalar(shapes, alpha, beta, gamma, m, seed):
     series = [rng.normal(size=n) for n in shapes]
     x = np.concatenate(series)
     starts = np.cumsum([0] + [s.size for s in series[:-1]]).astype(np.int64)
-    s_l, b_l, c_l = _hw_lockstep(x, starts, alpha, beta, gamma, m)
+    s_l, b_l, c_l = recurrence.run(
+        HoltWintersSpec(alpha, beta, gamma, m), x, starts
+    )
     off = 0
     for seg in series:
         s_s, b_s, c_s = _hw_scalar(seg, alpha, beta, gamma, m)

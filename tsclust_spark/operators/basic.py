@@ -41,12 +41,3 @@ def parity_diff(a: DataFrame, b: DataFrame) -> DataFrame:
     only_a = a.exceptAll(b).withColumn("side", F.lit("a"))
     only_b = b.exceptAll(a).withColumn("side", F.lit("b"))
     return only_a.unionByName(only_b)
-
-
-def distinct_stats(df: DataFrame, col: str) -> DataFrame:
-    """Exact + approximate cardinality of a column (SURVEY.md C21)."""
-    return df.agg(
-        F.countDistinct(col).alias("exact_distinct"),
-        F.approx_count_distinct(col).alias("approx_distinct"),
-        F.count(F.lit(1)).alias("total_rows"),
-    )

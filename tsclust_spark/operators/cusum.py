@@ -11,14 +11,11 @@ classic complement to point-wise z-scores (operators/rolling.py,
 operators/seasonal.py): a small persistent mean shift never trips a
 z-score but integrates linearly in CUSUM.
 
-Engine shape is the EWMA/Holt template: one hash Exchange on the key,
-``sortWithinPartitions(key, ts[, tiebreak])``, one ``mapInPandas``
-pass advancing all series in lockstep (``np.maximum`` + add are exact
-IEEE ops — max involves no rounding at all — so lockstep, scalar loop
-and the DuckDB recursive-CTE twin agree bit-for-bit), with an O(1)
-``(hi, lo)`` carry across Arrow batches.  The max(0, .) floor makes
-long series even friendlier than EWMA: state cannot accumulate
-rounding drift while in control.
+:class:`CusumSpec` states the step; the shared recurrence engine
+(:mod:`tsclust_spark.kernels.recurrence`) runs it.  Each side is one
+subtract, one add and one max (max involves no rounding), so every path
+and the DuckDB recursive-CTE twin agree bit-for-bit.  The max(0, .) floor
+means state cannot accumulate rounding drift while in control.
 """
 
 from __future__ import annotations
@@ -27,7 +24,8 @@ from typing import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from tsclust_spark.kernels import recurrence
 
 
 def _cusum_scalar(
@@ -36,7 +34,8 @@ def _cusum_scalar(
     k: float,
     carry: tuple[float, float] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Reference per-point recurrence (bit-exactness oracle)."""
+    """Reference per-point recurrence (bit-exactness oracle); NaN
+    propagates, as in :class:`CusumSpec`."""
     n = x.size
     hi = np.empty(n, dtype=np.float64)
     lo = np.empty(n, dtype=np.float64)
@@ -44,79 +43,36 @@ def _cusum_scalar(
     up = mu + k
     dn = mu - k
     for i in range(n):
-        h_acc = max(0.0, h_acc + (x[i] - up))
-        l_acc = max(0.0, l_acc + (dn - x[i]))
+        h_acc = max(h_acc + (x[i] - up), 0.0)
+        l_acc = max(l_acc + (dn - x[i]), 0.0)
         hi[i] = h_acc
         lo[i] = l_acc
     return hi, lo
 
 
-def _cusum_lockstep(
-    x: np.ndarray,
-    starts: np.ndarray,
-    mu: float,
-    k: float,
-    carry: tuple[float, float] | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """CUSUM over many concatenated series in lockstep."""
-    n = x.size
-    hi = np.empty(n, dtype=np.float64)
-    lo = np.empty(n, dtype=np.float64)
-    if n == 0:
-        return hi, lo
-    x = np.ascontiguousarray(x, dtype=np.float64)
-    lens = np.diff(np.append(starts, n))
-    g = lens.size
-    bounds = np.append(starts, n)
-    max_len = int(lens.max())
+class CusumSpec:
+    """The CUSUM step for :mod:`tsclust_spark.kernels.recurrence`: state
+    ``(hi, lo)`` from 0, outputs ``(hi, lo, alarm)``."""
 
-    if n < 14 * max_len:  # same measured crossover as EWMA/Holt
-        for i in range(g):
-            seg = x[bounds[i] : bounds[i + 1]]
-            hs, ls = _cusum_scalar(seg, mu, k, carry=carry if i == 0 else None)
-            hi[bounds[i] : bounds[i + 1]] = hs
-            lo[bounds[i] : bounds[i + 1]] = ls
-        return hi, lo
+    n_state, lag = 2, 0
 
-    order = np.argsort(-lens, kind="stable")
-    lens_s = lens[order]
-    starts_s = starts[order]
+    def __init__(self, mu: float, k: float, h: float):
+        if h <= 0:
+            raise ValueError("decision interval h must be positive")
+        if k < 0:
+            raise ValueError("slack k must be non-negative")
+        self.up, self.dn, self.h = mu + k, mu - k, h
 
-    d_up = x - (mu + k)  # x - mu - k, one vectorized subtract
-    d_dn = (mu - k) - x
+    def seed(self, x0):
+        st = [np.zeros(x0.size), np.zeros(x0.size)]
+        return st, self.step(st, x0)
 
-    idx = starts_s[:, None] + np.arange(max_len)[None, :]
-    np.clip(idx, 0, n - 1, out=idx)
-    DU = np.asfortranarray(d_up[idx])
-    DL = np.asfortranarray(d_dn[idx])
-    HI = np.empty((g, max_len), dtype=np.float64, order="F")
-    LO = np.empty((g, max_len), dtype=np.float64, order="F")
-
-    h_acc = np.zeros(g, dtype=np.float64)
-    l_acc = np.zeros(g, dtype=np.float64)
-    if carry is not None:
-        cont = int(np.nonzero(order == 0)[0][0])
-        h_acc[cont], l_acc[cont] = carry
-
-    neg = -lens_s
-    for t in range(max_len):
-        c = g if t == 0 else int(np.searchsorted(neg, -t, side="left"))
-        hseg = h_acc[:c]
-        lseg = l_acc[:c]
-        hseg += DU[:c, t]
-        np.maximum(hseg, 0.0, out=hseg)
-        lseg += DL[:c, t]
-        np.maximum(lseg, 0.0, out=lseg)
-        HI[:c, t] = hseg
-        LO[:c, t] = lseg
-
-    inv = np.empty(g, dtype=np.int64)
-    inv[order] = np.arange(g)
-    group_of_row = np.repeat(np.arange(g), lens)
-    pos_in_group = np.arange(n) - np.repeat(starts, lens)
-    hi[:] = HI[inv[group_of_row], pos_in_group]
-    lo[:] = LO[inv[group_of_row], pos_in_group]
-    return hi, lo
+    def step(self, st, x):
+        st[0] += x - self.up
+        st[1] += self.dn - x
+        hi = st[0] = recurrence.max0(st[0])
+        lo = st[1] = recurrence.max0(st[1])
+        return hi, lo, (hi > self.h) | (lo > self.h)
 
 
 def cusum(
@@ -130,48 +86,16 @@ def cusum(
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Append ``cusum_hi``, ``cusum_lo`` and ``alarm`` (either side
-    > h) per key, ordered by (ts_col, tiebreak_col)."""
-    if h <= 0:
-        raise ValueError("decision interval h must be positive")
-    if k < 0:
-        raise ValueError("slack k must be non-negative")
-    from pyspark.sql.types import BooleanType, DoubleType, StructType
+    > h) per key, ordered by (ts_col, tiebreak_col).
 
-    out_cols = ("cusum_hi", "cusum_lo", "alarm")
-    cols = [f.name for f in df.schema.fields if f.name not in out_cols]
-    schema = (
-        StructType([f for f in df.schema.fields if f.name not in out_cols])
-        .add("cusum_hi", DoubleType())
-        .add("cusum_lo", DoubleType())
-        .add("alarm", BooleanType())
-    )
-    sort_cols = [key_col, ts_col] + ([tiebreak_col] if tiebreak_col else [])
+    NULL policy: a NULL or NaN value makes ``cusum_hi`` and
+    ``cusum_lo`` NULL from that row to the end of its key's series, and
+    ``alarm`` false on those rows, on every execution path (batched,
+    alone in a batch, or streamed).  Filter NULLs upstream to skip
+    them instead."""
+    spec, names = CusumSpec(mu, k, h), ("cusum_hi", "cusum_lo", "alarm")
 
     def run(batches: Iterator) -> Iterator:
-        carry_key = None
-        carry: tuple[float, float] | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf["cusum_hi"] = np.empty(0, dtype=np.float64)
-                pdf["cusum_lo"] = np.empty(0, dtype=np.float64)
-                pdf["alarm"] = np.empty(0, dtype=bool)
-                yield pdf[cols + list(out_cols)]
-                continue
-            keys = pdf[key_col].to_numpy()
-            x = pdf[value_col].to_numpy(dtype=np.float64)
-            starts = np.append(0, 1 + np.flatnonzero(keys[1:] != keys[:-1]))
-            c = carry if carry is not None and keys[0] == carry_key else None
-            hi, lo = _cusum_lockstep(x, starts, mu, k, carry=c)
-            carry_key = keys[-1]
-            carry = (float(hi[-1]), float(lo[-1]))
-            pdf = pdf.copy(deep=False)
-            pdf["cusum_hi"] = hi
-            pdf["cusum_lo"] = lo
-            pdf["alarm"] = (hi > h) | (lo > h)
-            yield pdf[cols + list(out_cols)]
+        return recurrence.run_batches(spec, batches, [key_col], value_col, names)
 
-    return (
-        df.repartition(key_col)
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(run, schema=schema)
-    )
+    return recurrence.plan(df, spec, run, names, [key_col], [ts_col, tiebreak_col])

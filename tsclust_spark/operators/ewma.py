@@ -2,17 +2,10 @@
 
 EWMA is a sequential recurrence (y_i = (1-a)*y_{i-1} + a*x_i, seeded
 y_0 = x_0), so unlike the RANGE-frame rolling stats it cannot be a SQL
-window aggregate.  The engine runs it as one hash Exchange on the key
-(``repartition(key)``) + ``sortWithinPartitions(key, ts, tiebreak)`` +
-a single ``mapInPandas`` pass whose kernel is vectorized ACROSS series
-(:func:`_ewma_lockstep`): the inherently sequential time loop advances
-all series in the batch one step per iteration with elementwise numpy
-ops, so the Python interpreter cost is paid per TIME STEP per batch,
-not per point.  At the 100-TB shape (millions of modest-length series
-per batch) that is the difference between interpreter speed and
-Arrow/numpy speed; elementwise numpy ops execute the exact same IEEE
-multiply/add per element as the scalar loop, so results are
-bit-identical (asserted in tests/test_ewma_tfidf.py).
+window aggregate.  :class:`EwmaSpec` states the step; the shared
+recurrence engine (:mod:`tsclust_spark.kernels.recurrence`) runs it,
+bit-identical to the scalar oracle :func:`_ewma_scalar` (asserted in
+tests/test_ewma_tfidf.py).
 
 Determinism: the recurrence order is the sort order.  ``tiebreak_col``
 (ADVICE r3) totalizes the order for duplicate (key, ts) rows so the
@@ -37,12 +30,14 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tsclust_spark.kernels import recurrence
+
 
 def _ewma_scalar(x: np.ndarray, alpha: float) -> np.ndarray:
     """Reference kernel: the literal per-point recurrence.
 
-    Kept as the bit-exactness oracle for :func:`_ewma_lockstep` (and
-    for the recursive-CTE SQL twin, which steps the same IEEE ops:
+    Kept as the bit-exactness oracle for :class:`EwmaSpec` (and for
+    the recursive-CTE SQL twin, which steps the same IEEE ops:
     y = beta*y_prev + alpha*x, seeded y_0 = x_0).  Not the hot path.
     """
     beta = 1.0 - alpha
@@ -56,105 +51,39 @@ def _ewma_scalar(x: np.ndarray, alpha: float) -> np.ndarray:
     return y
 
 
-def _ewma_lockstep(
-    x: np.ndarray,
-    starts: np.ndarray,
-    alpha: float,
-    carry: float | None = None,
-    zero_seed: bool = False,
-) -> np.ndarray:
-    """EWMA over many concatenated series in lockstep.
+class EwmaSpec:
+    """The EWMA step for :mod:`tsclust_spark.kernels.recurrence`: state
+    and output ``y``, seeded ``y_0 = x_0``."""
 
-    ``x`` holds the batch's series back to back (sorted rows), ``starts``
-    the start offset of each series (ascending, starts[0] == 0).  If
-    ``carry`` is not None the FIRST series continues a previous batch:
-    its first element is a recurrence step from ``carry`` instead of a
-    seed.  ``zero_seed`` seeds every (non-continuing) series with
-    ``alpha*x_0`` — a recurrence step from state 0 — instead of the
-    ``y_0 = x_0`` seed; :func:`ewma_chunked` uses this for per-chunk
-    local recurrences whose true carry is stitched in afterwards.
+    n_state, lag = 1, 0
 
-    Per time step t the active series are advanced together:
-    ``acc = beta*acc + A[:, t]`` where ``A = alpha*x`` is precomputed —
-    elementwise IEEE ops identical to the scalar loop, so the output is
-    bit-equal to running :func:`_ewma_scalar` per series.  Series are
-    packed sorted by length descending so the active vector is always a
-    prefix — no masks in the loop, and the vector width shrinks as
-    short series finish.
-    """
-    n = x.size
-    y = np.empty(n, dtype=np.float64)
-    if n == 0:
-        return y
-    x = np.ascontiguousarray(x, dtype=np.float64)
-    beta = 1.0 - alpha
-    lens = np.diff(np.append(starts, n))
-    g = lens.size
-    order = np.argsort(-lens, kind="stable")  # longest first
-    lens_s = lens[order]
-    starts_s = starts[order]
-    max_len = int(lens_s[0])
+    def __init__(self, alpha: float):
+        if not 0.0 < alpha <= 1.0:
+            raise ValueError("alpha must be in (0, 1]")
+        self.alpha, self.beta = alpha, 1.0 - alpha
 
-    # Adaptive dispatch: the lockstep loop costs ~fixed numpy overhead
-    # per TIME STEP, the scalar loop ~0.3us per POINT — lockstep wins
-    # once enough series amortize each step (measured crossover ~14
-    # points per step of max_len; 12.5x at 1000 short series/batch,
-    # 10x SLOWER at 2 long series/batch).  Both paths execute the same
-    # IEEE ops per element, so the choice is invisible in the output.
-    if n < 14 * max_len:
-        bounds = np.append(starts, n)
-        for i in range(g):
-            seg = x[bounds[i] : bounds[i + 1]]
-            if i == 0 and carry is not None:
-                acc = beta * carry + alpha * seg[0]
-            elif zero_seed:
-                acc = alpha * seg[0]
-            else:
-                acc = seg[0]
-            out = np.empty(seg.size, dtype=np.float64)
-            out[0] = acc
-            for j in range(1, seg.size):
-                acc = beta * acc + alpha * seg[j]
-                out[j] = acc
-            y[bounds[i] : bounds[i + 1]] = out
-        return y
+    def seed(self, x0):
+        return [x0], (x0,)
 
-    # alpha*x for every element, one vectorized multiply (same IEEE op
-    # as the scalar loop's alpha * x[i])
-    a_flat = alpha * x
+    def step(self, st, x):
+        st[0] *= self.beta
+        st[0] += self.alpha * x
+        return (st[0],)
 
-    # padded (g, max_len) matrices, Fortran order so the time loop's
-    # column slices are contiguous
-    idx = starts_s[:, None] + np.arange(max_len)[None, :]
-    np.clip(idx, 0, n - 1, out=idx)
-    A = np.asfortranarray(a_flat[idx])
-    Y = np.empty((g, max_len), dtype=np.float64, order="F")
 
-    # seeds: y_0 = x_0 (or alpha*x_0 when zero-seeded), except a
-    # continuing first series steps from carry
-    acc = a_flat[starts_s].copy() if zero_seed else x[starts_s].copy()
-    if carry is not None:
-        cont = int(np.nonzero(order == 0)[0][0])  # sorted position of series 0
-        acc[cont] = beta * carry + a_flat[starts[0]]
-    Y[:, 0] = acc
+class _ChunkLocal(EwmaSpec):
+    """:func:`ewma_chunked`'s local pass: the EWMA step from state 0
+    (``l_0 = alpha*x_0``) plus each row's position in its chunk."""
 
-    # number of series with len > t, for a descending lens_s prefix
-    neg = -lens_s
-    for t in range(1, max_len):
-        c = int(np.searchsorted(neg, -t, side="left"))
-        a = acc[:c]
-        a *= beta
-        a += A[:c, t]
-        Y[:c, t] = a
+    n_state = 2
 
-    # scatter back to row order: row r of series order[s] at offset p
-    # reads Y[s, p]
-    inv = np.empty(g, dtype=np.int64)
-    inv[order] = np.arange(g)
-    group_of_row = np.repeat(np.arange(g), lens)
-    pos_in_group = np.arange(n) - np.repeat(starts, lens)
-    y[:] = Y[inv[group_of_row], pos_in_group]
-    return y
+    def seed(self, x0):
+        st = [self.alpha * x0, np.zeros(x0.size, dtype=np.int64)]
+        return st, tuple(st)
+
+    def step(self, st, x):
+        st[1] += 1
+        return EwmaSpec.step(self, st, x) + (st[1],)
 
 
 def ewma(
@@ -173,51 +102,12 @@ def ewma(
     duplicate timestamps are possible — without it the recurrence order
     over ties is shuffle-arrival-dependent.
     """
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    from pyspark.sql.types import DoubleType, StructType
-
-    cols = [f.name for f in df.schema.fields if f.name != out_col]
-    schema = StructType(
-        [f for f in df.schema.fields if f.name != out_col]
-    ).add(out_col, DoubleType())
-    sort_cols = [key_col, ts_col] + (
-        [tiebreak_col] if tiebreak_col else []
-    )
+    spec, names = EwmaSpec(alpha), (out_col,)
 
     def run(batches: Iterator) -> Iterator:
-        # cross-batch carry: rows arrive sorted by (key, ts[, tiebreak])
-        # within the partition, so a series spanning batch boundaries
-        # continues from one float of state
-        carry_key = None
-        carry_acc: float | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf[out_col] = np.empty(0, dtype=np.float64)
-                yield pdf[cols + [out_col]]
-                continue
-            keys = pdf[key_col].to_numpy()
-            x = pdf[value_col].to_numpy(dtype=np.float64)
-            starts = np.append(
-                0, 1 + np.flatnonzero(keys[1:] != keys[:-1])
-            )
-            carry = (
-                carry_acc
-                if carry_acc is not None and keys[0] == carry_key
-                else None
-            )
-            y = _ewma_lockstep(x, starts, alpha, carry=carry)
-            carry_key = keys[-1]
-            carry_acc = float(y[-1])
-            pdf = pdf.copy(deep=False)
-            pdf[out_col] = y
-            yield pdf[cols + [out_col]]
+        return recurrence.run_batches(spec, batches, [key_col], value_col, names)
 
-    return (
-        df.repartition(key_col)
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(run, schema=schema)
-    )
+    return recurrence.plan(df, spec, run, names, [key_col], [ts_col, tiebreak_col])
 
 
 def ewma_chunked(
@@ -240,8 +130,8 @@ def ewma_chunked(
 
     1. **local** — rows are grouped by ``(key, floor(ts, chunk))`` and
        each chunk computes a ZERO-SEEDED local recurrence
-       ``l_i = beta*l_{i-1} + alpha*x_i`` (``l_{-1} = 0``) with the same
-       lockstep kernel as :func:`ewma` — chunks of one hot key now run
+       ``l_i = beta*l_{i-1} + alpha*x_i`` (``l_{-1} = 0``) on the same
+       recurrence engine as :func:`ewma` — chunks of one hot key now run
        in parallel across tasks;
     2. **carry** — one summary row per chunk ``(l_last, beta^len,
        x_first)`` is folded sequentially per key:
@@ -264,7 +154,7 @@ def ewma_chunked(
     """
     if not 0.0 < alpha < 1.0:
         raise ValueError("alpha must be in (0, 1) for the chunked variant")
-    from pyspark.sql.types import DoubleType, LongType, StructType
+    from pyspark.sql.types import DoubleType, StructType
 
     trunc = {"1m": "minute", "1h": "hour", "1d": "day"}[chunk]
     beta = 1.0 - alpha
@@ -273,53 +163,15 @@ def ewma_chunked(
     cols = [f.name for f in df.schema.fields if f.name != out_col]
 
     base = df.withColumn(chunk_col, F.date_trunc(trunc, F.col(ts_col)))
-    a_schema = (
-        StructType([f for f in base.schema.fields if f.name != out_col])
-        .add(local_col, DoubleType())
-        .add(pos_col, LongType())
-    )
-    sort_cols = [key_col, chunk_col, ts_col] + (
-        [tiebreak_col] if tiebreak_col else []
-    )
+    spec, names = _ChunkLocal(alpha), (local_col, pos_col)
 
     def run_local(batches: Iterator) -> Iterator:
-        # zero-seeded recurrence per (key, chunk) segment; carry/pos
-        # continue a segment split across Arrow batches
-        prev = None  # (key, chunk_ts, acc, next_pos)
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf[local_col] = np.empty(0, dtype=np.float64)
-                pdf[pos_col] = np.empty(0, dtype=np.int64)
-                yield pdf[cols + [chunk_col, local_col, pos_col]]
-                continue
-            keys = pdf[key_col].to_numpy()
-            chunks = pdf[chunk_col].to_numpy()
-            x = pdf[value_col].to_numpy(dtype=np.float64)
-            brk = (keys[1:] != keys[:-1]) | (chunks[1:] != chunks[:-1])
-            starts = np.append(0, 1 + np.flatnonzero(brk))
-            carry = (
-                prev[2]
-                if prev is not None
-                and keys[0] == prev[0]
-                and chunks[0] == prev[1]
-                else None
-            )
-            y = _ewma_lockstep(x, starts, alpha, carry=carry, zero_seed=True)
-            lens = np.diff(np.append(starts, x.size))
-            pos = np.arange(x.size) - np.repeat(starts, lens)
-            if carry is not None:
-                first_len = int(lens[0])
-                pos[:first_len] += prev[3]
-            prev = (keys[-1], chunks[-1], float(y[-1]), int(pos[-1]) + 1)
-            pdf = pdf.copy(deep=False)
-            pdf[local_col] = y
-            pdf[pos_col] = pos
-            yield pdf[cols + [chunk_col, local_col, pos_col]]
+        return recurrence.run_batches(
+            spec, batches, [key_col, chunk_col], value_col, names
+        )
 
-    local = (
-        base.repartition(key_col, chunk_col)
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(run_local, schema=a_schema)
+    local = recurrence.plan(
+        base, spec, run_local, names, [key_col, chunk_col], [ts_col, tiebreak_col]
     )
 
     # one summary row per (key, chunk): l_last at the max pos, x_first

@@ -14,12 +14,11 @@ sqrt: one fewer op to keep bit-identical across engines). Flagging
 against the PRIOR state matters: the anomaly must not widen the very
 band that judges it before it is judged.
 
-Engine shape is the EWMA/Holt/CUSUM template: one hash Exchange on the
-key, in-partition sort with tiebreak, a single ``mapInPandas``
-advancing all series in lockstep, O(1) ``(y, v)`` carry across Arrow
-batches; elementwise numpy executes the same IEEE op order as the
-scalar loop and as the DuckDB recursive-CTE twin, so the driver gate
-compares bit-identical recurrences.
+:class:`EwvarSpec` states the step; the shared recurrence engine
+(:mod:`tsclust_spark.kernels.recurrence`) runs it in the same IEEE op
+order as the scalar reference :func:`_ewvar_scalar` and the DuckDB
+recursive-CTE twin, so the oracle gate compares bit-identical
+recurrences.
 """
 
 from __future__ import annotations
@@ -28,7 +27,8 @@ from typing import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from tsclust_spark.kernels import recurrence
 
 
 def _ewvar_scalar(
@@ -65,86 +65,36 @@ def _ewvar_scalar(
     return y, v, d2
 
 
-def _ewvar_lockstep(
-    x: np.ndarray,
-    starts: np.ndarray,
-    alpha: float,
-    carry: tuple[float, float] | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """EW mean/variance over many concatenated series in lockstep."""
-    n = x.size
-    y = np.empty(n, dtype=np.float64)
-    v = np.empty(n, dtype=np.float64)
-    d2 = np.empty(n, dtype=np.float64)
-    if n == 0:
-        return y, v, d2
-    x = np.ascontiguousarray(x, dtype=np.float64)
-    beta = 1.0 - alpha
-    lens = np.diff(np.append(starts, n))
-    g = lens.size
-    bounds = np.append(starts, n)
-    max_len = int(lens.max())
+class EwvarSpec:
+    """The EW mean/variance step for
+    :mod:`tsclust_spark.kernels.recurrence`: state ``(y, v)`` seeded
+    ``(x_0, 0)``; outputs ``(y, v, d2, band_flag)`` with ``d2`` the
+    squared innovation vs the prior state (0 on a seed)."""
 
-    if n < 14 * max_len:  # same measured crossover as the siblings
-        for i in range(g):
-            seg = x[bounds[i] : bounds[i + 1]]
-            ys, vs, ds = _ewvar_scalar(seg, alpha, carry=carry if i == 0 else None)
-            y[bounds[i] : bounds[i + 1]] = ys
-            v[bounds[i] : bounds[i + 1]] = vs
-            d2[bounds[i] : bounds[i + 1]] = ds
-        return y, v, d2
+    n_state, lag = 2, 0
 
-    order = np.argsort(-lens, kind="stable")
-    lens_s = lens[order]
-    starts_s = starts[order]
+    def __init__(self, alpha: float, k: float = 3.0):
+        if not 0.0 < alpha <= 1.0:
+            raise ValueError("alpha must be in (0, 1]")
+        if k <= 0:
+            raise ValueError("band width k must be positive")
+        self.alpha, self.beta, self.k2 = alpha, 1.0 - alpha, k * k
 
-    idx = starts_s[:, None] + np.arange(max_len)[None, :]
-    np.clip(idx, 0, n - 1, out=idx)
-    X = np.asfortranarray(x[idx])
-    Y = np.empty((g, max_len), dtype=np.float64, order="F")
-    V = np.empty((g, max_len), dtype=np.float64, order="F")
-    D2 = np.empty((g, max_len), dtype=np.float64, order="F")
+    def seed(self, x0):
+        st = [x0, np.zeros(x0.size)]
+        return st, (x0, st[1], np.zeros(x0.size), np.zeros(x0.size, dtype=bool))
 
-    y_acc = x[starts_s].copy()
-    v_acc = np.zeros(g, dtype=np.float64)
-    d2_0 = np.zeros(g, dtype=np.float64)
-    if carry is not None:
-        cont = int(np.nonzero(order == 0)[0][0])
-        cy, cv = carry
-        x0 = x[starts[0]]
-        d = x0 - cy
-        d2_0[cont] = d * d
-        y_acc[cont] = beta * cy + alpha * x0
-        v_acc[cont] = beta * (cv + alpha * (d * d))
-    Y[:, 0] = y_acc
-    V[:, 0] = v_acc
-    D2[:, 0] = d2_0
-
-    neg = -lens_s
-    for t in range(1, max_len):
-        c = int(np.searchsorted(neg, -t, side="left"))
-        xt = X[:c, t]
-        d = xt - y_acc[:c]
+    def step(self, st, x):
+        y, v = st
+        d = x - y
         dd = d * d
-        D2[:c, t] = dd
-        # y = beta*y + alpha*x, same op order as the scalar loop
-        ya = y_acc[:c]
-        ya *= beta
-        ya += alpha * xt
-        Y[:c, t] = ya
-        va = v_acc[:c]
-        va += alpha * dd
-        va *= beta
-        V[:c, t] = va
-
-    inv = np.empty(g, dtype=np.int64)
-    inv[order] = np.arange(g)
-    group_of_row = np.repeat(np.arange(g), lens)
-    pos_in_group = np.arange(n) - np.repeat(starts, lens)
-    y[:] = Y[inv[group_of_row], pos_in_group]
-    v[:] = V[inv[group_of_row], pos_in_group]
-    d2[:] = D2[inv[group_of_row], pos_in_group]
-    return y, v, d2
+        flag = dd > self.k2 * v  # judged against the PRIOR band
+        y *= self.beta
+        y += self.alpha * x
+        v += self.alpha * dd
+        v *= self.beta
+        st[:] = y, v
+        return y, v, dd, flag
 
 
 def ewvar(
@@ -159,55 +109,10 @@ def ewvar(
     """Append ``ewma_value``, ``ewvar_value`` and ``band_flag``
     (squared innovation vs PRIOR state > k^2 * prior variance) per key,
     ordered by (ts_col, tiebreak_col)."""
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    if k <= 0:
-        raise ValueError("band width k must be positive")
-    from pyspark.sql.types import BooleanType, DoubleType, StructType
-
-    out_cols = ("ewma_value", "ewvar_value", "band_flag")
-    cols = [f.name for f in df.schema.fields if f.name not in out_cols]
-    schema = (
-        StructType([f for f in df.schema.fields if f.name not in out_cols])
-        .add("ewma_value", DoubleType())
-        .add("ewvar_value", DoubleType())
-        .add("band_flag", BooleanType())
-    )
-    sort_cols = [key_col, ts_col] + ([tiebreak_col] if tiebreak_col else [])
-    k2 = k * k
+    spec = EwvarSpec(alpha, k)
+    names = ("ewma_value", "ewvar_value", None, "band_flag")
 
     def run(batches: Iterator) -> Iterator:
-        carry_key = None
-        carry: tuple[float, float] | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf["ewma_value"] = np.empty(0, dtype=np.float64)
-                pdf["ewvar_value"] = np.empty(0, dtype=np.float64)
-                pdf["band_flag"] = np.empty(0, dtype=bool)
-                yield pdf[cols + list(out_cols)]
-                continue
-            keys = pdf[key_col].to_numpy()
-            x = pdf[value_col].to_numpy(dtype=np.float64)
-            starts = np.append(0, 1 + np.flatnonzero(keys[1:] != keys[:-1]))
-            c = carry if carry is not None and keys[0] == carry_key else None
-            y, v, d2 = _ewvar_lockstep(x, starts, alpha, carry=c)
-            # prior variance per row: carry (or 0) at series starts,
-            # previous row's v inside a series
-            v_prior = np.empty_like(v)
-            v_prior[1:] = v[:-1]
-            v_prior[starts] = 0.0
-            if c is not None:
-                v_prior[0] = c[1]
-            carry_key = keys[-1]
-            carry = (float(y[-1]), float(v[-1]))
-            pdf = pdf.copy(deep=False)
-            pdf["ewma_value"] = y
-            pdf["ewvar_value"] = v
-            pdf["band_flag"] = d2 > k2 * v_prior
-            yield pdf[cols + list(out_cols)]
+        return recurrence.run_batches(spec, batches, [key_col], value_col, names)
 
-    return (
-        df.repartition(key_col)
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(run, schema=schema)
-    )
+    return recurrence.plan(df, spec, run, names, [key_col], [ts_col, tiebreak_col])

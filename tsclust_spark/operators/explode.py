@@ -64,8 +64,3 @@ def renest_points(
         )
         .withColumn("n_tok", F.size("tokens").cast("int"))
     )
-
-
-def validate_sequences(seq_df: DataFrame) -> DataFrame:
-    """Rows violating the ``n_tok == size(tokens)`` invariant (BASELINE.json:15)."""
-    return seq_df.filter(F.col("n_tok") != F.size("tokens"))

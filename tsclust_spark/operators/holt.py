@@ -8,18 +8,12 @@ sequential recurrence
 
 seeded ``s_0 = x_0, b_0 = 0`` — the smoothing primitive behind
 Prometheus' ``double_exponential_smoothing`` and classical Holt
-forecasting (forecast at horizon h = s + h*b).  Like EWMA it cannot be
-a SQL window aggregate, so the engine shape is identical: ONE hash
-Exchange on the key, ``sortWithinPartitions(key, ts[, tiebreak])``,
-and a single ``mapInPandas`` pass vectorized ACROSS series — the
-sequential time loop advances every active series one step per
-iteration with elementwise numpy ops (interpreter cost per TIME STEP
-per batch, not per point), with the same adaptive scalar fallback for
-few-long-series batches and an O(1) ``(key, s, b)`` carry across Arrow
-batches.
+forecasting (forecast at horizon h = s + h*b).  :class:`HoltSpec`
+states the step; the shared recurrence engine
+(:mod:`tsclust_spark.kernels.recurrence`) runs it.
 
-Bit-exactness: the lockstep elementwise ops execute the same IEEE
-multiply/add order as the scalar reference loop and as the DuckDB
+Bit-exactness: the step executes the same IEEE multiply/add order as
+the scalar reference :func:`_holt_scalar` and as the DuckDB
 recursive-CTE oracle twin (s' = alpha*x + phi*(s+b);
 b' = beta*(s'-s) + gamma*b), asserted in tests/test_holt.py.
 
@@ -33,7 +27,8 @@ from typing import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from tsclust_spark.kernels import recurrence
 
 
 def _holt_scalar(
@@ -45,8 +40,7 @@ def _holt_scalar(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Reference kernel: the literal per-point two-state recurrence.
 
-    Bit-exactness oracle for :func:`_holt_lockstep`; also the adaptive
-    fallback for batches of few long series.  ``damping`` < 1 runs
+    Bit-exactness oracle for :class:`HoltSpec`.  ``damping`` < 1 runs
     Gardner-McKenzie damped-trend Holt (s' = alpha*x +
     (1-alpha)*(s + d*b); b' = beta*(s'-s) + (1-beta)*d*b); at the
     default 1.0 the extra multiplies are IEEE identities, so classic
@@ -75,91 +69,34 @@ def _holt_scalar(
     return s_out, b_out
 
 
-def _holt_lockstep(
-    x: np.ndarray,
-    starts: np.ndarray,
-    alpha: float,
-    beta: float,
-    carry: tuple[float, float] | None = None,
-    damping: float = 1.0,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Holt over many concatenated series in lockstep (see module doc).
+class HoltSpec:
+    """The (damped) Holt step for
+    :mod:`tsclust_spark.kernels.recurrence`: state and outputs
+    ``(s, b)``, seeded ``s_0 = x_0, b_0 = 0``."""
 
-    ``carry`` (s, b) continues the FIRST series from a previous batch.
-    Packing and the shrinking-active-prefix loop mirror
-    :func:`operators.ewma._ewma_lockstep`.
-    """
-    n = x.size
-    s_y = np.empty(n, dtype=np.float64)
-    b_y = np.empty(n, dtype=np.float64)
-    if n == 0:
-        return s_y, b_y
-    x = np.ascontiguousarray(x, dtype=np.float64)
-    phi = 1.0 - alpha
-    gd = (1.0 - beta) * damping
-    d = damping
-    lens = np.diff(np.append(starts, n))
-    g = lens.size
-    bounds = np.append(starts, n)
+    n_state, lag = 2, 0
 
-    # adaptive dispatch — same measured ~14 points/step crossover as
-    # the EWMA kernel (two state vectors double the per-step numpy
-    # work AND the per-point scalar work, so the ratio carries over)
-    max_len = int(lens.max())
-    if n < 14 * max_len:
-        for i in range(g):
-            seg = x[bounds[i] : bounds[i + 1]]
-            so, bo = _holt_scalar(
-                seg, alpha, beta, carry=carry if i == 0 else None,
-                damping=damping,
-            )
-            s_y[bounds[i] : bounds[i + 1]] = so
-            b_y[bounds[i] : bounds[i + 1]] = bo
-        return s_y, b_y
+    def __init__(self, alpha: float, beta: float, damping: float = 1.0):
+        if not 0.0 < alpha <= 1.0:
+            raise ValueError("alpha must be in (0, 1]")
+        if not 0.0 <= beta <= 1.0:
+            raise ValueError("beta must be in [0, 1]")
+        if not 0.0 < damping <= 1.0:
+            raise ValueError("damping must be in (0, 1]")
+        self.alpha, self.beta, self.d = alpha, beta, damping
+        self.phi, self.gd = 1.0 - alpha, (1.0 - beta) * damping
 
-    order = np.argsort(-lens, kind="stable")  # longest first
-    lens_s = lens[order]
-    starts_s = starts[order]
+    def seed(self, x0):
+        st = [x0, np.zeros(x0.size)]
+        return st, tuple(st)
 
-    a_flat = alpha * x  # one vectorized multiply, same IEEE op as scalar
-
-    idx = starts_s[:, None] + np.arange(max_len)[None, :]
-    np.clip(idx, 0, n - 1, out=idx)
-    A = np.asfortranarray(a_flat[idx])
-    S = np.empty((g, max_len), dtype=np.float64, order="F")
-    B = np.empty((g, max_len), dtype=np.float64, order="F")
-
-    s_acc = x[starts_s].copy()
-    b_acc = np.zeros(g, dtype=np.float64)
-    if carry is not None:
-        cont = int(np.nonzero(order == 0)[0][0])
-        cs, cb = carry
-        s0 = alpha * x[starts[0]] + phi * (cs + d * cb)
-        b_acc[cont] = beta * (s0 - cs) + gd * cb
-        s_acc[cont] = s0
-    S[:, 0] = s_acc
-    B[:, 0] = b_acc
-
-    neg = -lens_s
-    for t in range(1, max_len):
-        c = int(np.searchsorted(neg, -t, side="left"))
-        s_prev = s_acc[:c]
-        b = b_acc[:c]
-        # s' = alpha*x + phi*(s + d*b) — A holds alpha*x precomputed
-        s_new = A[:c, t] + phi * (s_prev + d * b)
-        b *= gd
-        b += beta * (s_new - s_prev)
-        s_acc[:c] = s_new
-        S[:c, t] = s_new
-        B[:c, t] = b
-
-    inv = np.empty(g, dtype=np.int64)
-    inv[order] = np.arange(g)
-    group_of_row = np.repeat(np.arange(g), lens)
-    pos_in_group = np.arange(n) - np.repeat(starts, lens)
-    s_y[:] = S[inv[group_of_row], pos_in_group]
-    b_y[:] = B[inv[group_of_row], pos_in_group]
-    return s_y, b_y
+    def step(self, st, x):
+        s, b = st
+        s_new = self.alpha * x + self.phi * (s + self.d * b)
+        b *= self.gd
+        b += self.beta * (s_new - s)
+        st[:] = s_new, b
+        return s_new, b
 
 
 def holt(
@@ -180,47 +117,9 @@ def holt(
     bit-unchanged); damped forecasts flatten toward
     s + b*(d + d^2 + ...) instead of extrapolating linearly forever —
     the default in most production forecast stacks."""
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    if not 0.0 <= beta <= 1.0:
-        raise ValueError("beta must be in [0, 1]")
-    if not 0.0 < damping <= 1.0:
-        raise ValueError("damping must be in (0, 1]")
-    from pyspark.sql.types import DoubleType, StructType
-
-    cols = [f.name for f in df.schema.fields if f.name not in (level_col, trend_col)]
-    schema = (
-        StructType([f for f in df.schema.fields if f.name not in (level_col, trend_col)])
-        .add(level_col, DoubleType())
-        .add(trend_col, DoubleType())
-    )
-    sort_cols = [key_col, ts_col] + ([tiebreak_col] if tiebreak_col else [])
+    spec, names = HoltSpec(alpha, beta, damping), (level_col, trend_col)
 
     def run(batches: Iterator) -> Iterator:
-        carry_key = None
-        carry: tuple[float, float] | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf[level_col] = np.empty(0, dtype=np.float64)
-                pdf[trend_col] = np.empty(0, dtype=np.float64)
-                yield pdf[cols + [level_col, trend_col]]
-                continue
-            keys = pdf[key_col].to_numpy()
-            x = pdf[value_col].to_numpy(dtype=np.float64)
-            starts = np.append(0, 1 + np.flatnonzero(keys[1:] != keys[:-1]))
-            c = carry if carry is not None and keys[0] == carry_key else None
-            s_y, b_y = _holt_lockstep(
-                x, starts, alpha, beta, carry=c, damping=damping
-            )
-            carry_key = keys[-1]
-            carry = (float(s_y[-1]), float(b_y[-1]))
-            pdf = pdf.copy(deep=False)
-            pdf[level_col] = s_y
-            pdf[trend_col] = b_y
-            yield pdf[cols + [level_col, trend_col]]
+        return recurrence.run_batches(spec, batches, [key_col], value_col, names)
 
-    return (
-        df.repartition(key_col)
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(run, schema=schema)
-    )
+    return recurrence.plan(df, spec, run, names, [key_col], [ts_col, tiebreak_col])

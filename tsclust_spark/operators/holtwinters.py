@@ -17,15 +17,11 @@ pure function of the ordered value sequence: no lookahead seeding pass,
 so the DuckDB recursive-CTE oracle can step the identical IEEE ops,
 carrying the last ``m`` seasonals as a list column (FIFO ring).
 
-Engine shape is the Holt/EWMA template: ONE hash Exchange on the key,
-``sortWithinPartitions(key, ts[, tiebreak])``, a single ``mapInPandas``
-pass vectorized ACROSS series (the time loop advances all active series
-one step per iteration; the seasonal lookback is a column read ``m``
-steps back in the lockstep matrix).  Cross-batch carry holds
-``(s, b, ring of last m seasonals)`` per in-flight key; a carried first
-series runs the scalar reference kernel (exact same op order) because
-threading a partial ring into the lockstep matrix buys nothing — the
-carry path is one series per batch boundary, O(series length).
+:class:`HoltWintersSpec` states the step and declares the seasonal lag
+``m``; the shared recurrence engine
+(:mod:`tsclust_spark.kernels.recurrence`) runs it, serving ``c_{t-m}``
+from its output matrix in lockstep and from the carried ring of the
+last ``m`` seasonals point by point and across batches.
 """
 
 from __future__ import annotations
@@ -35,6 +31,8 @@ from typing import Iterator
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from tsclust_spark.kernels import recurrence
 
 
 def _hw_scalar(
@@ -93,97 +91,45 @@ def _hw_scalar(
     return s_out, b_out, c_out
 
 
-def _hw_lockstep(
-    x: np.ndarray,
-    starts: np.ndarray,
-    alpha: float,
-    beta: float,
-    gamma: float,
-    m: int,
-    mul: bool = False,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Holt-Winters over many concatenated series in lockstep.
+class HoltWintersSpec:
+    """The Holt-Winters step for
+    :mod:`tsclust_spark.kernels.recurrence`: state ``(s, b)``, outputs
+    ``(s, b, c)``; the seasonal from ``period`` rows back comes in as
+    the lagged output (``neutral`` until then: 0.0 additive, 1.0
+    multiplicative).  Multiplicative division uses ``np.divide`` so a
+    zero divisor gives inf/NaN on every path, never an exception."""
 
-    Same packing / shrinking-active-prefix scheme as the Holt kernel;
-    the seasonal lookback reads column ``t - m`` of the seasonal
-    matrix (or the neutral vector while ``t < m`` — zeros additive,
-    ones multiplicative).  Elementwise op order is identical to
-    :func:`_hw_scalar` (asserted bit-exact in tests).
-    """
-    n = x.size
-    s_y = np.empty(n, dtype=np.float64)
-    b_y = np.empty(n, dtype=np.float64)
-    c_y = np.empty(n, dtype=np.float64)
-    if n == 0:
-        return s_y, b_y, c_y
-    x = np.ascontiguousarray(x, dtype=np.float64)
-    phi = 1.0 - alpha
-    psi = 1.0 - beta
-    delta = 1.0 - gamma
-    neutral = 1.0 if mul else 0.0
-    lens = np.diff(np.append(starts, n))
-    g = lens.size
-    bounds = np.append(starts, n)
+    n_state = 2
 
-    # adaptive dispatch: three state vectors scale both paths' per-step
-    # cost equally, so the EWMA/Holt ~14 points-per-max-len crossover
-    # carries over
-    max_len = int(lens.max())
-    if n < 14 * max_len:
-        for i in range(g):
-            seg = x[bounds[i] : bounds[i + 1]]
-            so, bo, co = _hw_scalar(seg, alpha, beta, gamma, m, mul=mul)
-            s_y[bounds[i] : bounds[i + 1]] = so
-            b_y[bounds[i] : bounds[i + 1]] = bo
-            c_y[bounds[i] : bounds[i + 1]] = co
-        return s_y, b_y, c_y
+    def __init__(self, alpha: float, beta: float, gamma: float, period: int,
+                 multiplicative: bool = False):
+        if not 0.0 < alpha <= 1.0:
+            raise ValueError("alpha must be in (0, 1]")
+        if not 0.0 <= beta <= 1.0:
+            raise ValueError("beta must be in [0, 1]")
+        if not 0.0 <= gamma <= 1.0:
+            raise ValueError("gamma must be in [0, 1]")
+        if period < 2:
+            raise ValueError("period must be >= 2 points")
+        self.alpha, self.beta, self.gamma = alpha, beta, gamma
+        self.phi, self.psi, self.delta = 1.0 - alpha, 1.0 - beta, 1.0 - gamma
+        self.lag, self.mul = period, multiplicative
+        self.neutral = 1.0 if multiplicative else 0.0
 
-    order = np.argsort(-lens, kind="stable")  # longest first
-    lens_s = lens[order]
-    starts_s = starts[order]
+    def seed(self, x0):
+        st = [x0, np.zeros(x0.size)]
+        return st, (x0, st[1], np.full(x0.size, self.neutral))
 
-    idx = starts_s[:, None] + np.arange(max_len)[None, :]
-    np.clip(idx, 0, n - 1, out=idx)
-    X = np.asfortranarray(x[idx])
-    S = np.empty((g, max_len), dtype=np.float64, order="F")
-    B = np.empty((g, max_len), dtype=np.float64, order="F")
-    C = np.empty((g, max_len), dtype=np.float64, order="F")
-
-    s_acc = x[starts_s].copy()
-    b_acc = np.zeros(g, dtype=np.float64)
-    S[:, 0] = s_acc
-    B[:, 0] = 0.0
-    C[:, 0] = neutral
-
-    neg = -lens_s
-    neutrals = np.full(g, neutral, dtype=np.float64)
-    for t in range(1, max_len):
-        c = int(np.searchsorted(neg, -t, side="left"))
-        c_prev = C[:c, t - m] if t >= m else neutrals[:c]
-        s_prev = s_acc[:c]
-        b_prev = b_acc[:c].copy()
-        if mul:
-            s_new = alpha * (X[:c, t] / c_prev) + phi * (s_prev + b_prev)
-            b_new = beta * (s_new - s_prev) + psi * b_prev
-            c_new = gamma * (X[:c, t] / (s_prev + b_prev)) + delta * c_prev
+    def step(self, st, x, c_prev):
+        s, b = st
+        if self.mul:
+            s_new = self.alpha * np.divide(x, c_prev) + self.phi * (s + b)
+            c = self.gamma * np.divide(x, s + b) + self.delta * c_prev
         else:
-            s_new = alpha * (X[:c, t] - c_prev) + phi * (s_prev + b_prev)
-            b_new = beta * (s_new - s_prev) + psi * b_prev
-            c_new = gamma * (X[:c, t] - s_prev - b_prev) + delta * c_prev
-        s_acc[:c] = s_new
-        b_acc[:c] = b_new
-        S[:c, t] = s_new
-        B[:c, t] = b_new
-        C[:c, t] = c_new
-
-    inv = np.empty(g, dtype=np.int64)
-    inv[order] = np.arange(g)
-    group_of_row = np.repeat(np.arange(g), lens)
-    pos_in_group = np.arange(n) - np.repeat(starts, lens)
-    s_y[:] = S[inv[group_of_row], pos_in_group]
-    b_y[:] = B[inv[group_of_row], pos_in_group]
-    c_y[:] = C[inv[group_of_row], pos_in_group]
-    return s_y, b_y, c_y
+            s_new = self.alpha * (x - c_prev) + self.phi * (s + b)
+            c = self.gamma * (x - s - b) + self.delta * c_prev
+        st[:] = s_new, self.beta * (s_new - s) + self.psi * b
+        return s_new, st[1], c
 
 
 def holt_winters(
@@ -210,75 +156,13 @@ def holt_winters(
     series: filter ``value > 0`` upstream, as the driver gate does —
     a zero/negative level makes the ratio recurrence blow up, which
     is the textbook constraint, not an engine one."""
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    if not 0.0 <= beta <= 1.0:
-        raise ValueError("beta must be in [0, 1]")
-    if not 0.0 <= gamma <= 1.0:
-        raise ValueError("gamma must be in [0, 1]")
-    if period < 2:
-        raise ValueError("period must be >= 2 points")
-    from pyspark.sql.types import DoubleType, StructType
-
-    new_cols = (level_col, trend_col, seasonal_col)
-    cols = [f.name for f in df.schema.fields if f.name not in new_cols]
-    schema = StructType([f for f in df.schema.fields if f.name not in new_cols])
-    for name in new_cols:
-        schema = schema.add(name, DoubleType())
-    sort_cols = [key_col, ts_col] + ([tiebreak_col] if tiebreak_col else [])
+    spec = HoltWintersSpec(alpha, beta, gamma, period, multiplicative)
+    names = (level_col, trend_col, seasonal_col)
 
     def run(batches: Iterator) -> Iterator:
-        carry_key = None
-        carry: tuple[float, float, list] | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                for name in new_cols:
-                    pdf[name] = np.empty(0, dtype=np.float64)
-                yield pdf[cols + list(new_cols)]
-                continue
-            keys = pdf[key_col].to_numpy()
-            x = pdf[value_col].to_numpy(dtype=np.float64)
-            starts = np.append(0, 1 + np.flatnonzero(keys[1:] != keys[:-1]))
-            s_y = np.empty(x.size, dtype=np.float64)
-            b_y = np.empty(x.size, dtype=np.float64)
-            c_y = np.empty(x.size, dtype=np.float64)
-            lo = 0
-            if carry is not None and keys[0] == carry_key:
-                # continued series: scalar kernel with the carried ring
-                end = int(starts[1]) if starts.size > 1 else x.size
-                so, bo, co = _hw_scalar(
-                    x[:end], alpha, beta, gamma, period, carry=carry,
-                    mul=multiplicative,
-                )
-                s_y[:end], b_y[:end], c_y[:end] = so, bo, co
-                lo = end
-                starts = starts[1:]
-            if lo < x.size:
-                so, bo, co = _hw_lockstep(
-                    x[lo:], starts - lo, alpha, beta, gamma, period,
-                    mul=multiplicative,
-                )
-                s_y[lo:], b_y[lo:], c_y[lo:] = so, bo, co
-            # carry for the (possibly continued) last series
-            last_start = int(starts[-1]) if starts.size else 0
-            tail = c_y[max(last_start, x.size - period) : x.size]
-            if carry is not None and keys[-1] == carry_key and starts.size == 0:
-                ring = (list(carry[2]) + list(tail))[-period:]
-            else:
-                ring = list(tail)[-period:]
-            carry_key = keys[-1]
-            carry = (float(s_y[-1]), float(b_y[-1]), ring)
-            pdf = pdf.copy(deep=False)
-            pdf[level_col] = s_y
-            pdf[trend_col] = b_y
-            pdf[seasonal_col] = c_y
-            yield pdf[cols + list(new_cols)]
+        return recurrence.run_batches(spec, batches, [key_col], value_col, names)
 
-    return (
-        df.repartition(key_col)
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(run, schema=schema)
-    )
+    return recurrence.plan(df, spec, run, names, [key_col], [ts_col, tiebreak_col])
 
 
 def hw_forecast(

@@ -8,25 +8,25 @@ last seen timestamp — kept across micro-batches by
 history. CUSUM is the natural streaming detector: the alarm is
 actionable at arrival time, not at the next batch rollup.
 
-Ordering / late policy is the ewma_stream contract: rows sort by
+Ordering / late policy is the recurrence engine's stream contract
+(:func:`tsclust_spark.kernels.recurrence.stream`): rows sort by
 (ts[, tiebreak]) within a micro-batch; a point older than the state's
 last ts is flagged ``late=true`` and folded as-if-current (state
-already emitted cannot be rewritten).
+already emitted cannot be rewritten).  NULL values follow the batch
+operator's policy: NULL outputs from that row on.
 
-Batch equivalence (bit-identical — max(0, .) and add are the same
-IEEE ops the batch kernel runs) is asserted in
-tests/test_cusum_stream.py across micro-batch boundaries.
+Batch equivalence (bit-identical — both run :class:`CusumSpec` on the
+same engine) is asserted in tests/test_cusum_stream.py across
+micro-batch boundaries.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from tsclust_spark.kernels import recurrence
+from tsclust_spark.operators.cusum import CusumSpec
 
 STATE_SCHEMA = T.StructType(
     [
@@ -49,52 +49,6 @@ OUT_SCHEMA = T.StructType(
 )
 
 
-def _make_step(mu: float, k: float, h: float, tiebreak_col: str | None = None):
-    up = mu + k
-    dn = mu - k
-
-    def step(
-        key: Tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            hi, lo, last_ts = state.get
-        else:
-            hi, lo, last_ts = 0.0, 0.0, float("-inf")
-        for pdf in pdfs:
-            sort_cols = ["ts"] + (
-                [tiebreak_col] if tiebreak_col and tiebreak_col in pdf else []
-            )
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            out_hi, out_lo, out_alarm, out_late = [], [], [], []
-            for ts, x in zip(
-                pdf["ts"].astype("int64") / 1e9, pdf["value"].astype(float)
-            ):
-                late = ts < last_ts
-                hi = max(0.0, hi + (x - up))
-                lo = max(0.0, lo + (dn - x))
-                if not late:
-                    last_ts = ts
-                out_hi.append(hi)
-                out_lo.append(lo)
-                out_alarm.append(hi > h or lo > h)
-                out_late.append(late)
-            pdf = pdf.assign(
-                user_id=key[0],
-                cusum_hi=out_hi,
-                cusum_lo=out_lo,
-                alarm=out_alarm,
-                late=out_late,
-            )
-            yield pdf[
-                ["user_id", "ts", "value", "cusum_hi", "cusum_lo", "alarm", "late"]
-            ]
-        state.update((hi, lo, last_ts))
-
-    return step
-
-
 def cusum_stream(
     points: DataFrame,
     mu: float,
@@ -105,14 +59,7 @@ def cusum_stream(
 ) -> DataFrame:
     """Apply the stateful CUSUM to a streaming DataFrame of
     ``(user_id long, ts timestamp, value double)``."""
-    if h <= 0:
-        raise ValueError("decision interval h must be positive")
-    if k < 0:
-        raise ValueError("slack k must be non-negative")
-    return points.groupBy("user_id").applyInPandasWithState(
-        _make_step(mu, k, h, tiebreak_col=tiebreak_col),
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=getattr(GroupStateTimeout, timeout),
+    return recurrence.stream(
+        points, CusumSpec(mu, k, h), ("cusum_hi", "cusum_lo", "alarm"),
+        STATE_SCHEMA, OUT_SCHEMA, timeout, tiebreak_col,
     )

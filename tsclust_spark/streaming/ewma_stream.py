@@ -8,30 +8,25 @@ EWMA the batch operator would produce over the full history.  This is
 the canonical "custom stateful operator" shape (SURVEY.md streaming
 note): state size ~ #live keys, never ~ #events.
 
-Ordering contract: within a micro-batch, rows are sorted by timestamp
-before stepping the recurrence; ACROSS batches the operator assumes
-the source delivers a key's points in non-decreasing ts order (true
-for the engine's file/Kafka sources partitioned by key).  A point
-older than the state's last ts cannot be folded retroactively into a
-recurrence whose later outputs were already emitted — such rows are
-flagged `late=true` and smoothed as-if-current, the same
-documented-late policy as the stateful assembler.
+Ordering and late rows follow the recurrence engine's stream contract
+(:func:`tsclust_spark.kernels.recurrence.stream`): rows sort by
+(ts[, tiebreak]) within a micro-batch; across batches the source is
+assumed to deliver a key's points in non-decreasing ts order (true for
+the engine's file/Kafka sources partitioned by key); an older point is
+flagged ``late=true`` and smoothed as-if-current.
 
 Batch equivalence is asserted in tests/test_ewma_stream.py: streaming
 output over availableNow triggers == operators.ewma.ewma over the same
-input, bit-identical (both step y = beta*y + alpha*x in the same
-order).
+input, bit-identical (both run :class:`EwmaSpec` on the same engine).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from tsclust_spark.kernels import recurrence
+from tsclust_spark.operators.ewma import EwmaSpec
 
 STATE_SCHEMA = T.StructType(
     [
@@ -51,49 +46,6 @@ OUT_SCHEMA = T.StructType(
 )
 
 
-def _make_step(alpha: float, tiebreak_col: str | None = None):
-    beta = 1.0 - alpha
-
-    def step(
-        key: Tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            y, last_ts = state.get
-            have_state = True
-        else:
-            y, last_ts = 0.0, float("-inf")
-            have_state = False
-        for pdf in pdfs:
-            # tiebreak totalizes the order over duplicate-ts rows
-            # (ADVICE r3) — same contract as the batch operator
-            sort_cols = ["ts"] + (
-                [tiebreak_col] if tiebreak_col and tiebreak_col in pdf else []
-            )
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            out_y = []
-            out_late = []
-            for ts, x in zip(
-                pdf["ts"].astype("int64") / 1e9, pdf["value"].astype(float)
-            ):
-                late = have_state and ts < last_ts
-                if not have_state:
-                    y = x
-                    have_state = True
-                else:
-                    y = beta * y + alpha * x
-                if not late:
-                    last_ts = ts
-                out_y.append(y)
-                out_late.append(late)
-            pdf = pdf.assign(user_id=key[0], ewma_value=out_y, late=out_late)
-            yield pdf[["user_id", "ts", "value", "ewma_value", "late"]]
-        state.update((y, last_ts))
-
-    return step
-
-
 def ewma_stream(
     points: DataFrame,
     alpha: float = 0.3,
@@ -104,12 +56,7 @@ def ewma_stream(
     ``(user_id long, ts timestamp, value double)``.  Pass
     ``tiebreak_col`` (an extra unique column on the input) when
     duplicate (key, ts) rows are possible."""
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    return points.groupBy("user_id").applyInPandasWithState(
-        _make_step(alpha, tiebreak_col=tiebreak_col),
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=getattr(GroupStateTimeout, timeout),
+    return recurrence.stream(
+        points, EwmaSpec(alpha), ("ewma_value",), STATE_SCHEMA, OUT_SCHEMA,
+        timeout, tiebreak_col,
     )

@@ -8,24 +8,23 @@ gets the same (s, b) the batch operator computes over the full
 history, and the one-step-ahead forecast ``s + b`` is available at
 arrival time.
 
-Ordering / late policy is the family contract: sort by
+Ordering / late policy is the recurrence engine's stream contract
+(:func:`tsclust_spark.kernels.recurrence.stream`): sort by
 (ts[, tiebreak]) within a micro-batch; a point older than the state's
 last ts is flagged ``late=true`` and folded as-if-current.
 
-Batch equivalence is bit-for-bit (same IEEE op order as
-_holt_scalar), asserted across micro-batch boundaries in
+Batch equivalence is bit-for-bit (both run :class:`HoltSpec` on the
+same engine), asserted across micro-batch boundaries in
 tests/test_holt_stream.py.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from tsclust_spark.kernels import recurrence
+from tsclust_spark.operators.holt import HoltSpec
 
 STATE_SCHEMA = T.StructType(
     [
@@ -48,66 +47,6 @@ OUT_SCHEMA = T.StructType(
 )
 
 
-def _make_step(
-    alpha: float,
-    beta: float,
-    tiebreak_col: str | None = None,
-    damping: float = 1.0,
-):
-    phi = 1.0 - alpha
-    gd = (1.0 - beta) * damping
-    d = damping
-
-    def step(
-        key: Tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            s, b, last_ts = state.get
-            have_state = True
-        else:
-            s, b, last_ts = 0.0, 0.0, float("-inf")
-            have_state = False
-        for pdf in pdfs:
-            sort_cols = ["ts"] + (
-                [tiebreak_col] if tiebreak_col and tiebreak_col in pdf else []
-            )
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            out_s, out_b, out_f, out_late = [], [], [], []
-            for ts, x in zip(
-                pdf["ts"].astype("int64") / 1e9, pdf["value"].astype(float)
-            ):
-                late = have_state and ts < last_ts
-                if not have_state:
-                    s, b = x, 0.0
-                    have_state = True
-                else:
-                    s_new = alpha * x + phi * (s + d * b)
-                    b = beta * (s_new - s) + gd * b
-                    s = s_new
-                if not late:
-                    last_ts = ts
-                out_s.append(s)
-                out_b.append(b)
-                out_f.append(s + d * b)
-                out_late.append(late)
-            pdf = pdf.assign(
-                user_id=key[0],
-                level_value=out_s,
-                trend_value=out_b,
-                forecast_1=out_f,
-                late=out_late,
-            )
-            yield pdf[
-                ["user_id", "ts", "value", "level_value", "trend_value",
-                 "forecast_1", "late"]
-            ]
-        state.update((s, b, last_ts))
-
-    return step
-
-
 def holt_stream(
     points: DataFrame,
     alpha: float,
@@ -122,16 +61,13 @@ def holt_stream(
     ``operators.holt.holt(damping=...)``; ``forecast_1`` becomes the
     damped one-step forecast ``s + d*b`` (at d=1 both are the classic
     forms, bit-unchanged)."""
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    if not 0.0 <= beta <= 1.0:
-        raise ValueError("beta must be in [0, 1]")
-    if not 0.0 < damping <= 1.0:
-        raise ValueError("damping must be in (0, 1]")
-    return points.groupBy("user_id").applyInPandasWithState(
-        _make_step(alpha, beta, tiebreak_col=tiebreak_col, damping=damping),
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=getattr(GroupStateTimeout, timeout),
+    spec = HoltSpec(alpha, beta, damping)
+
+    def forecast(outs, carry):
+        s, b = outs
+        return {"forecast_1": s + spec.d * b}
+
+    return recurrence.stream(
+        points, spec, ("level_value", "trend_value"), STATE_SCHEMA, OUT_SCHEMA,
+        timeout, tiebreak_col, forecast,
     )

@@ -3,29 +3,29 @@
 
 State per key is one row — ``(s, b, ring array<double>, last_ts)`` —
 the seasonal FIFO ring riding the state exactly as it rides the batch
-kernel's cross-batch carry, so every arriving point gets the same
+operator's cross-batch carry, so every arriving point gets the same
 (s, b, c) the batch operator computes over the full history and the
 one-step-ahead seasonal forecast ``s + b + c_next`` (c_next = the
 seasonal that will apply to the NEXT point, 0.0 until m points of
 history exist) is available at arrival time.
 
-Ordering / late policy is the family contract (ewma/cusum/holt
-streams): sort by (ts[, tiebreak]) within a micro-batch; a point older
-than the state's last ts is flagged ``late=true`` and folded
-as-if-current.  Batch equivalence is bit-for-bit (same IEEE op order
-as _hw_scalar), asserted across micro-batch boundaries in
+Ordering / late policy is the recurrence engine's stream contract
+(:func:`tsclust_spark.kernels.recurrence.stream`): sort by
+(ts[, tiebreak]) within a micro-batch; a point older than the state's
+last ts is flagged ``late=true`` and folded as-if-current.  Batch
+equivalence is bit-for-bit (both run :class:`HoltWintersSpec` on the
+same engine), asserted across micro-batch boundaries in
 tests/test_holtwinters_stream.py.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import pandas as pd
-
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from tsclust_spark.kernels import recurrence
+from tsclust_spark.operators.holtwinters import HoltWintersSpec
 
 STATE_SCHEMA = T.StructType(
     [
@@ -50,85 +50,6 @@ OUT_SCHEMA = T.StructType(
 )
 
 
-def _make_step(
-    alpha: float,
-    beta: float,
-    gamma: float,
-    m: int,
-    tiebreak_col: str | None = None,
-    multiplicative: bool = False,
-):
-    phi = 1.0 - alpha
-    psi = 1.0 - beta
-    delta = 1.0 - gamma
-    neutral = 1.0 if multiplicative else 0.0
-
-    def step(
-        key: Tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            s, b, ring, last_ts = state.get
-            ring = list(ring)
-            have_state = True
-        else:
-            s, b, ring, last_ts = 0.0, 0.0, [], float("-inf")
-            have_state = False
-        for pdf in pdfs:
-            sort_cols = ["ts"] + (
-                [tiebreak_col] if tiebreak_col and tiebreak_col in pdf else []
-            )
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            out_s, out_b, out_c, out_f, out_late = [], [], [], [], []
-            for ts, x in zip(
-                pdf["ts"].astype("int64") / 1e9, pdf["value"].astype(float)
-            ):
-                late = have_state and ts < last_ts
-                if not have_state:
-                    s, b, c = x, 0.0, neutral
-                    ring = [neutral]
-                    have_state = True
-                else:
-                    c_prev = ring.pop(0) if len(ring) >= m else neutral
-                    s_prev = s
-                    b_prev = b
-                    if multiplicative:
-                        s = alpha * (x / c_prev) + phi * (s_prev + b_prev)
-                        b = beta * (s - s_prev) + psi * b_prev
-                        c = gamma * (x / (s_prev + b_prev)) + delta * c_prev
-                    else:
-                        s = alpha * (x - c_prev) + phi * (s_prev + b_prev)
-                        b = beta * (s - s_prev) + psi * b_prev
-                        c = gamma * (x - s_prev - b_prev) + delta * c_prev
-                    ring.append(c)
-                if not late:
-                    last_ts = ts
-                c_next = ring[0] if len(ring) >= m else neutral
-                out_s.append(s)
-                out_b.append(b)
-                out_c.append(c)
-                out_f.append(
-                    (s + b) * c_next if multiplicative else s + b + c_next
-                )
-                out_late.append(late)
-            pdf = pdf.assign(
-                user_id=key[0],
-                level_value=out_s,
-                trend_value=out_b,
-                seasonal_value=out_c,
-                forecast_1=out_f,
-                late=out_late,
-            )
-            yield pdf[
-                ["user_id", "ts", "value", "level_value", "trend_value",
-                 "seasonal_value", "forecast_1", "late"]
-            ]
-        state.update((s, b, ring, last_ts))
-
-    return step
-
-
 def holt_winters_stream(
     points: DataFrame,
     alpha: float,
@@ -144,19 +65,18 @@ def holt_winters_stream(
     ``multiplicative=True`` runs the ratio-seasonal form,
     batch-identical to ``holt_winters(multiplicative=True)``
     (positive series only); ``forecast_1`` becomes (s+b)*c_next."""
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    if not 0.0 <= beta <= 1.0:
-        raise ValueError("beta must be in [0, 1]")
-    if not 0.0 <= gamma <= 1.0:
-        raise ValueError("gamma must be in [0, 1]")
-    if period < 2:
-        raise ValueError("period must be >= 2 points")
-    return points.groupBy("user_id").applyInPandasWithState(
-        _make_step(alpha, beta, gamma, period, tiebreak_col=tiebreak_col,
-                   multiplicative=multiplicative),
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=getattr(GroupStateTimeout, timeout),
+    spec = HoltWintersSpec(alpha, beta, gamma, period, multiplicative)
+
+    def forecast(outs, carry):
+        # the seasonals so far: the carried ring, then this chunk's
+        s, b, c = outs
+        ring = list(carry[-1]) if carry else []
+        hist = np.concatenate([ring, c])
+        i = np.arange(c.size) + len(ring) + 1 - period
+        c_next = np.where(i >= 0, hist[np.maximum(i, 0)], spec.neutral)
+        return {"forecast_1": (s + b) * c_next if multiplicative else s + b + c_next}
+
+    return recurrence.stream(
+        points, spec, ("level_value", "trend_value", "seasonal_value"),
+        STATE_SCHEMA, OUT_SCHEMA, timeout, tiebreak_col, forecast,
     )
