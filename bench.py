@@ -120,7 +120,7 @@ def codec_decode_benchmark(spark, seq_path: str, frac_mod: int = 5) -> dict:
     """Gorilla raw-tier DECODE throughput: materialize compressed
     blocks once (untimed), then time decompress-and-reduce over the
     compressed parquet — the plan a user querying the raw tier runs.
-    Decode goes through the lockstep batch decoders (kernels/codec.py),
+    Decode goes through the batch decoders (kernels/codec.py),
     vectorized across rows per Arrow batch."""
     from pyspark.sql import functions as F
 

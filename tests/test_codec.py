@@ -169,7 +169,7 @@ def _xor_edge_arrays():
 
 
 def test_decode_dod_batch_bit_equals_scalar():
-    """The lockstep batch decoder must reproduce the scalar reference
+    """The batch decoder must reproduce the scalar reference
     decoder bit-for-bit across every edge class at once (mixed lengths,
     wrapping, empties, every bucket)."""
     arrays = _dod_edge_arrays()
@@ -245,6 +245,64 @@ def test_decode_xor_batch_property(rows):
     got = decode_xor_batch([encode_xor(a) for a in arrays])
     for g, a in zip(got, arrays):
         np.testing.assert_array_equal(g, a)
+
+
+@settings(deadline=None, max_examples=25)
+@given(
+    st.lists(
+        st.lists(
+            st.integers(min_value=-(2**63), max_value=2**63 - 1),
+            max_size=80,
+        ),
+        max_size=12,
+    )
+)
+def test_decode_dod_batch_property(rows):
+    arrays = [np.array(r, dtype=np.int64) for r in rows]
+    got = decode_dod_batch([encode_dod(a) for a in arrays])
+    assert len(got) == len(arrays)
+    for g, a in zip(got, arrays):
+        assert g.dtype == np.int64
+        np.testing.assert_array_equal(g, a)
+
+
+def test_decode_xor_batch_mixed_with_long_blocks():
+    """Empty, 1-point, float and 64-meaningful-bit blocks sharing one
+    batch with 4,096-point blocks: every block decodes to its input and
+    to the scalar oracle, whatever its neighbours' lengths."""
+    rng = np.random.default_rng(17)
+    arrays = [
+        np.clip(np.cumsum(rng.integers(-3, 4, 4096)) + 1000, 0, 50257).astype(
+            np.int64
+        ),
+        np.empty(0, dtype=np.int64),
+        np.array([11], dtype=np.int64),
+        rng.normal(size=4096),
+        np.array([0, -1, 0, -1, 0], dtype=np.int64),
+        np.array([2.5], dtype=np.float64),
+        rng.integers(-(2**63), 2**63 - 1, size=4096, dtype=np.int64),
+        np.empty(0, dtype=np.float64),
+        rng.integers(0, 50257, size=4096).astype(np.int64),
+    ]
+    blobs = [encode_xor(a) for a in arrays]
+    got = decode_xor_batch(blobs)
+    assert len(got) == len(arrays)
+    for g, a, b in zip(got, arrays, blobs):
+        assert g.dtype == a.dtype
+        np.testing.assert_array_equal(g.view(np.uint64), a.view(np.uint64))
+        np.testing.assert_array_equal(g.view(np.uint64), decode_xor(b).view(np.uint64))
+
+
+def test_decode_batch_rejects_count_beyond_stream():
+    """A block whose count header claims more points than its bit stream
+    holds raises instead of reading its neighbour's bits."""
+    good = encode_xor(np.array([1, 2, 3], dtype=np.int64))
+    bad = np.uint32(1000).tobytes() + good[4:]
+    with pytest.raises(ValueError, match="fewer codewords"):
+        decode_xor_batch([bad, good])
+    dod = encode_dod(np.array([10, 20, 30], dtype=np.int64))
+    with pytest.raises(ValueError, match="fewer codewords"):
+        decode_dod_batch([np.uint32(1000).tobytes() + dod[4:]])
 
 
 def test_spark_roundtrip_gate(spark):

@@ -11,6 +11,7 @@ upper triangle.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from tsclust_spark.kernels.dtw import dtw_distance_matrix, dtw_pairs
@@ -61,3 +62,25 @@ def test_broadcast_path_matches_payload_join(spark):
     # the empty doc pairs as inf against every non-empty doc
     inf_pairs = [k for k, v in got.items() if np.isinf(v)]
     assert len(inf_pairs) == n - 1
+
+
+def test_broadcast_missing_id_names_the_id_and_cause(spark):
+    """A pair id absent from the broadcast block raises a named error
+    stating the id and the likely cause, not a bare KeyError."""
+    df = _block(spark, n_docs=4)
+    toks = {
+        r["doc_id"]: np.asarray(r["tokens"], dtype=np.float64)
+        for r in df.collect()
+        if r["doc_id"] != "d001"
+    }
+    bcast = spark.sparkContext.broadcast(toks)
+    pairs = spark.createDataFrame([("d000", "d001")], "id_a string, id_b string")
+    try:
+        with pytest.raises(Exception) as err:
+            dtw_pairs(pairs, tokens_bcast=bcast).collect()
+    finally:
+        bcast.destroy()
+    msg = str(err.value)
+    assert "BroadcastIdMissing" in msg
+    assert "'d001'" in msg
+    assert "evaluated differently for the token snapshot" in msg

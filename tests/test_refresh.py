@@ -129,3 +129,28 @@ def test_watermark_never_regresses(spark, tmp_path):
     assert r["rows"] == 0
     assert read_watermark(spark, wm_path) == t2  # t2 is minute-aligned
     assert _sorted(spark.read.parquet(tier_path).drop("bucket_date")) == before
+
+
+@pytest.mark.spark
+def test_refresh_evaluates_points_once(spark, tmp_path):
+    """The fresh window is aggregated once: the rows feeding the refresh
+    pass through the upstream plan exactly once, not once for the
+    bucket count and again for the merge."""
+    pts = _points(spark, seed=45)
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    counted = pts.mapInPandas(count_rows, pts.schema)
+    now = T0 + dt.timedelta(hours=4)
+    res = refresh_tier(
+        spark, counted, str(tmp_path / "tier1m"), str(tmp_path / "wm"),
+        now=now, integer_values=False,
+    )
+    # the first refresh's window is [epoch, now): every landing point
+    in_window = pts.filter(F.col("ts") < F.lit(now)).count()
+    assert res["rows"] > 0
+    assert seen.value == in_window

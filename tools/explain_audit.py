@@ -212,7 +212,8 @@ NOTES = {
     ),
     "codec_roundtrip": (
         "Map-only end to end: encode is the vectorized per-row coder, "
-        "decode the cross-row lockstep batch decoders — zero Exchange; "
+        "decode the batch decoders (a lockstep codeword-start scan, then "
+        "vectorized reads and a segmented prefix) — zero Exchange; "
         "the gate certifies the production raw-tier read path "
         "(decompress_blocks uses the same batch decoders)."
     ),

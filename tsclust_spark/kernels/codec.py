@@ -10,9 +10,14 @@ paper; implementation written from scratch in numpy).
 Encoding is fully vectorized per row: each element's variable-length
 codeword is materialized into a (n, max_code_bits) bit matrix, the valid
 prefix of each row is selected with a boolean mask, and ``np.packbits``
-emits the byte stream — no per-value Python in the encoder. The decoder
-walks control bits value-by-value (inherently sequential); it is the
-verification path (round-trip gate C25), not the hot path.
+emits the byte stream — no per-value Python in the encoder. The batch
+decoders are the serve read path (``decompress_blocks``, the raw-tier
+scans): one loop step per value index finds the next codeword start of
+every block in the chunk by a table lookup, then every codeword is
+decoded and the values rebuilt with a segmented prefix in vectorized
+passes, so their cost is the longest block's count in loop steps plus
+work linear in the points. The scalar decoders walk control bits value
+by value and stay as the test oracles.
 
 Bit-exactness: pure integer ops, no floating point anywhere -> exact
 round-trip (decode(encode(x)) == x) for any int64 input, asserted per
@@ -168,202 +173,262 @@ def decode_dod(blob: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized batch decoders (VERDICT r3 item 4)
+# Batch decoders: the raw-tier read path
 #
-# A single stream's control-bit walk is inherently sequential (each
-# codeword's position depends on every previous length), but the engine
-# decodes BATCHES of independent row blobs (mapInArrow / mapInPandas),
-# so the decoders below advance all rows in lockstep: one loop
-# iteration decodes value i of EVERY active row with ~15 elementwise
-# numpy ops.  Rows are processed sorted by point count descending, so
-# the active set is always a prefix — no masks in the loop and the
-# vector width shrinks as short rows finish.  Interpreter cost is per
-# VALUE-INDEX per batch, not per value (and never per bit, unlike the
-# scalar decoders, which remain as the independent reference
-# implementation asserted bit-equal in tests/test_codec.py).
+# One stream's codeword starts form a chain (each start is the previous
+# one plus that codeword's length), and a codeword's length is a pure
+# function of the 16 bits at its start. So the only sequential work is
+# finding the starts: one loop step per value index, advancing every
+# block still going by one table lookup on a 24-bit window (a handful of
+# numpy calls per step, shared by all blocks of a chunk). Every codeword
+# is then read from one 128-bit window and the values are rebuilt by a
+# segmented prefix (XOR for values, two wrapping sums for
+# delta-of-delta), all vectorized over the chunk's points. Cost: the
+# longest block's count in loop steps, plus work linear in the points.
+# The scalar decoders above are the oracles these are asserted
+# bit-equal to in tests/test_codec.py.
 # ---------------------------------------------------------------------------
 
 _U64 = np.uint64
-_ALL1 = _U64(0xFFFFFFFFFFFFFFFF)
-_LOW50 = _U64((1 << 50) - 1)
+# points decoded per chunk by default: ~8 MB per uint64 array
+_CHUNK_POINTS = 1 << 20
+# codewords read per vectorized pass inside a chunk
+_SLICE = 1 << 16
+# dod payload by the codeword's 4-bit prefix (0, 10, 110, 1110):
+# ((hi >> shift) & mask) - bias; prefix 1111 carries 64 raw bits instead
+_DOD_SHIFT = np.array([0] * 8 + [55] * 4 + [52] * 2 + [48, 0], dtype=np.uint64)
+_DOD_MASK = np.array(
+    [0] * 8 + [0x7F] * 4 + [0x1FF] * 2 + [0xFFF, 0], dtype=np.uint64
+)
+_DOD_BIAS = np.array([0] * 8 + [63] * 4 + [255] * 2 + [2047, 0], dtype=np.uint64)
 
 
-def _pack_words(payloads: list[bytes]) -> np.ndarray:
-    """Blob payloads -> (R, W+2) uint64 matrix of MSB-first bit words.
+def _length_tables() -> tuple[np.ndarray, np.ndarray]:
+    """Codeword length in bits by the 16 bits at its start (MSB first):
+    XOR ``'0'`` -> 1, ``'10' lead(6) len-1(6) bits(len)`` -> 14 + len;
+    dod by its ``0``/``10``/``110``/``1110``/``1111`` prefix."""
+    w = np.arange(1 << 16, dtype=np.uint32)
+    xor_len = np.where(w >> 15 == 0, 1, 15 + ((w >> 2) & 63))
+    dod_len = np.array([1] * 8 + [9] * 4 + [12] * 2 + [16, 68])[w >> 12]
+    return xor_len.astype(np.uint8), dod_len.astype(np.uint8)
 
-    Two extra zero words guarantee the 128-bit window gather
-    (idx, idx+1, idx+2) never reads out of bounds.
-    """
-    r = len(payloads)
-    max_w = max((len(p) + 7) // 8 for p in payloads) if r else 0
-    words = np.zeros((r, max_w + 2), dtype=np.uint64)
-    for i, p in enumerate(payloads):
-        nw = (len(p) + 7) // 8
-        if nw == 0:
-            continue
-        buf = p if len(p) % 8 == 0 else p + b"\x00" * (8 - len(p) % 8)
-        words[i, :nw] = np.frombuffer(buf, dtype=">u8").astype(np.uint64)
-    return words
+
+_XOR_LEN, _DOD_LEN = _length_tables()
 
 
 def _windows(words: np.ndarray, pos: np.ndarray):
-    """128-bit windows at bit offsets ``pos``: returns (hi, lo) where
-    hi holds bits [pos, pos+64) MSB-first and lo bits [pos+64, pos+128).
-    ``words`` rows must already be row-aligned with ``pos``."""
-    idx = (pos >> 6).astype(np.int64)
+    """128-bit windows at bit offsets ``pos`` of the MSB-first ``words``:
+    (hi, lo) hold bits [pos, pos+64) and [pos+64, pos+128)."""
+    idx = pos >> 6
     off = (pos & 63).astype(np.uint64)
-    rows = np.arange(words.shape[0])[: pos.size]
-    w0 = words[rows, idx]
-    w1 = words[rows, idx + 1]
-    w2 = words[rows, idx + 2]
-    # numpy shift by 64 is UB: compute the off==0 case via where
-    inv = (_U64(64) - off) & _U64(63)
-    nz = off != 0
-    hi = (w0 << off) | np.where(nz, w1 >> inv, _U64(0))
-    lo = (w1 << off) | np.where(nz, w2 >> inv, _U64(0))
+    rs = _U64(63) - off
+    w1 = words[idx + 1]
+    # (w >> 1) >> (63 - off) is w >> (64 - off), also at off == 0,
+    # where a single shift by 64 would be undefined
+    hi = (words[idx] << off) | ((w1 >> _U64(1)) >> rs)
+    lo = (w1 << off) | ((words[idx + 2] >> _U64(1)) >> rs)
     return hi, lo
 
 
-def _var_mask(nbits: np.ndarray) -> np.ndarray:
-    """(1 << nbits) - 1 as uint64, valid for nbits in [0, 64]."""
-    nb = nbits.astype(np.uint64)
-    return np.where(
-        nb >= _U64(64), _ALL1, (_U64(1) << (nb & _U64(63))) - _U64(1)
+def _segment_base(acc: np.ndarray, first: np.ndarray) -> np.ndarray:
+    """``acc`` just before each segment's first index (0 at index 0)."""
+    base = acc[np.maximum(first - 1, 0)]
+    base[first == 0] = 0
+    return base
+
+
+def _xor_codes(hi: np.ndarray, lo: np.ndarray) -> np.ndarray:
+    lead = (hi >> _U64(56)) & _U64(63)
+    mlen = ((hi >> _U64(50)) & _U64(63)) + _U64(1)
+    # the meaningful bits start 14 bits into the codeword
+    mean = ((hi << _U64(14)) | (lo >> _U64(50))) >> (_U64(64) - mlen)
+    xor = mean << ((_U64(64) - lead - mlen) & _U64(63))
+    return np.where(hi >> _U64(63) == 1, xor, _U64(0))
+
+
+def _xor_prefix(flat: np.ndarray, first: np.ndarray, lens: np.ndarray):
+    acc = np.bitwise_xor.accumulate(flat)
+    return acc ^ np.repeat(_segment_base(acc, first), lens)
+
+
+def _dod_codes(hi: np.ndarray, lo: np.ndarray) -> np.ndarray:
+    nib = (hi >> _U64(60)).astype(np.intp)
+    # uint64 subtraction wraps to the two's-complement negative exactly
+    # like the scalar path
+    small = ((hi >> _DOD_SHIFT[nib]) & _DOD_MASK[nib]) - _DOD_BIAS[nib]
+    return np.where(nib == 15, (hi << _U64(4)) | (lo >> _U64(60)), small)
+
+
+def _segmented_sum(x: np.ndarray, first: np.ndarray, lens: np.ndarray):
+    acc = np.cumsum(x, dtype=np.uint64)  # wraps modulo 2^64 like int64
+    return acc - np.repeat(_segment_base(acc, first), lens)
+
+
+def _dod_prefix(flat: np.ndarray, first: np.ndarray, lens: np.ndarray):
+    # flat holds ts0 then dod_1.. per block (dod_1 is the first delta):
+    # deltas are the segmented sum of the dods, timestamps that of ts0
+    # followed by the deltas
+    ts0 = flat[first]
+    flat[first] = 0
+    deltas = _segmented_sum(flat, first, lens)
+    deltas[first] = ts0
+    return _segmented_sum(deltas, first, lens)
+
+
+def _codeword_starts(w32, first_bit, counts, length_table):
+    """Bit offset of every coded value (all but each block's first),
+    block after block: block i's codewords start at ``first_bit[i] +
+    64`` and each next one a codeword length further on."""
+    c_off = np.concatenate(([0], np.cumsum(counts)))
+    starts = np.empty(int(c_off[-1]), dtype=np.intp)
+    if not starts.size:
+        return starts
+    # length-sorted, so the blocks still going at step i are a prefix
+    order = np.argsort(-counts, kind="stable")
+    base = c_off[:-1][order]
+    pos = first_bit[order] + 64
+    going = np.searchsorted(-counts[order], -np.arange(counts.max()), side="left")
+    for i, a in enumerate(going.tolist()):
+        p = pos[:a]
+        if i:
+            # the 16 bits at p: bit p % 8 onwards of byte p // 8's word
+            p += length_table[(w32[p >> 3] >> (16 - (p & 7))) & 0xFFFF]
+        starts[base[:a] + i] = p
+    return starts
+
+
+def _decode_chunk(data, offsets, ns, header, length_table, codes, prefix):
+    """Decode the blocks ``data[offsets[i]:offsets[i+1]]`` (one chunk)
+    into their values as one flat uint64 array."""
+    b0 = int(offsets[0])
+    nb = int(offsets[-1]) - b0
+    padded = np.zeros(((nb + 7) // 8 + 3) * 8, dtype=np.uint8)
+    padded[:nb] = data[b0 : b0 + nb]
+    words = padded.view(">u8").astype(np.uint64)
+    # w32[i] is bytes i..i+3 as one big-endian word (a view, no copy)
+    w32 = np.ndarray((nb,), dtype=">u4", buffer=padded, strides=(1,))
+
+    first_bit = 8 * (offsets[:-1] - b0 + header)
+    counts = np.maximum(ns - 1, 0)
+    short = ValueError("codec block holds fewer codewords than its count")
+    try:
+        starts = _codeword_starts(w32, first_bit, counts, length_table)
+    except IndexError:  # walked off the end of the chunk
+        raise short from None
+    if (starts >= np.repeat(8 * (offsets[1:] - b0), counts)).any():
+        raise short
+
+    nonempty = ns > 0
+    lens = ns[nonempty]
+    flat = np.empty(int(lens.sum()), dtype=np.uint64)
+    first = np.cumsum(lens) - lens
+    is_first = np.zeros(flat.size, dtype=bool)
+    is_first[first] = True
+    flat[is_first] = _windows(words, first_bit[nonempty])[0]
+    # codewords in slices, so the window temporaries stay small
+    coded = np.empty(starts.size, dtype=np.uint64)
+    for k in range(0, starts.size, _SLICE):
+        coded[k : k + _SLICE] = codes(*_windows(words, starts[k : k + _SLICE]))
+    flat[~is_first] = coded
+    return prefix(flat, first, lens)
+
+
+def _decode_blocks(data, offsets, header, length_table, codes, prefix, chunk_points):
+    """All blocks' values as one flat uint64 array, plus their counts.
+
+    ``data[offsets[i]:offsets[i+1]]`` is block i: a little-endian u32
+    point count, the rest of a ``header``-byte header, then its bit
+    stream. Blocks are decoded in runs whose first points fall within
+    one ``chunk_points`` window, which bounds the per-point arrays.
+    """
+    offsets = np.asarray(offsets, dtype=np.int64)
+    block_start = offsets[:-1]
+    if block_start.size == 0:
+        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
+    if (offsets[1:] - block_start < 4).any():
+        raise ValueError("codec block shorter than its 4-byte count header")
+    ns = (
+        data[block_start[:, None] + np.arange(4)]
+        .view("<u4")
+        .ravel()
+        .astype(np.int64)
+    )
+    point_off = np.concatenate(([0], np.cumsum(ns)))
+    run = point_off[:-1] // max(int(chunk_points), 1)
+    cuts = np.concatenate(([0], np.flatnonzero(np.diff(run)) + 1, [run.size]))
+    out = np.empty(int(point_off[-1]), dtype=np.uint64)
+    for a, b in zip(cuts[:-1], cuts[1:]):
+        out[point_off[a] : point_off[b]] = _decode_chunk(
+            data, offsets[a : b + 1], ns[a:b], header, length_table, codes, prefix
+        )
+    return out, ns
+
+
+def _join_blobs(blobs: list[bytes]):
+    offsets = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in blobs], out=offsets[1:])
+    return np.frombuffer(b"".join(blobs), dtype=np.uint8), offsets
+
+
+def _arrow_blobs(col):
+    """(data, offsets) of an Arrow binary column, without copying."""
+    import pyarrow as pa
+
+    if col.null_count:
+        raise ValueError("null codec block")
+    _, off_buf, data_buf = col.buffers()
+    width = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    offsets = np.frombuffer(off_buf, dtype=width)[
+        col.offset : col.offset + len(col) + 1
+    ]
+    data = (
+        np.frombuffer(data_buf, dtype=np.uint8)
+        if data_buf is not None
+        else np.empty(0, dtype=np.uint8)
+    )
+    return data, offsets.astype(np.int64)
+
+
+def _decode_xor_flat(data, offsets, chunk_points=_CHUNK_POINTS):
+    return _decode_blocks(
+        data, offsets, 5, _XOR_LEN, _xor_codes, _xor_prefix, chunk_points
     )
 
 
 def decode_xor_batch(
-    blobs: list[bytes], chunk_elems: int = 1 << 22
+    blobs: list[bytes], chunk_elems: int = _CHUNK_POINTS
 ) -> list[np.ndarray]:
     """Vectorized inverse of :func:`encode_xor` over many blobs.
 
     Bit-identical to calling :func:`decode_xor` per blob (asserted in
-    tests).  ``chunk_elems`` caps the (rows x max_points) work matrix
-    per chunk (~32 MB of uint64 at the default).
+    tests). ``chunk_elems`` bounds the points decoded at once: blobs are
+    decoded in runs whose first points fall in one window of that many
+    points.
     """
-    r = len(blobs)
-    if r == 0:
+    if not blobs:
         return []
-    ns = np.array(
-        [int(np.frombuffer(b[:4], dtype=np.uint32)[0]) for b in blobs],
-        dtype=np.int64,
-    )
-    kinds = [b[4] if len(b) > 4 else 0 for b in blobs]
-    out: list[np.ndarray | None] = [None] * r
-    order = np.argsort(-ns, kind="stable")
-    # row-chunks bound the dense output matrix; rows inside a chunk are
-    # length-sorted so the lockstep active set is a prefix
-    chunk_rows = max(1, int(chunk_elems // max(int(ns.max()), 1)))
-    for lo_i in range(0, r, chunk_rows):
-        sel = order[lo_i : lo_i + chunk_rows]
-        n_s = ns[sel]
-        max_n = int(n_s[0]) if sel.size else 0
-        if max_n == 0:
-            for j in sel:
-                out[j] = np.empty(
-                    0, dtype=np.float64 if kinds[j] == 1 else np.int64
-                )
-            continue
-        words = _pack_words([blobs[j][5:] for j in sel])
-        vals = np.zeros((sel.size, max_n), dtype=np.uint64)
-        nonzero = n_s > 0
-        prev = np.where(nonzero, words[:, 0], _U64(0))
-        vals[:, 0] = prev
-        pos = np.full(sel.size, 64, dtype=np.int64)
-        neg = -n_s
-        for i in range(1, max_n):
-            c = int(np.searchsorted(neg, -i, side="left"))
-            hi, lo = _windows(words[:c], pos[:c])
-            ctrl = (hi >> _U64(63)).astype(bool)
-            lead = (hi >> _U64(56)) & _U64(63)
-            mlen = ((hi >> _U64(50)) & _U64(63)) + _U64(1)
-            # meaningful bits start at codeword offset 14; they sit
-            # wholly in hi when mlen <= 50, else spill into lo
-            m_i = mlen.astype(np.int64)
-            s_a = np.clip(50 - m_i, 0, 63).astype(np.uint64)
-            mean_a = hi >> s_a
-            s_b = np.clip(114 - m_i, 0, 63).astype(np.uint64)
-            spill = np.clip(m_i - 50, 0, 63).astype(np.uint64)
-            mean_b = ((hi & _LOW50) << spill) | (lo >> s_b)
-            mean = np.where(m_i <= 50, mean_a, mean_b) & _var_mask(m_i)
-            trail = (_U64(64) - lead - mlen) & _U64(63)
-            xor = np.where(ctrl, mean << trail, _U64(0))
-            prev[:c] ^= xor
-            vals[:c, i] = prev[:c]
-            pos[:c] += np.where(ctrl, 14 + m_i, 1)
-        for k, j in enumerate(sel):
-            v = vals[k, : n_s[k]]
-            out[j] = (
-                v.copy().view(np.float64)
-                if kinds[j] == 1
-                else v.copy().view(np.int64)
-            )
-    return out  # type: ignore[return-value]
+    data, offsets = _join_blobs(blobs)
+    flat, ns = _decode_xor_flat(data, offsets, chunk_elems)
+    is_float = [len(b) > 4 and b[4] == 1 for b in blobs]
+    return [
+        v.view(np.float64 if f else np.int64)
+        for v, f in zip(np.split(flat, np.cumsum(ns)[:-1]), is_float)
+    ]
 
 
 def decode_dod_batch(
-    blobs: list[bytes], chunk_elems: int = 1 << 22
+    blobs: list[bytes], chunk_elems: int = _CHUNK_POINTS
 ) -> list[np.ndarray]:
     """Vectorized inverse of :func:`encode_dod` over many blobs
-    (bit-identical to per-blob :func:`decode_dod`)."""
-    r = len(blobs)
-    if r == 0:
+    (bit-identical to per-blob :func:`decode_dod`); ``chunk_elems`` as
+    in :func:`decode_xor_batch`."""
+    if not blobs:
         return []
-    ns = np.array(
-        [int(np.frombuffer(b[:4], dtype=np.uint32)[0]) for b in blobs],
-        dtype=np.int64,
+    data, offsets = _join_blobs(blobs)
+    flat, ns = _decode_blocks(
+        data, offsets, 4, _DOD_LEN, _dod_codes, _dod_prefix, chunk_elems
     )
-    out: list[np.ndarray | None] = [None] * r
-    order = np.argsort(-ns, kind="stable")
-    chunk_rows = max(1, int(chunk_elems // max(int(ns.max()), 1)))
-    for lo_i in range(0, r, chunk_rows):
-        sel = order[lo_i : lo_i + chunk_rows]
-        n_s = ns[sel]
-        max_n = int(n_s[0]) if sel.size else 0
-        if max_n == 0:
-            for j in sel:
-                out[j] = np.empty(0, dtype=np.int64)
-            continue
-        words = _pack_words([blobs[j][4:] for j in sel])
-        vals = np.zeros((sel.size, max_n), dtype=np.uint64)
-        nonzero = n_s > 0
-        prev = np.where(nonzero, words[:, 0], _U64(0))
-        vals[:, 0] = prev
-        prev_delta = np.zeros(sel.size, dtype=np.uint64)
-        pos = np.full(sel.size, 64, dtype=np.int64)
-        neg = -n_s
-        for i in range(1, max_n):
-            c = int(np.searchsorted(neg, -i, side="left"))
-            hi, lo = _windows(words[:c], pos[:c])
-            b0 = (hi >> _U64(63)) & _U64(1)
-            b1 = (hi >> _U64(62)) & _U64(1)
-            b2 = (hi >> _U64(61)) & _U64(1)
-            b3 = (hi >> _U64(60)) & _U64(1)
-            is0 = b0 == 0
-            is7 = (b0 == 1) & (b1 == 0)
-            is9 = (b0 == 1) & (b1 == 1) & (b2 == 0)
-            is12 = (b0 == 1) & (b1 == 1) & (b2 == 1) & (b3 == 0)
-            # payloads per bucket (uint64 subtraction wraps to the
-            # two's-complement negative exactly like the scalar path)
-            d7 = ((hi >> _U64(55)) & _U64(0x7F)) - _U64(63)
-            d9 = ((hi >> _U64(52)) & _U64(0x1FF)) - _U64(255)
-            d12 = ((hi >> _U64(48)) & _U64(0xFFF)) - _U64(2047)
-            d64 = (hi << _U64(4)) | (lo >> _U64(60))
-            dod = np.select(
-                [is0, is7, is9, is12],
-                [_U64(0), d7, d9, d12],
-                default=d64,
-            ).astype(np.uint64)
-            step = np.select(
-                [is0, is7, is9, is12], [1, 9, 12, 16], default=68
-            )
-            prev_delta[:c] += dod
-            prev[:c] += prev_delta[:c]
-            vals[:c, i] = prev[:c]
-            pos[:c] += step
-        for k, j in enumerate(sel):
-            out[j] = vals[k, : n_s[k]].copy().view(np.int64)
-    return out  # type: ignore[return-value]
+    return [v.view(np.int64) for v in np.split(flat, np.cumsum(ns)[:-1])]
 
 
 def encode_xor(values: np.ndarray) -> bytes:
@@ -737,10 +802,10 @@ def decompress_blocks(blocks_df):
 
     Inverse of :func:`compress_sequences` (asserted in
     tests/test_codec.py: decompress(compress(seq)) token arrays are
-    bit-identical to the input).  Runs inside ``mapInArrow`` with the
-    lockstep batch decoders — interpreter cost per value-index per
-    batch, never per value — and rebuilds the Arrow list column from
-    one flat buffer + offsets (no per-row Python objects).
+    bit-identical to the input).  Runs inside ``mapInArrow``: the batch
+    decoder reads the ``xor`` column's Arrow buffers in place and its
+    flat output becomes the list column's values buffer, so no per-row
+    Python object is built on either side.
     """
 
     def decode(batches: Iterator) -> Iterator:
@@ -755,18 +820,13 @@ def decompress_blocks(blocks_df):
             ]
         )
         for batch in batches:
-            xors = batch.column(
-                batch.schema.get_field_index("xor")
-            ).to_pylist()
-            vals = decode_xor_batch(xors)
-            lens = np.array([v.size for v in vals], dtype=np.int64)
-            flat = (
-                np.concatenate(vals) if vals else np.empty(0, np.int64)
+            flat, lens = _decode_xor_flat(
+                *_arrow_blobs(batch.column(batch.schema.get_field_index("xor")))
             )
             offsets = np.concatenate(([0], np.cumsum(lens)))
             tokens = pa.ListArray.from_arrays(
                 pa.array(offsets, pa.int32()),
-                pa.array(flat.astype(np.int32), pa.int32()),
+                pa.array(flat.view(np.int64).astype(np.int32), pa.int32()),
             )
             yield pa.RecordBatch.from_arrays(
                 [

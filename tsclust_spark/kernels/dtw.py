@@ -469,6 +469,22 @@ DTW_PAIR_SCHEMA = (
 DTW_DIST_SCHEMA = "id_a string, id_b string, dist double"
 
 
+class BroadcastIdMissing(LookupError):
+    """A pair names an id the broadcast token block does not hold."""
+
+
+def _broadcast_tokens(toks: dict, ids) -> list:
+    try:
+        return [toks[i] for i in ids]
+    except KeyError as e:
+        raise BroadcastIdMissing(
+            f"pair id {e.args[0]!r} is not in the broadcast token block "
+            f"({len(toks)} ids); the block input was likely evaluated "
+            "differently for the token snapshot and for the pair ids "
+            "(a nondeterministic upstream, such as an unordered limit())"
+        ) from None
+
+
 def dtw_pairs(
     pairs_df,
     pattern_name: str = "symmetric2",
@@ -516,8 +532,8 @@ def dtw_pairs(
             paths: list = []
             if tokens_bcast is not None:
                 toks = tokens_bcast.value
-                a_col = [toks[i] for i in pdf["id_a"]]
-                b_col = [toks[i] for i in pdf["id_b"]]
+                a_col = _broadcast_tokens(toks, pdf["id_a"])
+                b_col = _broadcast_tokens(toks, pdf["id_b"])
             else:
                 a_col = pdf["tokens_a"].to_numpy()
                 b_col = pdf["tokens_b"].to_numpy()

@@ -101,21 +101,28 @@ def refresh_tier(
     fresh = points_df.filter(
         (F.col(ts_col) >= F.lit(lo)) & (F.col(ts_col) < F.lit(hi))
     )
-    buckets = rollup_tier(
-        fresh, tier, key_col, ts_col, value_col, integer_values
-    ).withColumn("bucket_date", F.to_date("bucket_ts"))
-
-    n = buckets.count()
-    sink = None
-    if n > 0:
-        sink = merge_into(
-            spark,
-            buckets,
-            key_cols=[key_col, "bucket_ts"],
-            partition_cols=["bucket_date"],
-            parquet_path=tier_path,
-            iceberg_table=iceberg_table,
-        )
+    # persisted so the points are aggregated once: the count fills the
+    # cache that the merge then reads (a nondeterministic upstream
+    # cannot make the two disagree, and the window is scanned once)
+    buckets = (
+        rollup_tier(fresh, tier, key_col, ts_col, value_col, integer_values)
+        .withColumn("bucket_date", F.to_date("bucket_ts"))
+        .persist()
+    )
+    try:
+        n = buckets.count()
+        sink = None
+        if n > 0:
+            sink = merge_into(
+                spark,
+                buckets,
+                key_cols=[key_col, "bucket_ts"],
+                partition_cols=["bucket_date"],
+                parquet_path=tier_path,
+                iceberg_table=iceberg_table,
+            )
+    finally:
+        buckets.unpersist()
     # the new mark is the ALIGNED bound actually materialized, not the
     # raw `now` — realtime_tier then recomputes exactly the buckets this
     # refresh skipped

@@ -4,13 +4,72 @@ Designed for a multi-executor cluster at 10^12-sequence scale; in the
 sandbox it runs ``local[N]``. All knobs are plain public Spark SQL
 configs — AQE (runtime re-planning + skew-join splitting), Arrow batching
 for the pandas-UDF kernels, and sensible shuffle-partition counts.
+
+Importing this module (the package ``__init__`` does) also installs a
+stat-keyed cache for ``zipimport``'s archive directories. PySpark's worker
+calls ``importlib.invalidate_caches()`` at the start of every task, and on
+CPython 3.11 and 3.12.1 each cached ``zipimporter`` then re-reads its
+archive's whole central directory: a reused worker holds ~16 of them over
+the shipped ``pyspark.zip`` and py4j archives, which made up most of each
+task's fixed "time to initialize Python workers". With the cache,
+``invalidate_caches`` re-reads an archive only when its ``(st_mtime_ns,
+st_size, st_ino)`` changed since the last read. Every Python worker that
+unpickles an engine kernel imports the package and so installs it; the
+driver process installs it too, which is harmless.
+
+It has the purpose of CPython's gh-103200 but not its mechanism: from
+3.13, ``invalidate_caches`` drops the cached directory and the next lookup
+reads it again, with no stat check. The cache is installed only where
+``zipimporter`` still keeps its directory in ``self._files`` (the eager
+implementation it replaces; 3.13 reads it through ``_get_files``). Delete
+:func:`_install_zip_cache` and its state once the minimum supported
+Python has the lazy implementation, after measuring the per-task worker
+init time there (not yet measured).
 """
 
 from __future__ import annotations
 
 import os
+import zipimport
 
 from pyspark.sql import SparkSession
+
+# archive path -> (st_mtime_ns, st_size, st_ino) when its directory was
+# last read; process-wide, like zipimport's own directory cache it guards
+_ZIP_STAMPS: dict[str, tuple[int, int, int]] = {}
+_STDLIB_ZIP_INVALIDATE = zipimport.zipimporter.invalidate_caches
+
+
+def _zipimporter_invalidate_caches(self) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive's
+    directory only when the file changed since the last read."""
+    try:
+        st = os.stat(self.archive)
+        stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+    except OSError:
+        stamp = None
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if files is not None and stamp is not None and (
+        _ZIP_STAMPS.get(self.archive) == stamp
+    ):
+        # another importer over the same archive may have re-read it
+        self._files = files
+        return
+    # stat before the read: a change racing the read leaves an older
+    # stamp behind, so the next call reads again
+    _STDLIB_ZIP_INVALIDATE(self)
+    if stamp is not None and self.archive in zipimport._zip_directory_cache:
+        _ZIP_STAMPS[self.archive] = stamp
+    else:
+        _ZIP_STAMPS.pop(self.archive, None)
+
+
+def _install_zip_cache() -> None:
+    if not hasattr(zipimport.zipimporter, "_get_files"):
+        zipimport.zipimporter.invalidate_caches = _zipimporter_invalidate_caches
+
+
+_install_zip_cache()
 
 # Arrow batch cap: token arrays run up to ~4096 int32 each (~16 KiB/row),
 # so 2048 rows/batch keeps a kernel batch around 32 MiB — comfortably
