@@ -36,7 +36,7 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     from tsclust_spark.plans.compact import compact, plan_compaction
-    from tsclust_spark.plans.merge import _path_exists
+    from tsclust_spark.hadoopfs import exists
     from tsclust_spark.session import get_spark
 
     spark = get_spark("tsclust-compact", cores=args.cores)
@@ -45,7 +45,7 @@ def main(argv: list[str] | None = None) -> int:
     for t in args.tiers.split(","):
         sub = t if t == "raw" else f"agg_{t}"
         path = f"{args.output}/{sub}"
-        if sub not in TIER_LEVELS or not _path_exists(spark, path):
+        if sub not in TIER_LEVELS or not exists(spark, path):
             continue
         if args.dry_run:
             plans = plan_compaction(spark, path, TIER_LEVELS[sub], target)

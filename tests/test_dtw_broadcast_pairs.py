@@ -84,3 +84,26 @@ def test_broadcast_missing_id_names_the_id_and_cause(spark):
     assert "BroadcastIdMissing" in msg
     assert "'d001'" in msg
     assert "evaluated differently for the token snapshot" in msg
+
+
+def test_broadcast_path_evaluates_input_once(spark):
+    """The broadcast path scans its input once: the pair ids come from
+    the collected block, not from a second scan and self-join. The pair
+    multiset stays the self-join's: null ids dropped, duplicate ids
+    kept, id_a < id_b."""
+    rows = [("b", [1, 2, 3]), ("a", [4, 5]), ("c", [6]), ("a", [4, 5]),
+            (None, [7, 8])]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    counted = df.mapInPandas(count_rows, df.schema)
+    got = dtw_distance_matrix(counted, repartition=3).collect()
+    assert seen.value == len(rows)
+    assert sorted((r["id_a"], r["id_b"]) for r in got) == [
+        ("a", "b"), ("a", "b"), ("a", "c"), ("a", "c"), ("b", "c"),
+    ]

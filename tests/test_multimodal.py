@@ -37,6 +37,28 @@ def test_feature_extraction_shape_and_determinism(spark):
 
 
 @pytest.mark.spark
+def test_fake_media_with_jpeg_magic_uses_the_fake_decoder(spark):
+    """md5("37784") starts with ffd8, JPEG's magic: the fake media of
+    that id must still decode through the fake decoder, not the JPEG
+    parser (which raised "no SOS marker found")."""
+    import hashlib
+
+    from tsclust_spark.operators.multimodal import _fake_pixels
+
+    payload = hashlib.md5(b"37784").digest() * 4
+    assert payload[:2] == b"\xff\xd8"
+    docs = spark.createDataFrame([("37784",)], "doc_id string")
+    media = attach_fake_media(docs)
+    (row,) = extract_features(media).collect()
+    px = _fake_pixels(payload, 32, 32)
+    g = int(np.sqrt(FEATURE_DIM))
+    want = (px.reshape(g, 32 // g, g, 32 // g).mean(axis=(1, 3)).ravel() / 255.0)
+    np.testing.assert_allclose(row.feature, want.astype(np.float32))
+    (small,) = resize_media(media, 8, 8).collect()
+    assert small.payload == px[:: 32 // 8, :: 32 // 8].tobytes()
+
+
+@pytest.mark.spark
 def test_resize_dimensions(spark):
     docs = spark.range(5).select(F.col("id").cast("string").alias("doc_id"))
     media = attach_fake_media(docs, width=32, height=32)

@@ -230,27 +230,3 @@ def test_upsert_vacated_partition_with_null_and_bool(spark, tmp_path_factory):
                        prune_cols=["unit"])
     got = {r.k: (r.flag, r.v) for r in spark.read.parquet(out).collect()}
     assert got == {"a": ("false", 99), "b": ("true", 20), "c": (None, 30)}
-
-
-def test_canon_partition_value():
-    import datetime
-
-    from tsclust_spark.plans.merge import _HIVE_NULL, _canon_partition_value
-
-    assert _canon_partition_value(None) == _HIVE_NULL
-    assert _canon_partition_value(True) == "true"
-    assert _canon_partition_value(False) == "false"
-    assert _canon_partition_value(7) == "7"
-    assert _canon_partition_value("x y") == "x y"
-    assert _canon_partition_value(datetime.date(2024, 1, 2)) == "2024-01-02"
-    assert (
-        _canon_partition_value(datetime.datetime(2024, 1, 2, 3, 4, 5))
-        == "2024-01-02 03:04:05"
-    )
-    # trailing fractional zeros trimmed, like Spark's timestampToString
-    assert (
-        _canon_partition_value(
-            datetime.datetime(2024, 1, 2, 3, 4, 5, 123000)
-        )
-        == "2024-01-02 03:04:05.123"
-    )

@@ -154,3 +154,47 @@ def test_refresh_evaluates_points_once(spark, tmp_path):
     in_window = pts.filter(F.col("ts") < F.lit(now)).count()
     assert res["rows"] > 0
     assert seen.value == in_window
+
+
+@pytest.mark.spark
+def test_legacy_parquet_watermark_is_read(spark, tmp_path):
+    """A watermark in the legacy format (a one-row parquet table) is
+    still read; the next write puts the one-line text file beside it,
+    and the text file wins."""
+    from tsclust_spark.plans.refresh import WATERMARK_FILE, write_watermark
+
+    wm_path = str(tmp_path / "wm")
+    legacy = T0 + dt.timedelta(minutes=30)
+    spark.createDataFrame([(legacy,)], "watermark timestamp").coalesce(1).write.parquet(wm_path)
+    assert read_watermark(spark, wm_path) == legacy
+
+    pts = _points(spark, seed=66)
+    t2 = T0 + dt.timedelta(hours=4)
+    r = refresh_tier(spark, pts, str(tmp_path / "tier1m"), wm_path, now=t2,
+                     integer_values=False)
+    # the window started at the legacy mark, not at the epoch
+    assert r["rows"] == rollup_tier(
+        pts.filter(F.col("ts") >= F.lit(legacy)), "1m", integer_values=False
+    ).count()
+    assert read_watermark(spark, wm_path) == t2
+    with open(tmp_path / "wm" / WATERMARK_FILE) as f:
+        assert f.read() == "2024-01-01 04:00:00"
+    write_watermark(spark, wm_path, t2 + dt.timedelta(microseconds=5))
+    assert read_watermark(spark, wm_path) == t2 + dt.timedelta(microseconds=5)
+
+
+@pytest.mark.spark
+def test_refresh_job_budget(spark, tmp_path):
+    """One refresh that merges with read-back starts at most 11 Spark
+    jobs; none of them is a watermark read or write."""
+    from tests.test_merge import jobs_in_group
+
+    pts = _points(spark, seed=77)
+    tier_path, wm_path = str(tmp_path / "tier1m"), str(tmp_path / "wm")
+    refresh_tier(spark, pts, tier_path, wm_path, now=T0 + dt.timedelta(hours=1),
+                 integer_values=False)
+    names = jobs_in_group(spark, "refresh-job-budget", lambda: refresh_tier(
+        spark, pts, tier_path, wm_path, now=T0 + dt.timedelta(hours=4),
+        integer_values=False))
+    assert 0 < len(names) <= 11, names
+    assert not any("refresh.py" in n for n in names), names

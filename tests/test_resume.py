@@ -206,9 +206,10 @@ def test_resume_restages_when_input_changes(spark, seq, tmp_path_factory):
 
     # and an unchanged-input resume reuses the snapshot (fingerprint file
     # still present and matching)
-    from tsclust_spark.plans.rollup_job import _hadoop_read_text, _input_fingerprint
+    from tsclust_spark.hadoopfs import read_text
+    from tsclust_spark.plans.rollup_job import _input_fingerprint
 
-    rec = _hadoop_read_text(spark, f"{staged}/_INPUT_FPR")
+    rec = read_text(spark, f"{staged}/_INPUT_FPR")
     assert rec == _input_fingerprint(spark.read.parquet(in_b))
     assert rec is not None and rec.startswith("files:")
 

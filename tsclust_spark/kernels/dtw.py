@@ -649,17 +649,26 @@ def dtw_distance_matrix(
         # two ids). Valid exactly in this repartition mode, which
         # callers use for bounded blocks; at open cardinality use
         # block_col, whose per-block join path below is unchanged.
+        # The pair ids come from the collected ids, so the input is
+        # evaluated once: the same multiset the self-join gives (null
+        # ids dropped, duplicates kept, id_a < id_b in Spark's string
+        # order, which is Python's code-point order). A pandas frame
+        # goes to the JVM through Arrow, with no Python worker.
+        import pandas as pd
+
         tok_pdf = left.toPandas()  # one scan of the (bounded) block
         toks = {
             i: np.asarray(t, dtype=np.float64)
             for i, t in zip(tok_pdf["id_a"], tok_pdf["tokens_a"])
         }
         bcast = df.sparkSession.sparkContext.broadcast(toks)
-        pair_ids = (
-            left.select("id_a")
-            .join(right.select("id_b"), cond)
-            .repartition(repartition)
-        )
+        ids = np.array(sorted(tok_pdf["id_a"].dropna()), dtype=object)
+        ia, ib = np.triu_indices(len(ids), 1)
+        lt = ids[ia] < ids[ib]
+        pair_ids = df.sparkSession.createDataFrame(
+            pd.DataFrame({"id_a": ids[ia][lt], "id_b": ids[ib][lt]}),
+            "id_a string, id_b string",
+        ).repartition(repartition)
         return dtw_pairs(pair_ids, tokens_bcast=bcast, **dtw_kwargs)
     pairs = left.join(right, cond).select(
         "id_a", "id_b", "tokens_a", "tokens_b"

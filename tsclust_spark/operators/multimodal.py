@@ -317,6 +317,17 @@ def decode_image(payload: bytes, width: int, height: int, fake_decode: bool = Fa
     return _fake_pixels(payload, width, height)
 
 
+def _decode_media(m, fake_decode: bool) -> np.ndarray:
+    """Decode one media struct. ``image/fake`` media (from
+    :func:`attach_fake_media`) go to the fake decoder before any magic
+    sniffing: their md5 payload starts with a format's magic bytes now
+    and then (JPEG's ``ffd8`` for doc_id 37784, say)."""
+    payload, width, height = bytes(m["payload"]), int(m["width"]), int(m["height"])
+    if fake_decode and m["mime"] == "image/fake":
+        return _fake_pixels(payload, width, height)
+    return decode_image(payload, width, height, fake_decode=fake_decode)
+
+
 def extract_features(
     df: DataFrame,
     media_col: str = "media",
@@ -336,10 +347,7 @@ def extract_features(
         for pdf in batches:
             feats = []
             for m in pdf[media_col]:
-                px = decode_image(
-                    bytes(m["payload"]), int(m["width"]), int(m["height"]),
-                    fake_decode=fake_decode,
-                )
+                px = _decode_media(m, fake_decode)
                 g = int(np.sqrt(FEATURE_DIM))
                 h, w = px.shape
                 blocks = px[: h - h % g, : w - w % g].reshape(
@@ -370,10 +378,7 @@ def resize_media(
         for pdf in batches:
             outs = []
             for m in pdf[media_col]:
-                px = decode_image(
-                    bytes(m["payload"]), int(m["width"]), int(m["height"]),
-                    fake_decode=fake_decode,
-                )
+                px = _decode_media(m, fake_decode)
                 ys = (np.arange(out_height) * px.shape[0] // out_height)
                 xs = (np.arange(out_width) * px.shape[1] // out_width)
                 outs.append(px[np.ix_(ys, xs)].tobytes())

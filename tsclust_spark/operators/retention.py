@@ -19,19 +19,15 @@ import datetime as dt
 
 from pyspark.sql import SparkSession
 
+from tsclust_spark.hadoopfs import fs_path
+
 DEFAULT_POLICY = {"raw": 7, "1m": 30, "1h": 365, "1d": None}  # days, None=keep
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def list_date_partitions(spark: SparkSession, table_path: str) -> list[str]:
     """bucket_date values present as partition directories (recursive
     one level past optional unit=... dirs)."""
-    fs, root = _fs(spark, table_path)
+    fs, root = fs_path(spark, table_path)
     if not fs.exists(root):
         return []
     out = set()
@@ -67,7 +63,7 @@ def enforce_retention(
         table = f"{out_dir}/raw" if tier == "raw" else f"{out_dir}/agg_{tier}"
         cutoff = (now - dt.timedelta(days=keep_days)).isoformat()
         parts = list_date_partitions(spark, table)
-        fs, root = _fs(spark, table)
+        fs, root = fs_path(spark, table)
         if not parts and fs.exists(root):
             # a policy tier with data but no bucket_date=... partitions
             # can never expire anything — that's a layout bug upstream
@@ -83,7 +79,7 @@ def enforce_retention(
         dropped[tier] = doomed
         if dry_run:
             continue
-        fs, root = _fs(spark, table)
+        fs, root = fs_path(spark, table)
         if not fs.exists(root):
             continue
         # remove every matching partition dir (possibly under unit=...)

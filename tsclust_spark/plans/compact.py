@@ -24,13 +24,8 @@ import math
 
 from pyspark.sql import SparkSession
 
+from tsclust_spark import hadoopfs
 from tsclust_spark.plans.merge import _partition_dirs
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
 
 
 def _data_files(fs, dir_path):
@@ -51,7 +46,7 @@ def plan_compaction(
 ) -> list[dict]:
     """Metadata-only compaction plan: one entry per partition whose file
     count exceeds what its byte size needs at ``target_file_bytes``."""
-    fs, _, _ = _fs(spark, path)
+    fs, _ = hadoopfs.fs_path(spark, path)
     plans = []
     for vals, pdir in _partition_dirs(spark, path, n_partition_levels).items():
         files = _data_files(fs, pdir)
@@ -79,7 +74,8 @@ def compact_partition(spark: SparkSession, dir_path: str, target_n: int) -> None
     half the old files. (Iceberg gets true snapshot isolation; this is
     the honest parquet equivalent.)
     """
-    fs, hdir, jvm = _fs(spark, dir_path)
+    fs, hdir = hadoopfs.fs_path(spark, dir_path)
+    jvm = spark._jvm
     tmp = jvm.org.apache.hadoop.fs.Path(dir_path + "/_compact_tmp")
     old_files = [p for p, _ in _data_files(fs, hdir)]
     (
@@ -93,7 +89,8 @@ def compact_partition(spark: SparkSession, dir_path: str, target_n: int) -> None
     for status in fs.listStatus(tmp):
         name = status.getPath().getName()
         if status.isFile() and not name.startswith(("_", ".")):
-            fs.rename(
+            hadoopfs.rename(
+                fs,
                 status.getPath(),
                 jvm.org.apache.hadoop.fs.Path(dir_path + "/" + name),
             )

@@ -8,17 +8,26 @@ On a cluster with an Iceberg catalog this is literally::
 
 (:func:`iceberg_merge_sql` emits exactly that statement). The sandbox
 has no catalog, so the fallback implements the same semantics on
-partitioned parquet: only the partitions present in the updates are
-read back, merged row-wise (anti-join out the replaced keys, union the
-updates), and replaced via dynamic partition overwrite — unchanged
-partitions are never touched, which is the property that matters at
-100 TB.
+partitioned parquet with Iceberg's file-level replace as the commit
+model: the updates are written once to a hidden staging directory
+under the target; which target partitions they touch comes from
+filesystem metadata (the staged and the target partition directories),
+not from a scan; only those partitions are read back and merged
+row-wise (anti-join out the replaced keys, union the updates) into a
+second staging directory; and each touched partition directory is then
+swapped in by Hadoop FS renames. Unchanged partitions are never read or
+rewritten, which is the property that matters at 100 TB. A failed
+rename undoes the swap's earlier renames, so each partition holds its
+old rows or its new rows, never both and never neither.
 """
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from tsclust_spark import hadoopfs
 
 
 def iceberg_merge_sql(target: str, source_view: str, key_cols: list[str]) -> str:
@@ -62,59 +71,20 @@ def merge_into(
     return "parquet"
 
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs.exists(hpath)
-
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
 def _unescape_partition_value(name: str) -> str:
-    """Invert Hive's path escaping (%XX for special chars) so directory
-    names compare equal to :func:`_canon_partition_value` output."""
+    """Invert Hive's path escaping (%XX for special chars)."""
     from urllib.parse import unquote
 
     return unquote(name)
 
 
-def _canon_partition_value(v) -> str:
-    """Canonical string for a partition VALUE, matching how Spark/Hive
-    renders it in a directory name (after %-unescaping): null -> the
-    Hive default-partition token, booleans lowercase, timestamps with
-    trailing fractional zeros trimmed. A bare ``str()`` here caused real
-    divergence (``None`` vs ``__HIVE_DEFAULT_PARTITION__``, ``True`` vs
-    ``true``): a live directory then landed in ``affected - merged`` and
-    was deleted after the write — data loss — and the no-overlap fast
-    path could falsely skip a merge, leaving stale duplicate keys."""
-    import datetime
-
-    if v is None:
-        return _HIVE_NULL
-    if isinstance(v, bool):  # before int: bool subclasses int
-        return "true" if v else "false"
-    if isinstance(v, datetime.datetime):  # before date: datetime subclasses it
-        s = v.strftime("%Y-%m-%d %H:%M:%S")
-        if v.microsecond:
-            s += (".%06d" % v.microsecond).rstrip("0")
-        return s
-    return str(v)
-
-
-def _canon_row(row) -> tuple[str, ...]:
-    return tuple(_canon_partition_value(v) for v in row)
-
-
 def _partition_dirs(spark: SparkSession, path: str, n_levels: int) -> dict:
     """{partition-value tuple (Hive-unescaped): hadoop Path} for every
     ``col=val`` directory ``n_levels`` deep under ``path`` — a pure
-    filesystem-metadata walk, no Spark job. The Iceberg analogue is the
-    partitions metadata table."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    filesystem-metadata walk, no Spark job. Hidden ``_staging-*``
+    directories have no ``=`` in their name and are never listed. The
+    Iceberg analogue is the partitions metadata table."""
+    fs, root = hadoopfs.fs_path(spark, path)
     if not fs.exists(root):
         return {}
     out: dict = {}
@@ -135,10 +105,72 @@ def _partition_dirs(spark: SparkSession, path: str, n_levels: int) -> dict:
     return out
 
 
-def _existing_partitions(
-    spark: SparkSession, path: str, n_levels: int
-) -> set[tuple[str, ...]]:
-    return set(_partition_dirs(spark, path, n_levels))
+def _write_partitioned(df: DataFrame, partition_cols: list[str], path: str) -> None:
+    (
+        df.repartition(*partition_cols)
+        .write.partitionBy(*partition_cols)
+        .parquet(path)
+    )
+
+
+def _read_dirs(spark: SparkSession, schema, base: str, dirs) -> DataFrame:
+    """Read partition directories by explicit path with a known schema:
+    Spark then runs no schema-inference job, and lists up to
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    paths on the driver, without a listing job."""
+    return (
+        spark.read.schema(schema)
+        .option("basePath", base)
+        .parquet(*(str(d) for d in dirs))
+    )
+
+
+def _rel(path, n_levels: int) -> str:
+    """The last ``n_levels`` components of a Hadoop path
+    (``col=val/col=val``)."""
+    names = []
+    for _ in range(n_levels):
+        names.append(path.getName())
+        path = path.getParent()
+    return "/".join(reversed(names))
+
+
+class _SwapNotUndone(RuntimeError):
+    """A failed swap whose undo failed too: the replaced partitions are
+    still in the staging directory, which must not be deleted."""
+
+
+def _swap(
+    spark: SparkSession, target_path: str, new_dirs: dict, old_dirs: dict, aside: str
+) -> None:
+    """Commit partition directories by Hadoop FS renames, partition by
+    partition: the old directory (if any) moves under ``aside``, then
+    the new one (if any) moves into its place under ``target_path``.
+    On a failure every rename done so far is undone in reverse, so each
+    partition holds its old rows again, and the error is re-raised."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs, _ = hadoopfs.fs_path(spark, target_path)
+    done = []
+    try:
+        for vals in sorted(old_dirs.keys() | new_dirs.keys()):
+            moves = ((old_dirs.get(vals), aside), (new_dirs.get(vals), target_path))
+            for src, base in moves:
+                if src is None:
+                    continue
+                dst = Path(f"{base}/{_rel(src, len(vals))}")
+                fs.mkdirs(dst.getParent())
+                hadoopfs.rename(fs, src, dst)
+                done.append((src, dst))
+    except Exception:
+        try:
+            for src, dst in reversed(done):
+                hadoopfs.rename(fs, dst, src)
+        except Exception as undo:
+            raise _SwapNotUndone(
+                f"partition swap under {target_path} failed and could not "
+                f"be undone; replaced partitions are kept in {aside}"
+            ) from undo
+        raise
 
 
 def upsert_partitioned(
@@ -149,109 +181,70 @@ def upsert_partitioned(
     partition_cols: list[str],
     prune_cols: list[str] | None = None,
 ) -> None:
-    """Parquet MERGE fallback with partition-level surgical replace.
+    """Parquet MERGE fallback: stage, then swap partition directories.
 
-    ``updates`` must contain the partition columns. Requires
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` (set here per
-    write) so ``mode("overwrite")`` replaces only the partitions present
-    in the written frame.
+    ``updates`` must contain the partition columns. It is evaluated
+    once, by a partitioned write to a hidden ``_staging-<uuid>``
+    directory under the target. Two metadata walks (staging and target)
+    give the affected target partitions: those sharing a ``prune_cols``
+    prefix with a staged partition. Directory names are compared with
+    directory names, so nulls, booleans and escaped values need no
+    canonicalization.
+
+    - No affected partition (a new unit or date): the staged partition
+      directories are renamed into place.
+    - Otherwise the affected target directories and the staged ones are
+      read back by explicit path, the replaced keys are anti-joined
+      out, the updates unioned in, and the result written to a second
+      staging directory. Each affected partition is then swapped by
+      renames; an affected partition absent from the merged output (a
+      re-keyed row's old home) is vacated: moved aside and deleted, as
+      Iceberg's file-level replace drops its files.
+
+    Unaffected partitions are never read or rewritten. If a rename of
+    the swap fails, the renames done so far are undone, so every
+    partition holds its old rows, and the error is re-raised; the
+    staging directories are deleted either way. A reader listing the
+    table during the swap can miss a partition for the moment between
+    its two renames.
 
     ``prune_cols`` (default: ``partition_cols``) limits which partition
-    columns the read-back anti-join is pruned on. IMPORTANT: when a
-    partition column is NOT a pure function of the key columns (e.g. a
+    columns the read-back is pruned on. IMPORTANT: when a partition
+    column is NOT a pure function of the key columns (e.g. a
     data-derived ``bucket_date`` under a ``doc_id`` key), full-tuple
     pruning would miss a key's old row sitting in a different partition
     and leave a stale duplicate — pass the key-determined prefix (e.g.
     ``["unit"]``) so every partition the key could live in is merged.
-
-    Dynamic partition overwrite only replaces partitions PRESENT in the
-    written frame, so when ``prune_cols`` is a proper prefix the merge
-    additionally deletes any affected partition directory left with zero
-    surviving rows (a re-keyed/moved row's old home) — matching what an
-    Iceberg ``MERGE`` does natively via file-level deletes.
     """
     if prune_cols is None:
         prune_cols = partition_cols
     if partition_cols[: len(prune_cols)] != prune_cols:
         raise ValueError("prune_cols must be a prefix of partition_cols")
-    updates = updates.persist()
+    n, k = len(partition_cols), len(prune_cols)
+    staging = [f"{target_path}/_staging-{uuid.uuid4().hex}"]
     try:
-        overlap = True
-        if _path_exists(spark, target_path):
-            # no-overlap fast path (the append-mostly common case: a new
-            # unit or a new date lands entirely in fresh partitions):
-            # compare the updates' partition values against a filesystem
-            # metadata walk — when disjoint, skip the read-back merge AND
-            # the localCheckpoint materialization entirely; dynamic
-            # partition overwrite below already only touches written
-            # partitions. Iceberg MERGE gets this for free via file
-            # skipping; this keeps the parquet fallback honest about it.
-            # Both sides are canonicalized (_canon_partition_value vs the
-            # Hive-unescaped directory name), so nulls/booleans/
-            # timestamps compare correctly instead of falling back.
-            existing = {
-                t[: len(prune_cols)]
-                for t in _existing_partitions(
-                    spark, target_path, len(partition_cols)
-                )
-            }
-            upd_rows = updates.select(*prune_cols).distinct().collect()
-            upd_parts = {_canon_row(r) for r in upd_rows}
-            overlap = bool(existing & upd_parts)
-        vacated: list = []
-        if _path_exists(spark, target_path) and overlap:
-            current = spark.read.parquet(target_path)
-            # restrict the read-back to the key-safe prune prefix
-            parts = updates.select(*prune_cols).distinct()
-            affected = current.join(F.broadcast(parts), prune_cols, "left_semi")
-            keep = affected.join(
-                updates.select(*key_cols).distinct(), key_cols, "left_anti"
+        _write_partitioned(updates, partition_cols, staging[0])
+        new_dirs = _partition_dirs(spark, staging[0], n)
+        prefixes = {t[:k] for t in new_dirs}
+        old_dirs = {
+            t: p
+            for t, p in _partition_dirs(spark, target_path, n).items()
+            if t[:k] in prefixes
+        }
+        if old_dirs:
+            old = _read_dirs(spark, updates.schema, target_path, old_dirs.values())
+            new = _read_dirs(spark, updates.schema, staging[0], new_dirs.values())
+            keep = old.join(new.select(*key_cols).distinct(), key_cols, "left_anti")
+            staging.append(f"{target_path}/_staging-{uuid.uuid4().hex}")
+            _write_partitioned(
+                keep.unionByName(new), partition_cols, staging[1]
             )
-            merged = keep.unionByName(updates.select(*keep.columns))
-            # truncate lineage: the write below overwrites the very path
-            # the plan reads; localCheckpoint materializes first (on a
-            # cluster use a reliable checkpoint dir instead)
-            merged = merged.localCheckpoint(eager=True)
-            if prune_cols != partition_cols:
-                # a data-derived partition column can leave an affected
-                # partition with ZERO surviving rows (e.g. a doc's block
-                # moved to a new bucket_date) — dynamic overwrite only
-                # replaces partitions present in the written frame, so
-                # fully-vacated directories must be deleted explicitly
-                # (Iceberg MERGE deletes their files natively)
-                dirs = _partition_dirs(
-                    spark, target_path, len(partition_cols)
-                )
-                upd_prefixes = {
-                    _canon_row(r)
-                    for r in updates.select(*prune_cols).distinct().collect()
-                }
-                affected_full = {
-                    t
-                    for t in dirs
-                    if t[: len(prune_cols)] in upd_prefixes
-                }
-                merged_full = {
-                    _canon_row(r)
-                    for r in merged.select(*partition_cols)
-                    .distinct()
-                    .collect()
-                }
-                vacated = [dirs[t] for t in affected_full - merged_full]
-        else:
-            merged = updates
-        (
-            merged.repartition(*partition_cols)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(target_path)
-        )
-        if vacated:
-            jvm = spark._jvm
-            root = jvm.org.apache.hadoop.fs.Path(target_path)
-            fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-            for p in vacated:
-                fs.delete(p, True)
+            new_dirs = _partition_dirs(spark, staging[1], n)
+        _swap(spark, target_path, new_dirs, old_dirs, f"{staging[0]}/_replaced")
+    except _SwapNotUndone:
+        staging = []  # they hold the replaced partitions
+        raise
     finally:
-        updates.unpersist()
+        for s in staging:
+            fs, hpath = hadoopfs.fs_path(spark, s)
+            fs.delete(hpath, True)

@@ -19,8 +19,16 @@ Scale notes (100 TB): each refresh scans raw with a PUSHED
 ``ts >= aligned(prev)`` predicate — one materialization interval, not
 history; the MERGE touches only the partitions holding the recomputed
 buckets (partition-surgical parquet fallback, real ``MERGE INTO`` on
-Iceberg). The watermark is stored through the same FileSystem API as
-the data, so the job works unchanged on HDFS/S3.
+Iceberg).
+
+Watermark storage: one line of text, the mark as a naive UTC timestamp
+in ISO form (``2024-01-01 01:35:00``, microseconds only when nonzero),
+in the file ``_WATERMARK`` inside the watermark path. It is read and
+written through the same Hadoop FileSystem API as the data, so the job
+works unchanged on HDFS/S3, and neither read nor write starts a Spark
+job. A watermark path that holds only the legacy format (a one-row
+parquet table with a ``watermark timestamp`` column) is still read; the
+next write puts the text file beside it, and the text file wins.
 """
 
 from __future__ import annotations
@@ -28,10 +36,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tsclust_spark import hadoopfs
 from tsclust_spark.operators.rollup import TIER_TRUNC, rollup_tier
 from tsclust_spark.plans.merge import merge_into
 
 EPOCH = "1970-01-01 00:00:00"
+WATERMARK_FILE = "_WATERMARK"
 
 
 def _align(t, tier):
@@ -48,22 +58,23 @@ def _align(t, tier):
 
 
 def read_watermark(spark: SparkSession, path: str):
-    """Stored high-water mark, or None if no refresh ever ran. Probes
-    the FileSystem first — letting the read fail would spew a JVM stack
-    trace into every first run's logs."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
+    """Stored high-water mark (a naive UTC datetime), or None if no
+    refresh ever ran. Probes the FileSystem first — letting a read fail
+    would spew a JVM stack trace into every first run's logs."""
+    import datetime as dt
+
+    text = hadoopfs.read_text(spark, f"{path}/{WATERMARK_FILE}")
+    if text:
+        return dt.datetime.fromisoformat(text)
+    if not hadoopfs.exists(spark, path):
         return None
-    rows = spark.read.parquet(path).collect()
+    rows = spark.read.parquet(path).collect()  # the legacy format
     return rows[0].watermark if rows else None
 
 
 def write_watermark(spark: SparkSession, path: str, wm) -> None:
-    spark.createDataFrame(
-        [(wm,)], "watermark timestamp"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    """Store ``wm``, a naive UTC datetime, as the mark."""
+    hadoopfs.write_text(spark, f"{path}/{WATERMARK_FILE}", wm.isoformat(sep=" "))
 
 
 def refresh_tier(

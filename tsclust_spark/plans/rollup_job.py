@@ -30,6 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tsclust_spark import hadoopfs
 from tsclust_spark.kernels.barycenter import window_representative
 from tsclust_spark.kernels.codec import compress_sequences
 from tsclust_spark.operators.rollup import TIER_ORDER, rollup_tier
@@ -143,41 +144,14 @@ def _input_fingerprint(seq: DataFrame) -> str:
     return f"rows:{seq.count()}"
 
 
-def _hadoop_fs_path(spark: SparkSession, path: str):
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _hadoop_write_text(spark: SparkSession, path: str, text: str) -> None:
-    fs, hpath = _hadoop_fs_path(spark, path)
-    out = fs.create(hpath, True)
-    out.write(bytearray(text.encode()))
-    out.close()
-
-
 def _delete_unit_scratch(spark: SparkSession, work: str) -> None:
     """Delete a unit's scratch dir, then its ``_work`` parent once no
     other unit's scratch is left in it."""
-    fs, hpath = _hadoop_fs_path(spark, work)
+    fs, hpath = hadoopfs.fs_path(spark, work)
     fs.delete(hpath, True)
     parent = hpath.getParent()
     if fs.exists(parent) and len(fs.listStatus(parent)) == 0:
         fs.delete(parent, False)
-
-
-def _hadoop_read_text(spark: SparkSession, path: str) -> str | None:
-    fs, hpath = _hadoop_fs_path(spark, path)
-    if not fs.exists(hpath):
-        return None
-    stream = fs.open(hpath)
-    try:
-        jvm = spark._jvm
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(stream)
-        )
-        return reader.readLine()
-    finally:
-        stream.close()
 
 
 def run_unit(
@@ -308,8 +282,6 @@ def run_rollup(
         units = units[:max_units]
 
     if stage and len(units) > 1:
-        from tsclust_spark.plans.merge import _path_exists
-
         staged_path = f"{out_dir}/_staged_n{n_units}"
         # the staged snapshot is only reusable under resume semantics
         # (resume REQUIRES an immutable input — otherwise completed vs
@@ -320,11 +292,11 @@ def run_rollup(
         # DIFFERENT input than the one staged restages loudly instead of
         # processing the stale snapshot.
         fpr_path = f"{staged_path}/_INPUT_FPR"
-        reuse = resume and _path_exists(spark, f"{staged_path}/_SUCCESS")
+        reuse = resume and hadoopfs.exists(spark, f"{staged_path}/_SUCCESS")
         fpr = None
         if reuse:
             fpr = _input_fingerprint(seq)
-            recorded = _hadoop_read_text(spark, fpr_path)
+            recorded = hadoopfs.read_text(spark, fpr_path)
             if recorded != fpr:
                 reuse = False
         if not reuse:
@@ -336,7 +308,7 @@ def run_rollup(
                 .partitionBy("unit")
                 .parquet(staged_path)
             )
-            _hadoop_write_text(
+            hadoopfs.write_text(
                 spark, fpr_path, fpr or _input_fingerprint(seq)
             )
         seq = spark.read.parquet(staged_path)
