@@ -6870,7 +6870,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "weibull_fit": _q_weibull_fit,
         "burst_intervals": _q_burst_intervals,
         # --- round-6 rotations INTO the window: gates whose transitive
-        #     code changed in round 5/6 (jpeg.py r5; dtw kernels,
+        #     code changed in round 5/6 (dtw kernels,
         #     histogram.py, m4.py, rollup_arrow.py, barycenter-adjacent
         #     cluster assignment r6) plus the tier staples due periodic
         #     recert (VERDICT r5 item 2) ---

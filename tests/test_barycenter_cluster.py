@@ -48,6 +48,29 @@ def test_kmedoids_separated_clusters():
     assert labels[0] != labels[5]
 
 
+@pytest.mark.parametrize(
+    "batch_cells",
+    [pytest.param(1 << 22, id="one_batch"), pytest.param(280, id="chunked")],
+)
+def test_dtw_dist_matrix_equals_scalar_kernel(monkeypatch, batch_cells):
+    """The batched matrix equals the scalar banded kernel per pair, bit
+    for bit, on a ragged block with empty series; a small cell budget
+    splits the pairs over several batches."""
+    from tsclust_spark.kernels.dtw_banded import dtw_banded_distance
+    from tsclust_spark.operators import cluster
+
+    monkeypatch.setattr(cluster, "_BATCH_CELLS", batch_cells)
+    rng = np.random.default_rng(7)
+    series = [rng.normal(size=n) for n in (0, 1, 3, 17, 0, 40, 8, 8, 25, 2)]
+    dm = _dtw_dist_matrix(series, "symmetric2", band=3)
+    for i in range(len(series)):
+        assert dm[i, i] == 0.0
+        for j in range(i + 1, len(series)):
+            want = dtw_banded_distance(series[i], series[j], 3, "euclidean", "symmetric2")
+            assert dm[i, j] == dm[j, i]
+            assert dm[i, j] == want
+
+
 def test_kmedoids_k_ge_n():
     dm = np.array([[0.0, 1.0], [1.0, 0.0]])
     labels, medoids = kmedoids_assign(dm, 5)

@@ -1,16 +1,10 @@
-"""Property tests (hypothesis) for the Holt-Winters lockstep kernel
-and the BPE merge/segment primitives — pure numpy/python, no Spark."""
+"""Property tests (hypothesis) for the Holt-Winters lockstep kernel —
+pure numpy, no Spark."""
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from tsclust_spark.operators.bpe import (
-    EOW,
-    _merge_pair_in,
-    _word_symbols,
-    segment_word,
-)
 from tsclust_spark.kernels import recurrence
 from tsclust_spark.operators.holtwinters import HoltWintersSpec, _hw_scalar
 
@@ -67,50 +61,3 @@ def test_hw_carry_ring_splits_anywhere(n, cut, m, seed):
     assert (np.concatenate([s1, s2]) == s_f).all()
     assert (np.concatenate([b1, b2]) == b_f).all()
     assert (np.concatenate([c1, c2]) == c_f).all()
-
-
-words = st.text(
-    alphabet=st.characters(min_codepoint=97, max_codepoint=105),
-    min_size=1,
-    max_size=12,
-)
-
-
-@settings(max_examples=100, deadline=None)
-@given(word=words, seed=st.integers(min_value=0, max_value=2**31))
-def test_segment_word_is_lossless_for_any_merge_table(word, seed):
-    rng = np.random.default_rng(seed)
-    # random plausible merge table over the same alphabet
-    alphabet = [chr(c) for c in range(97, 106)]
-    pieces = alphabet + [a + EOW for a in alphabet]
-    merge_list = []
-    for _ in range(rng.integers(0, 12)):
-        l = pieces[rng.integers(0, len(pieces))]
-        r = pieces[rng.integers(0, len(pieces))]
-        if l.endswith(EOW):
-            continue
-        merge_list.append((l, r))
-        pieces.append(l + r)
-    ranks = {p: i for i, p in enumerate(merge_list)}
-    segs = segment_word(word, ranks)
-    assert "".join(segs) == word + EOW
-    assert all(len(p) > 0 for p in segs)
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    syms=st.lists(st.sampled_from(["a", "b", "c"]), min_size=0, max_size=20)
-)
-def test_merge_pair_nonoverlapping_left_to_right(syms):
-    out = _merge_pair_in(list(syms), "a", "b")
-    assert "".join(out) == "".join(syms)  # lossless
-    # no adjacent (a, b) left UNLESS the a was produced by a merge
-    # ("ab" tokens are distinct strings from 'a'+'b' pairs)
-    for i in range(len(out) - 1):
-        assert not (out[i] == "a" and out[i + 1] == "b")
-
-
-def test_word_symbols_marks_eow():
-    assert _word_symbols("cat") == ["c", "a", "t" + EOW]
-    assert _word_symbols("a") == ["a" + EOW]
-    assert _word_symbols("") == []

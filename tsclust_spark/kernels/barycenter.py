@@ -84,7 +84,9 @@ def window_representative(
 # DBA (numpy core)
 # ---------------------------------------------------------------------------
 
-def _dtw_path(s1: np.ndarray, s2: np.ndarray, pattern, band: int | None):
+def _dtw_dp(s1: np.ndarray, s2: np.ndarray, pattern, band: int | None):
+    """Cumulative-cost matrix of the sqeuclidean DTW, plus the local
+    cost (out-of-band cells at 1e300) and steps that backtracking needs."""
     cost = pairwise_cost(s1, s2, "sqeuclidean")
     mask = (
         build_mask(cost.shape[0], cost.shape[1], "sakoe_chiba", band, None)
@@ -94,7 +96,11 @@ def _dtw_path(s1: np.ndarray, s2: np.ndarray, pattern, band: int | None):
     steps = pattern.to_numpy()
     D = _accumulate(cost, steps, mask)
     local = np.where(mask, cost, 1e300) if mask is not None else cost
-    return _backtrack(D, local, steps), float(D[-1, -1])
+    return D, local, steps
+
+
+def _dtw_path(s1: np.ndarray, s2: np.ndarray, pattern, band: int | None):
+    return _backtrack(*_dtw_dp(s1, s2, pattern, band))
 
 
 def medoid_index(series: list[np.ndarray], pattern_name: str = "symmetric1",
@@ -105,7 +111,7 @@ def medoid_index(series: list[np.ndarray], pattern_name: str = "symmetric1",
     totals = np.zeros(n)
     for i in range(n):
         for j in range(i + 1, n):
-            _, d = _dtw_path(series[i], series[j], pattern, band)
+            d = float(_dtw_dp(series[i], series[j], pattern, band)[0][-1, -1])
             totals[i] += d
             totals[j] += d
     return int(np.argmin(totals))
@@ -134,7 +140,7 @@ def dba(
         sums = np.zeros_like(center)
         counts = np.zeros_like(center)
         for s in series:
-            path, _ = _dtw_path(center, s, pattern, band)
+            path = _dtw_path(center, s, pattern, band)
             for i, j in path:
                 sums[i] += s[j]
                 counts[i] += 1

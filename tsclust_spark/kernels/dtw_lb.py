@@ -31,21 +31,7 @@ from typing import Iterator
 import numpy as np
 
 from tsclust_spark.compat.stepattern import PATTERNS
-
-
-def _band_row_ranges(n: int, m: int, radius: int):
-    """Per-row [lo_i, hi_i] of admissible b-columns for a row of ``a``
-    under the Sakoe-Chiba band — the transpose of
-    ``dtw_banded._band_bounds`` (asserted equal to the mask in
-    tests/test_dtw_lb.py)."""
-    i = np.arange(n)
-    if m >= n:
-        lo = np.maximum(0, i - radius)
-        hi = np.minimum(m - 1, i + (m - n) + radius)
-    else:
-        lo = np.maximum(0, i - ((n - m) + radius))
-        hi = np.minimum(m - 1, i + radius)
-    return lo, hi
+from tsclust_spark.kernels.dtw_banded import _band_bounds
 
 
 def keogh_envelope(b: np.ndarray, n: int, radius: int):
@@ -59,7 +45,9 @@ def keogh_envelope(b: np.ndarray, n: int, radius: int):
     """
     b = np.asarray(b, dtype=np.float64).ravel()
     m = b.size
-    lo, hi = _band_row_ranges(n, m, radius)
+    # per-row [lo_i, hi_i] of admissible b-columns: the band's
+    # per-column row bounds with the series swapped
+    lo, hi = _band_bounds(m, n, radius)
     width = int(np.max(hi - lo)) + 1 if n > 0 else 1
     # A fixed-width window covering [lo_i, hi_i] has width-(hi-lo+1)
     # extra cells; rows are only narrower than the interior width where

@@ -19,38 +19,54 @@ from pyspark.sql import functions as F
 
 from tsclust_spark.compat.stepattern import PATTERNS
 from tsclust_spark.kernels.dtw import _accumulate, build_mask, pairwise_cost
+from tsclust_spark.kernels.dtw_banded import dtw_banded_batch
+
+
+# pairs per banded batch: the batch pads each bucket to its longest
+# series, so cap the pairs by the longest length to keep the padded
+# matrices near 32 MB each
+_BATCH_CELLS = 1 << 22
 
 
 def _dtw_dist_matrix(series: list[np.ndarray], pattern_name: str, band: int | None):
-    from tsclust_spark.kernels.dtw_banded import dtw_banded_distance
-
     pattern = PATTERNS[pattern_name]
-    steps = pattern.to_numpy()
     n = len(series)
-    dm = np.zeros((n, n))
-    for i in range(n):
-        for j in range(i + 1, n):
+    iu, ju = np.triu_indices(n, k=1)
+    d = np.empty(iu.size)
+    if band is not None and all(s.ndim == 1 for s in series):
+        # O(n*band) lockstep kernel, bit-identical to dtw_banded_distance
+        # per pair (empty series included)
+        chunk = max(1, _BATCH_CELLS // max([1] + [s.size for s in series]))
+        for c in range(0, iu.size, chunk):
+            d[c : c + chunk] = dtw_banded_batch(
+                [series[i] for i in iu[c : c + chunk]],
+                [series[j] for j in ju[c : c + chunk]],
+                band,
+                "euclidean",
+                pattern,
+            )
+    else:
+        steps = pattern.to_numpy()
+        for p, (i, j) in enumerate(zip(iu, ju)):
             a, b = series[i], series[j]
             if a.size == 0 or b.size == 0:
-                d = 0.0 if a.size == b.size else np.inf
-            elif band is not None and a.ndim == 1 and b.ndim == 1:
-                # O(n*band) kernel — same result as the masked full DP
-                d = dtw_banded_distance(a, b, band, "euclidean", pattern)
-            else:
-                cost = pairwise_cost(a, b, "euclidean")
-                mask = (
-                    build_mask(cost.shape[0], cost.shape[1], "sakoe_chiba", band, None)
-                    if band is not None
-                    else None
-                )
-                D = _accumulate(cost, steps, mask)
-                term = D[-1, -1]
-                d = (
-                    np.inf
-                    if term >= 1e150
-                    else pattern.normalize(float(term), cost.shape[0], cost.shape[1])
-                )
-            dm[i, j] = dm[j, i] = d
+                d[p] = 0.0 if a.size == b.size else np.inf
+                continue
+            cost = pairwise_cost(a, b, "euclidean")
+            mask = (
+                build_mask(cost.shape[0], cost.shape[1], "sakoe_chiba", band, None)
+                if band is not None
+                else None
+            )
+            term = _accumulate(cost, steps, mask)[-1, -1]
+            d[p] = (
+                np.inf
+                if term >= 1e150
+                else pattern.normalize(float(term), cost.shape[0], cost.shape[1])
+            )
+    dm = np.zeros((n, n))
+    dm[iu, ju] = d
+    dm[ju, iu] = d
     return dm
 
 
