@@ -328,3 +328,118 @@ def test_unit_scratch_removed_when_upsert_fails(
     (r,) = Manifest(spark, f"{out}/_manifest").read().collect()
     assert r.status == "failed"
     assert json.loads(r.lineage)["error"] == "RuntimeError: injected in agg_1h"
+
+
+@pytest.mark.spark
+def test_unit_sinks_overlap(spark, seq, tmp_path_factory, monkeypatch):
+    """A unit's raw upsert is still running when its agg_1m upsert
+    starts: the sinks run as overlapping branches, not in sequence."""
+    import threading
+
+    import tsclust_spark.plans.rollup_job as rj
+
+    out = str(tmp_path_factory.mktemp("overlap"))
+    agg_1m_started = threading.Event()
+    raw_saw_agg_1m = []
+    real = rj.upsert_partitioned
+
+    def spy(spark_, target, updates, *args, **kwargs):
+        name = os.path.basename(target)
+        if name == "agg_1m":
+            agg_1m_started.set()
+        elif name == "raw":
+            raw_saw_agg_1m.append(agg_1m_started.wait(20))
+        return real(spark_, target, updates, *args, **kwargs)
+
+    monkeypatch.setattr(rj, "upsert_partitioned", spy)
+    run_rollup(spark, seq, out, n_units=1, write_raw=True)
+    assert raw_saw_agg_1m == [True]
+    assert spark.read.parquet(f"{out}/raw").count() == seq.count()
+
+
+@pytest.mark.spark
+def test_unit_branches_keep_caller_job_group(
+    spark, seq, tmp_path_factory, monkeypatch
+):
+    import tsclust_spark.plans.rollup_job as rj
+
+    out = str(tmp_path_factory.mktemp("jobgroup"))
+    sc = spark.sparkContext
+    seen = []
+    real = rj.upsert_partitioned
+
+    def spy(spark_, target, updates, *args, **kwargs):
+        seen.append((
+            os.path.basename(target),
+            sc.getLocalProperty("spark.jobGroup.id"),
+            sc.getLocalProperty("spark.job.description"),
+        ))
+        return real(spark_, target, updates, *args, **kwargs)
+
+    monkeypatch.setattr(rj, "upsert_partitioned", spy)
+    sc.setJobGroup("rollup-branches", "rollup branch probe")
+    try:
+        run_rollup(spark, seq, out, n_units=2, write_raw=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sorted(t for t, _, _ in seen) == sorted(
+        ["raw", "agg_1m", "agg_1h", "agg_1d"] * 2
+    )
+    for target, group, desc in seen:
+        assert (group, desc) == ("rollup-branches", "rollup branch probe"), target
+
+
+@pytest.mark.spark
+def test_unit_failure_waits_for_every_branch(
+    spark, seq, tmp_path_factory, monkeypatch
+):
+    """The raw upsert fails while the slowed tier upserts run: the unit
+    waits for them before deleting its scratch, then raises the raw
+    error, and the failed unit is recorded once."""
+    import threading
+    import time
+
+    import tsclust_spark.plans.rollup_job as rj
+
+    out = str(tmp_path_factory.mktemp("branchfail"))
+    lock = threading.Lock()
+    events = []
+    tier_started = threading.Event()
+    real_upsert, real_delete = rj.upsert_partitioned, rj._delete_unit_scratch
+
+    def log(*event):
+        with lock:
+            events.append(event)
+
+    def spy(spark_, target, updates, *args, **kwargs):
+        name = os.path.basename(target)
+        if name == "raw":
+            tier_started.wait(20)
+            raise RuntimeError("injected in raw")
+        log("start", name)
+        tier_started.set()
+        try:
+            time.sleep(1.0)
+            return real_upsert(spark_, target, updates, *args, **kwargs)
+        finally:
+            log("end", name)
+
+    def delete(spark_, work):
+        log("delete", os.path.basename(work))
+        real_delete(spark_, work)
+
+    monkeypatch.setattr(rj, "upsert_partitioned", spy)
+    monkeypatch.setattr(rj, "_delete_unit_scratch", delete)
+    with pytest.raises(RuntimeError, match="injected in raw"):
+        run_rollup(spark, seq, out, n_units=2, write_raw=True)
+
+    started = {e[1] for e in events if e[0] == "start"}
+    assert started, "no tier upsert started beside the raw branch"
+    deleted_at = [e[0] for e in events].index("delete")
+    for tier in started:
+        assert events.index(("end", tier)) < deleted_at, tier
+    assert not os.path.exists(f"{out}/_work")
+    (r,) = Manifest(spark, f"{out}/_manifest").read().collect()
+    assert r.status == "failed"
+    assert json.loads(r.lineage)["error"] == "RuntimeError: injected in raw"

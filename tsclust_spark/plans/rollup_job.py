@@ -3,18 +3,25 @@
 
 Unit of work = ``pmod(hash(doc_id), n_units)`` slice. The input is
 staged ONCE into a unit-partitioned layout (or is already one, on
-Iceberg ``bucket(doc_id, N)``) so per-unit scans prune. Per unit:
+Iceberg ``bucket(doc_id, N)``) so per-unit scans prune. Units run one
+after another. Per unit:
 
-1. scan the unit's partition of the staged table (C1/C10)
-2. Gorilla-compress each row -> ``raw`` retention tier (C23/C24)
+1. scan the unit's partition of the staged table (C1/C10) and count
+   its rows and points
+2. raw branch: Gorilla-compress each row -> ``raw`` retention tier
+   (C23/C24), running beside step 3
 3. map-only 1m tier (Arrow kernel, C16/C17) with exact sums and a
    lower-medoid ``rep_value`` per window (C27), written ONCE to the
    unit-scoped scratch parquet ``{out_dir}/_work/unit=<u>``
-4. 1h/1d cascade (medoid-of-medoids) read from that scratch, so the
-   scan and the 1m kernel run once per unit, not once per tier
-5. MERGE each tier into its partitioned target (C3), partitions
-   ``(unit, bucket_date)`` so units never touch each other's files;
-   the scratch is deleted on success and on failure
+4. once the scratch is written, three tier branches run together:
+   1m as is, and the 1h/1d cascade (medoid-of-medoids), each read
+   from the scratch only, so the scan and the 1m kernel run once per
+   unit, not once per tier
+5. every branch MERGEs into its partitioned target (C3), partitions
+   ``(unit, bucket_date)`` so units and targets never touch each
+   other's files. A failing branch does not cancel the others: the
+   unit waits for all of them, deletes the scratch, then raises the
+   first failure in pipeline order (raw, 1m, 1h, 1d)
 6. append a manifest record with lineage + points/sec (C4), or, for a
    failed unit, the error in its lineage
 
@@ -26,7 +33,9 @@ sequence of runs (asserted by tests/test_resume.py).
 from __future__ import annotations
 
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -154,6 +163,92 @@ def _delete_unit_scratch(spark: SparkSession, work: str) -> None:
         fs.delete(parent, False)
 
 
+def _upsert_raw(
+    spark: SparkSession,
+    part: DataFrame,
+    unit: int,
+    out_dir: str,
+    t0_epoch: int,
+    step_seconds: int,
+) -> None:
+    """The raw branch: Gorilla-compress the unit's rows and merge them
+    into ``{out_dir}/raw``."""
+    # bucket_date = date of the block's LAST point (t0 + (n-1)*step):
+    # the raw retention policy drops a block only once its newest
+    # point ages past the cutoff. Without this date partition the
+    # raw tier was un-expirable (retention silently no-opped).
+    blocks = (
+        compress_sequences(part, t0_epoch, step_seconds)
+        .withColumn("unit", F.lit(unit))
+        .withColumn(
+            "bucket_date",
+            F.to_date(
+                F.timestamp_seconds(
+                    F.col("t0")
+                    + (F.greatest(F.col("n"), F.lit(1)) - 1)
+                    * F.lit(step_seconds)
+                )
+            ),
+        )
+    )
+    # prune on unit only: bucket_date is data-derived (a re-ingested
+    # doc's block can END on a different date), so full-tuple pruning
+    # would leave the doc's old blob stranded in the old date
+    # partition as a stale duplicate. unit IS a pure function of
+    # doc_id, so unit-level pruning merges every partition the key
+    # could occupy.
+    upsert_partitioned(
+        spark,
+        f"{out_dir}/raw",
+        blocks,
+        key_cols=["doc_id"],
+        partition_cols=["unit", "bucket_date"],
+        prune_cols=["unit"],
+    )
+
+
+def _write_scratch(
+    spark: SparkSession,
+    part: DataFrame,
+    work: str,
+    t0_epoch: int,
+    step_seconds: int,
+) -> DataFrame:
+    """Write the unit's 1m tier once to its scratch ``work`` and return
+    the scratch read back."""
+    import datetime as _dt
+
+    t0_str = _dt.datetime.fromtimestamp(
+        t0_epoch, _dt.timezone.utc
+    ).strftime("%Y-%m-%d %H:%M:%S")
+    tier_1m = build_tiers_from_sequences(
+        part, t0=t0_str, step_seconds=step_seconds
+    )["1m"]
+    tier_1m.write.mode("overwrite").parquet(work)
+    # the known schema spares the footer-inference job of a bare read
+    return spark.read.schema(tier_1m.schema).parquet(work)
+
+
+def _upsert_tier(
+    spark: SparkSession, scratch: DataFrame, unit: int, out_dir: str, tier: str
+) -> None:
+    """A tier branch: cascade ``tier`` from the 1m scratch and merge it
+    into ``{out_dir}/agg_<tier>``."""
+    tier_df = scratch
+    for step in TIER_ORDER[1 : TIER_ORDER.index(tier) + 1]:
+        tier_df = _cascade_with_rep(tier_df, step)
+    out = tier_df.withColumn("unit", F.lit(unit)).withColumn(
+        "bucket_date", F.to_date("bucket_ts")
+    )
+    upsert_partitioned(
+        spark,
+        f"{out_dir}/agg_{tier}",
+        out,
+        key_cols=TIER_KEYS,
+        partition_cols=["unit", "bucket_date"],
+    )
+
+
 def run_unit(
     spark: SparkSession,
     seq: DataFrame,
@@ -171,6 +266,17 @@ def run_unit(
     scan of that unit's files only; otherwise it falls back to the
     ``pmod(hash(doc_id))`` predicate, which cannot prune and re-scans
     the full input per unit (fine for one unit, ruinous for many).
+
+    Once the unit's row and point count is known, its sinks run as
+    overlapping branches on a thread pool named ``rollup-unit-<u>``:
+    the raw branch (compress, then the ``raw`` upsert) runs beside the
+    1m scratch write, and once the scratch is written the ``agg_1m``,
+    ``agg_1h`` and ``agg_1d`` upserts run together, each reading only
+    the scratch. Every branch runs its jobs under the caller's job
+    group and description. A failing branch does not cancel the
+    others: the unit waits for every branch, deletes the scratch, then
+    raises the first failure in pipeline order (raw, 1m, 1h, 1d), so
+    the caller records a failed unit once and retries it whole.
     """
     if "unit" in seq.columns:
         part = seq.filter(F.col("unit") == unit).drop("unit")
@@ -183,73 +289,42 @@ def run_unit(
     if rows == 0:
         return 0, 0
 
-    if write_raw:
-        # bucket_date = date of the block's LAST point (t0 + (n-1)*step):
-        # the raw retention policy drops a block only once its newest
-        # point ages past the cutoff. Without this date partition the
-        # raw tier was un-expirable (retention silently no-opped).
-        blocks = (
-            compress_sequences(part, t0_epoch, step_seconds)
-            .withColumn("unit", F.lit(unit))
-            .withColumn(
-                "bucket_date",
-                F.to_date(
-                    F.timestamp_seconds(
-                        F.col("t0")
-                        + (F.greatest(F.col("n"), F.lit(1)) - 1)
-                        * F.lit(step_seconds)
-                    )
-                ),
-            )
-        )
-        # prune on unit only: bucket_date is data-derived (a re-ingested
-        # doc's block can END on a different date), so full-tuple pruning
-        # would leave the doc's old blob stranded in the old date
-        # partition as a stale duplicate. unit IS a pure function of
-        # doc_id, so unit-level pruning merges every partition the key
-        # could occupy.
-        upsert_partitioned(
-            spark,
-            f"{out_dir}/raw",
-            blocks,
-            key_cols=["doc_id"],
-            partition_cols=["unit", "bucket_date"],
-            prune_cols=["unit"],
-        )
-
-    import datetime as _dt
-
-    t0_str = _dt.datetime.fromtimestamp(
-        t0_epoch, _dt.timezone.utc
-    ).strftime("%Y-%m-%d %H:%M:%S")
     # the unit's 1m tier is materialized ONCE to a unit-scoped scratch
     # parquet and every tier upsert reads it back: otherwise each upsert
     # re-runs the unit's scan and the Arrow 1m kernel under its cascade
     # (three kernel passes per unit). The scratch lives and dies inside
     # this unit, so nothing is reused across units or runs.
     work = f"{out_dir}/_work/unit={unit}"
+    branches: list[Future] = []
     try:
-        tier_1m = build_tiers_from_sequences(
-            part, t0=t0_str, step_seconds=step_seconds
-        )["1m"]
-        tier_1m.write.mode("overwrite").parquet(work)
-        # the known schema spares the footer-inference job of a bare read
-        tier_df = spark.read.schema(tier_1m.schema).parquet(work)
-        for tier in TIER_ORDER:
-            if tier != "1m":
-                tier_df = _cascade_with_rep(tier_df, tier)
-            out = tier_df.withColumn("unit", F.lit(unit)).withColumn(
-                "bucket_date", F.to_date("bucket_ts")
+        with ThreadPoolExecutor(
+            max_workers=len(TIER_ORDER) + write_raw,
+            thread_name_prefix=f"rollup-unit-{unit}",
+        ) as pool:
+
+            def submit(fn, *args) -> Future:
+                # wrapped per branch: each gets its own copy of the
+                # caller's local properties (job group, description)
+                return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+            if write_raw:
+                branches.append(submit(
+                    _upsert_raw, spark, part, unit, out_dir, t0_epoch, step_seconds
+                ))
+            scratch = submit(
+                _write_scratch, spark, part, work, t0_epoch, step_seconds
             )
-            upsert_partitioned(
-                spark,
-                f"{out_dir}/agg_{tier}",
-                out,
-                key_cols=TIER_KEYS,
-                partition_cols=["unit", "bucket_date"],
-            )
+            branches.append(scratch)
+            if scratch.exception() is None:
+                branches += [
+                    submit(_upsert_tier, spark, scratch.result(), unit, out_dir, tier)
+                    for tier in TIER_ORDER
+                ]
+            # leaving the pool waits for every branch
     finally:
         _delete_unit_scratch(spark, work)
+    for branch in branches:
+        branch.result()  # raises the first failure in pipeline order
     return rows, points_n
 
 
