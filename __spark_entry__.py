@@ -1354,15 +1354,17 @@ WHERE len(hits) > 0
 
 def _q_dtw_selfcheck(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C26/C13 hash-gate: per pair of a bounded block, (a) the O(n·band)
-    banded DTW kernel (lockstep-batched DP, kernels/dtw_banded.py) must
-    agree with the masked full-DP recurrence, and (b) the LB_Keogh
-    pruning invariants must hold (bound <= distance; pruning at eps
-    loses nothing) — emitted as booleans so the DuckDB oracle is the
-    constant-true pair table (the codec_roundtrip trick). One gate
-    covers both round-5-touched kernels (dtw_banded.py + dtw_lb.py);
-    the former separate gate `dtw_pruned_check` (r4 hash-green) asserts
-    a subset of these booleans. Distance/bound VALUES are oracled in
-    pytest against the pure-numpy DP and brute-force envelopes
+    banded DTW batch kernel (`dtw_banded_batch`, kernels/dtw_banded.py:
+    one lockstep kernel over constant-shift band lanes, bit-identical
+    to the scalar `dtw_banded_distance`) must agree with the masked
+    full-DP recurrence, and (b) the LB_Keogh pruning invariants must
+    hold (bound <= distance; pruning at eps loses nothing), with the
+    bounds from `dtw_lb.lb_keogh_pairs` — emitted as booleans so the
+    DuckDB oracle is the constant-true pair table (the codec_roundtrip
+    trick). One gate covers both kernels (dtw_banded.py + dtw_lb.py);
+    the separate gate `dtw_pruned_check` asserts a subset of these
+    booleans. Distance/bound VALUES are oracled in pytest against the
+    scalar banded DP, the pure-numpy full DP and brute-force envelopes
     (tests/test_dtw.py, tests/test_dtw_lb.py)."""
     from tsclust_spark.kernels.dtw import dtw_selfcheck
 

@@ -55,11 +55,11 @@ def test_kmedoids_separated_clusters():
 def test_dtw_dist_matrix_equals_scalar_kernel(monkeypatch, batch_cells):
     """The batched matrix equals the scalar banded kernel per pair, bit
     for bit, on a ragged block with empty series; a small cell budget
-    splits the pairs over several batches."""
+    splits the pairs over several kernel buckets."""
+    from tsclust_spark.kernels import dtw_banded
     from tsclust_spark.kernels.dtw_banded import dtw_banded_distance
-    from tsclust_spark.operators import cluster
 
-    monkeypatch.setattr(cluster, "_BATCH_CELLS", batch_cells)
+    monkeypatch.setattr(dtw_banded, "_BUCKET_CELLS", batch_cells)
     rng = np.random.default_rng(7)
     series = [rng.normal(size=n) for n in (0, 1, 3, 17, 0, 40, 8, 8, 25, 2)]
     dm = _dtw_dist_matrix(series, "symmetric2", band=3)

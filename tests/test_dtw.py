@@ -427,13 +427,13 @@ def test_metric_degenerate_rows_defined_not_nan():
 
 
 def test_lockstep_bit_identical_to_scalar_kernel():
-    """dtw_banded_lockstep is the scalar column DP with a leading batch
-    axis — every numpy op in the same order per cell, so the results
-    must be BIT-identical (not just close) across patterns, metrics,
-    shapes (n<m, n>m, n=m, tiny), and radii."""
+    """dtw_banded_batch is the scalar column DP run in lockstep over a
+    batch axis — every numpy op in the same order per cell, so the
+    results must be BIT-identical (not just close) across patterns,
+    metrics, shapes (n<m, n>m, n=m, tiny), and radii."""
     from tsclust_spark.kernels.dtw_banded import (
+        dtw_banded_batch,
         dtw_banded_distance,
-        dtw_banded_lockstep,
     )
 
     rng = np.random.default_rng(42)
@@ -444,7 +444,7 @@ def test_lockstep_bit_identical_to_scalar_kernel():
                     A = rng.normal(size=(8, n))
                     B = rng.normal(size=(8, m))
                     try:
-                        got = dtw_banded_lockstep(A, B, radius, metric, pat)
+                        got = dtw_banded_batch(list(A), list(B), radius, metric, pat)
                     except NotImplementedError:
                         continue
                     ref = np.array(
@@ -484,12 +484,13 @@ def test_lockstep_batch_ragged_and_empty():
 
 
 def test_ragged_lockstep_group_bit_identical():
-    """_ragged_lockstep_group (per-pair band geometry, shift-aligned
-    lanes) must be BIT-identical to the scalar kernel across patterns,
-    metrics, radii, and extreme length skew — every float op per cell
-    runs in the same order, so equality is exact, not approximate."""
+    """dtw_banded_batch on pairs of mixed lengths (per-pair band
+    geometry, constant-shift lanes) must be BIT-identical to the scalar
+    kernel across patterns, metrics, radii, and extreme length skew —
+    every float op per cell runs in the same order, so equality is
+    exact, not approximate."""
     from tsclust_spark.kernels.dtw_banded import (
-        _ragged_lockstep_group,
+        dtw_banded_batch,
         dtw_banded_distance,
     )
     from tsclust_spark.compat.stepattern import PATTERNS
@@ -503,17 +504,14 @@ def test_ragged_lockstep_group_bit_identical():
                 n_arr[0], m_arr[0] = 1, 299      # extreme skew
                 n_arr[1], m_arr[1] = 299, 1
                 n_arr[2], m_arr[2] = 1, 1
-                A = np.zeros((48, int(n_arr.max())))
-                B = np.zeros((48, int(m_arr.max())))
                 arrs = []
                 for i in range(48):
                     a = rng.normal(size=int(n_arr[i]))
                     b = rng.normal(size=int(m_arr[i]))
-                    A[i, : n_arr[i]] = a
-                    B[i, : m_arr[i]] = b
                     arrs.append((a, b))
-                got = _ragged_lockstep_group(
-                    A, n_arr, B, m_arr, radius, metric, PATTERNS[pat]
+                got = dtw_banded_batch(
+                    [a for a, _ in arrs], [b for _, b in arrs],
+                    radius, metric, PATTERNS[pat],
                 )
                 ref = np.array(
                     [
@@ -527,15 +525,15 @@ def test_ragged_lockstep_group_bit_identical():
 
 def test_batch_routes_fragmented_shapes_through_ragged_kernel():
     """A batch whose shapes all differ (the real-corpus case) must pool
-    into ragged buckets — and still match the scalar kernel exactly."""
+    into shared buckets — and still match the scalar kernel exactly."""
     from tsclust_spark.kernels.dtw_banded import (
         dtw_banded_batch,
         dtw_banded_distance,
     )
 
     rng = np.random.default_rng(13)
-    # 80 pairs, every (len_a, len_b) distinct -> zero exact groups of
-    # >= _RAGGED_MIN_EXACT, everything rides the ragged path
+    # 80 pairs, every (len_a, len_b) distinct: no two pairs share a
+    # shape, so every bucket mixes lengths
     lens = rng.permutation(np.arange(40, 200))[:160]
     a_list = [rng.normal(size=int(l)) for l in lens[:80]]
     b_list = [rng.normal(size=int(l)) for l in lens[80:]]
@@ -552,10 +550,10 @@ def test_batch_routes_fragmented_shapes_through_ragged_kernel():
 def test_ragged_lockstep_radius_zero_and_degenerate_series():
     """radius=0 (pure diagonal band) and degenerate inputs — constant
     series, a single point, identical ramps (zero local cost along the
-    whole path) — must stay bit-identical between the ragged lockstep
+    whole path) — must stay bit-identical between the lockstep batch
     kernel and the scalar DP. Deterministic fixture, seeded."""
     from tsclust_spark.kernels.dtw_banded import (
-        _ragged_lockstep_group,
+        dtw_banded_batch,
         dtw_banded_distance,
     )
     from tsclust_spark.compat.stepattern import PATTERNS
@@ -568,17 +566,11 @@ def test_ragged_lockstep_radius_zero_and_degenerate_series():
     cases.append((np.ones(20), np.ones(20)))          # constant equal
     cases.append((np.zeros(1), np.zeros(1)))          # single point
     cases.append((np.arange(30.0), np.arange(30.0)))  # identical ramps
-    n_arr = np.array([len(a) for a, _ in cases], dtype=np.int64)
-    m_arr = np.array([len(b) for _, b in cases], dtype=np.int64)
-    A = np.zeros((len(cases), int(n_arr.max())))
-    B = np.zeros((len(cases), int(m_arr.max())))
-    for i, (a, b) in enumerate(cases):
-        A[i, : len(a)] = a
-        B[i, : len(b)] = b
     for radius in (0, 2):
         for pat in ("symmetric2", "asymmetric"):
-            got = _ragged_lockstep_group(
-                A, n_arr, B, m_arr, radius, "euclidean", PATTERNS[pat]
+            got = dtw_banded_batch(
+                [a for a, _ in cases], [b for _, b in cases],
+                radius, "euclidean", PATTERNS[pat],
             )
             ref = np.array(
                 [
@@ -590,3 +582,168 @@ def test_ragged_lockstep_radius_zero_and_degenerate_series():
             assert same.all(), (radius, pat, np.where(~same))
             # identical series cost exactly 0 under any band
             assert got[-1] == 0.0 and got[-2] == 0.0 and got[-3] == 0.0
+
+
+def test_batch_memory_bounded_by_input():
+    """One long pair in a batch of short ones: the kernel's transient
+    memory follows the input, not (pairs x longest series). 2,048 pairs
+    of two 40-200-point series of one length (so every band has the
+    long pair's width) plus one 20,000-point pair stay under 64 MB."""
+    import tracemalloc
+
+    from tsclust_spark.kernels.dtw_banded import (
+        dtw_banded_batch,
+        dtw_banded_distance,
+    )
+
+    rng = np.random.default_rng(3)
+    a_list = [rng.normal(size=int(rng.integers(40, 201))) for _ in range(2048)]
+    b_list = [rng.normal(size=a.size) for a in a_list]
+    a_list.append(rng.normal(size=20000))
+    b_list.append(rng.normal(size=20000))
+    tracemalloc.start()
+    try:
+        got = dtw_banded_batch(a_list, b_list, 8, "euclidean", "symmetric2")
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 * 2**20, peak
+    for r in (2048, 0, 1, 1000, 2047):
+        want = dtw_banded_distance(a_list[r], b_list[r], 8, "euclidean", "symmetric2")
+        assert got[r] == want, r
+
+
+def test_batch_result_independent_of_batch_company():
+    """A pair's distance does not depend on what else is in its batch:
+    a fixed set of pairs (skewed lengths, NaN tokens) gives the same
+    bits alone, inside a uniform batch, beside a long outlier and beside
+    NaN-token pairs, at radius 8 and 0, for every step pattern — and
+    equals the scalar kernel."""
+    from tsclust_spark.kernels.dtw_banded import (
+        dtw_banded_batch,
+        dtw_banded_distance,
+    )
+
+    rng = np.random.default_rng(17)
+    lens = [(30, 30), (12, 45), (45, 12), (1, 20), (20, 1), (1, 1), (60, 58), (40, 44)]
+    fixed = [(rng.normal(size=n), rng.normal(size=m)) for n, m in lens]
+    # NaN tokens: at a[0] of a pair with n < m (the first cell of the
+    # terminal diagonal, which no step reaches under rigid), at the last
+    # point of b, and inside a
+    for i, side, pos in ((7, 0, 0), (1, 0, 0), (4, 1, -1), (6, 0, 29)):
+        fixed.append((fixed[i][0].copy(), fixed[i][1].copy()))
+        fixed[-1][side][pos] = np.nan
+    uniform = [(rng.normal(size=40), rng.normal(size=40)) for _ in range(300)]
+    outlier = [(rng.normal(size=3000), rng.normal(size=2900))]
+    nan_pairs = [(rng.normal(size=25), rng.normal(size=35)) for _ in range(20)]
+    for a, b in nan_pairs:
+        a[rng.integers(0, a.size)] = np.nan
+        b[0] = np.nan
+    k = len(fixed)
+    for pat in ("symmetric1", "symmetric2", "asymmetric", "rigid"):
+        for radius in (8, 0):
+            def run(pairs):
+                return dtw_banded_batch(
+                    [a for a, _ in pairs], [b for _, b in pairs],
+                    radius, "euclidean", pat,
+                )
+
+            alone = run(fixed)
+            ref = np.array(
+                [dtw_banded_distance(a, b, radius, "euclidean", pat) for a, b in fixed]
+            )
+            assert np.array_equal(alone, ref, equal_nan=True), (pat, radius)
+            mixed = uniform[:150] + fixed + uniform[150:]
+            company = {
+                "uniform": run(mixed)[150 : 150 + k],
+                "outlier": run(outlier + fixed)[1:],
+                "nan": run(fixed + nan_pairs)[:k],
+            }
+            for name, got in company.items():
+                assert np.array_equal(got, alone, equal_nan=True), (pat, radius, name)
+
+
+@pytest.mark.parametrize("radius", [-1, 2.5])
+def test_bad_radius_rejected_by_every_kernel(radius):
+    """A Sakoe-Chiba radius that is not a non-negative integer is a
+    ValueError naming it, from the generic and the banded kernels alike
+    (-1 used to give inf or a raw IndexError; 2.5 ran as radius 2 in
+    one kernel and as radius 3 in the other)."""
+    import re
+
+    from tsclust_spark.kernels.dtw_banded import (
+        dtw_banded_batch,
+        dtw_banded_distance,
+    )
+
+    a, b = np.arange(6.0), np.arange(7.0)
+    calls = (
+        lambda: resolve_constraint("sakoe_chiba", radius, None),
+        lambda: dtw_distance(a, b, sakoe_chiba_radius=radius),
+        lambda: dtw_path_from_metric(a, b, sakoe_chiba_radius=radius),
+        lambda: dtw_banded_distance(a, b, radius),
+        lambda: dtw_banded_batch([a], [b], radius),
+    )
+    for call in calls:
+        with pytest.raises(ValueError, match=re.escape(repr(radius))):
+            call()
+
+
+def test_integral_float_radius_runs_as_int_and_unused_radius_is_free():
+    """2.0 is radius 2 in every kernel; a radius that no band uses
+    (Itakura, or both constraints set) is not checked."""
+    from tsclust_spark.kernels.dtw_banded import (
+        dtw_banded_batch,
+        dtw_banded_distance,
+    )
+
+    rng = np.random.default_rng(3)
+    a, b = rng.normal(size=9), rng.normal(size=12)
+    for r in (2.0, np.float64(2.0)):
+        assert resolve_constraint("sakoe_chiba", r, None)[1] == 2
+        assert dtw_distance(a, b, sakoe_chiba_radius=r) == dtw_distance(
+            a, b, sakoe_chiba_radius=2
+        )
+        assert dtw_banded_distance(a, b, r) == dtw_banded_distance(a, b, 2)
+        assert dtw_banded_batch([a], [b], r)[0] == dtw_banded_distance(a, b, 2)
+    assert resolve_constraint("itakura", -1, None)[0] == "itakura"
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        assert resolve_constraint(None, 2.5, 3.0)[0] is None
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("radius", [-1, 2.5])
+def test_bad_radius_rejected_on_driver(spark, radius):
+    """dtw_pairs (with and without paths), dtw_pairs_pruned and
+    dtw_distance_matrix (both plans) reject a bad radius on the driver,
+    before any Spark job runs."""
+    import re
+
+    from tsclust_spark.kernels.dtw import dtw_distance_matrix, dtw_pairs
+    from tsclust_spark.kernels.dtw_lb import dtw_pairs_pruned
+
+    docs = spark.createDataFrame(
+        [("a", [1.0, 2.0]), ("b", [2.0, 3.0, 1.0])], "doc_id string, tokens array<double>"
+    )
+    pairs = spark.createDataFrame(
+        [("a", "b", [1.0, 2.0], [2.0, 3.0, 1.0])],
+        "id_a string, id_b string, tokens_a array<double>, tokens_b array<double>",
+    )
+    calls = (
+        lambda: dtw_pairs(pairs, sakoe_chiba_radius=radius),
+        lambda: dtw_pairs(pairs, sakoe_chiba_radius=radius, with_path=True),
+        lambda: dtw_pairs_pruned(pairs, eps=1.0, sakoe_chiba_radius=radius),
+        lambda: dtw_distance_matrix(docs, sakoe_chiba_radius=radius),
+        lambda: dtw_distance_matrix(docs, repartition=2, sakoe_chiba_radius=radius),
+    )
+    sc = spark.sparkContext
+    group = f"bad-radius-{radius}"
+    sc.setJobGroup(group, group)
+    try:
+        for call in calls:
+            with pytest.raises(ValueError, match=re.escape(repr(radius))):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -1,71 +1,112 @@
-"""Pure-numpy microbenchmark for the banded-DTW batch kernels.
+"""Pure-numpy microbenchmark for the banded-DTW batch kernel.
 
-Replicates the dtw_block_512 bench mix (512 docs, lengths
-min(U[64,512), 256), radius 8, symmetric2/euclidean) without Spark:
-one task's worth of pairs (~2048) through dtw_banded_batch, plus a
-correctness sweep vs the scalar kernel. Run:
+Times ``dtw_banded_batch`` (radius 8, symmetric2, euclidean) on three
+batch shapes, without Spark:
 
-    python tools/dtw_microbench.py [pairs_per_batch] [n_batches]
+- ``serve``: the serve workload's DTW block, 63 walks of U[64,256]
+  points plus one of U[512,640], all 2,016 pairs in 8 batches;
+- ``block512``: the bench ``dtw_block_512`` mix, 512 walks of
+  min(U[64,512), 256) points, 2,048 random pairs per batch, 4 batches;
+- ``uniform``: 2,048 pairs of 256-point walks in one batch.
+
+For each shape it asserts that every distance is bit-identical to the
+scalar ``dtw_banded_distance``, prints the best wall of ``REPS`` runs
+and the ``tracemalloc`` peak of one more run. Run from the repo root:
+
+    python tools/dtw_microbench.py
 """
 from __future__ import annotations
 
+import os
 import sys
 import time
+import tracemalloc
 
 import numpy as np
 
-sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.dirname(__import__("os").path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tsclust_spark.kernels.dtw_banded import (  # noqa: E402
     dtw_banded_batch,
     dtw_banded_distance,
 )
 
+ARGS = (8, "euclidean", "symmetric2")
+REPS = 5
 
-def make_docs(n_docs: int = 512, seed: int = 42):
-    rng = np.random.default_rng(seed)
-    lengths = np.minimum(rng.integers(64, 512, size=n_docs), 256)
-    docs = []
-    for ln in lengths:
-        steps = rng.integers(-3, 4, size=int(ln))
-        docs.append(np.clip(np.cumsum(steps) + 1000, 0, 50257).astype(np.float64))
-    return docs
+
+def walk(rng, n: int) -> np.ndarray:
+    steps = rng.integers(-3, 4, size=int(n))
+    return np.clip(np.cumsum(steps) + 1000, 0, 50257).astype(np.float64)
+
+
+def serve_batches():
+    rng = np.random.default_rng(101)
+    docs = [walk(rng, rng.integers(64, 257)) for _ in range(63)]
+    docs.append(walk(rng, rng.integers(512, 641)))
+    ia, ib = np.triu_indices(len(docs), 1)
+    perm = rng.permutation(ia.size)
+    return [
+        ([docs[i] for i in ia[part]], [docs[j] for j in ib[part]])
+        for part in np.array_split(perm, 8)
+    ]
+
+
+def block512_batches():
+    rng = np.random.default_rng(42)
+    docs = [walk(rng, n) for n in np.minimum(rng.integers(64, 512, size=512), 256)]
+    out = []
+    for _ in range(4):
+        ia = rng.integers(0, len(docs), size=2048)
+        ib = rng.integers(0, len(docs), size=2048)
+        out.append(([docs[i] for i in ia], [docs[j] for j in ib]))
+    return out
+
+
+def uniform_batches():
+    rng = np.random.default_rng(7)
+    return [
+        ([walk(rng, 256) for _ in range(2048)], [walk(rng, 256) for _ in range(2048)])
+    ]
+
+
+SHAPES = {
+    "serve": serve_batches,
+    "block512": block512_batches,
+    "uniform": uniform_batches,
+}
+
+
+def run(batches) -> list[np.ndarray]:
+    return [dtw_banded_batch(a, b, *ARGS) for a, b in batches]
 
 
 def main():
-    batch = int(sys.argv[1]) if len(sys.argv) > 1 else 2048
-    n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    docs = make_docs()
-    rng = np.random.default_rng(0)
-    n_docs = len(docs)
-
-    # correctness spot check on 300 random pairs
-    ia = rng.integers(0, n_docs, size=300)
-    ib = rng.integers(0, n_docs, size=300)
-    a_l = [docs[i] for i in ia]
-    b_l = [docs[i] for i in ib]
-    got = dtw_banded_batch(a_l, b_l, 8, "euclidean", "symmetric2")
-    ref = np.array(
-        [dtw_banded_distance(a, b, 8, "euclidean", "symmetric2") for a, b in zip(a_l, b_l)]
-    )
-    assert np.array_equal(got, ref), np.where(got != ref)
-    print("correctness: OK (300 pairs bit-identical)")
-
-    # timing: n_batches batches of `batch` random pairs
-    walls = []
-    for bi in range(n_batches):
-        ia = rng.integers(0, n_docs, size=batch)
-        ib = rng.integers(0, n_docs, size=batch)
-        a_l = [docs[i] for i in ia]
-        b_l = [docs[i] for i in ib]
-        t0 = time.time()
-        dtw_banded_batch(a_l, b_l, 8, "euclidean", "symmetric2")
-        walls.append(time.time() - t0)
-    best = min(walls)
-    print(
-        f"batch={batch}: best {best:.3f}s = {batch / best:,.0f} pairs/s/core "
-        f"(walls: {[round(w, 3) for w in walls]})"
-    )
+    for name, make in SHAPES.items():
+        batches = make()
+        pairs = sum(len(a) for a, _ in batches)
+        got = np.concatenate(run(batches))
+        want = np.array(
+            [dtw_banded_distance(x, y, *ARGS) for a, b in batches for x, y in zip(a, b)]
+        )
+        assert np.array_equal(got, want), (name, np.flatnonzero(got != want)[:10])
+        walls = []
+        for _ in range(REPS):
+            t0 = time.perf_counter()
+            run(batches)
+            walls.append(time.perf_counter() - t0)
+        tracemalloc.start()
+        run(batches)
+        peak = tracemalloc.get_traced_memory()[1]
+        tracemalloc.stop()
+        best = min(walls)
+        print(
+            f"{name}: {pairs} pairs in {len(batches)} batches, bit-identical; "
+            f"best {best:.3f}s ({pairs / best:,.0f} pairs/s), "
+            f"walls {[round(w, 3) for w in walls]}, "
+            f"tracemalloc peak {peak / 2**20:.1f} MB",
+            flush=True,
+        )
 
 
 if __name__ == "__main__":

@@ -28,6 +28,7 @@ from typing import Callable, Iterator
 import numpy as np
 
 from tsclust_spark.compat.stepattern import PATTERNS, StepPattern, symmetric1
+from tsclust_spark.kernels.dtw_banded import check_radius
 
 BIG = 1e300  # finite "unreachable" sentinel: avoids inf-inf -> nan in scans
 
@@ -251,6 +252,9 @@ def resolve_constraint(
     - exactly one parameter set and no explicit constraint -> inferred;
     - both parameters set and no explicit constraint -> RuntimeWarning
       and NO constraint.
+
+    When the Sakoe-Chiba band is in use, a radius that is not a
+    non-negative integer raises ValueError.
     """
     if global_constraint is not None and global_constraint not in (
         "sakoe_chiba",
@@ -268,7 +272,9 @@ def resolve_constraint(
             global_constraint = "sakoe_chiba"
         elif itakura_max_slope is not None:
             global_constraint = "itakura"
-    radius = 1 if sakoe_chiba_radius is None else int(sakoe_chiba_radius)
+    radius = 1
+    if global_constraint == "sakoe_chiba" and sakoe_chiba_radius is not None:
+        radius = check_radius(sakoe_chiba_radius)
     slope = 2.0 if itakura_max_slope is None else float(itakura_max_slope)
     return global_constraint, radius, slope
 
@@ -514,6 +520,10 @@ def dtw_pairs(
     pattern = PATTERNS[pattern_name]
     steps = pattern.to_numpy()
     schema = DTW_PAIR_SCHEMA if with_path else DTW_DIST_SCHEMA
+    # resolved on the driver, so a bad band radius fails before any job
+    radius = resolve_constraint(
+        global_constraint, sakoe_chiba_radius, itakura_max_slope
+    )[1]
     # O(n*band) fast path: distance-only 1-D alignments under a
     # Sakoe-Chiba band skip the full (n, m) matrices entirely
     use_banded = (
@@ -537,12 +547,9 @@ def dtw_pairs(
             else:
                 a_col = pdf["tokens_a"].to_numpy()
                 b_col = pdf["tokens_b"].to_numpy()
-            # lockstep fast path: every banded-eligible 1-D pair in the
-            # Arrow batch runs through one shape-grouped batch DP
-            # (dtw_banded_batch) instead of a per-row Python loop —
-            # bit-identical to the scalar kernel, ~40x/core on uniform
-            # 256-pt pairs.  Non-1-D / path-extracting rows fall through
-            # to the full DP below.
+            # the banded-eligible 1-D rows run through dtw_banded_batch,
+            # bit-identical to the scalar kernel; non-1-D /
+            # path-extracting rows fall through to the full DP below.
             banded_rows: list[int] = []
             if use_banded:
                 banded_a: list[np.ndarray] = []
@@ -558,7 +565,7 @@ def dtw_pairs(
                     dists[banded_rows] = dtw_banded_batch(
                         banded_a,
                         banded_b,
-                        radius=1 if sakoe_chiba_radius is None else sakoe_chiba_radius,
+                        radius=radius,
                         metric=metric,
                         step_pattern=pattern,
                     )
@@ -656,6 +663,12 @@ def dtw_distance_matrix(
         # goes to the JVM through Arrow, with no Python worker.
         import pandas as pd
 
+        # dtw_pairs' driver-side check, before this scan runs a job
+        resolve_constraint(
+            dtw_kwargs.get("global_constraint", "sakoe_chiba"),
+            dtw_kwargs.get("sakoe_chiba_radius", 1),
+            dtw_kwargs.get("itakura_max_slope"),
+        )
         tok_pdf = left.toPandas()  # one scan of the (bounded) block
         toks = {
             i: np.asarray(t, dtype=np.float64)
@@ -704,6 +717,7 @@ def dtw_selfcheck(
 
     pattern = PATTERNS[pattern_name]
     steps = pattern.to_numpy()
+    sakoe_chiba_radius = check_radius(sakoe_chiba_radius)
 
     left = df.select(
         F.col(id_col).cast("string").alias("id_a"),
@@ -719,7 +733,7 @@ def dtw_selfcheck(
         import pandas as pd
 
         from tsclust_spark.kernels.dtw_banded import dtw_banded_batch
-        from tsclust_spark.kernels.dtw_lb import keogh_envelope, lb_keogh
+        from tsclust_spark.kernels.dtw_lb import lb_keogh_pairs
 
         for pdf in batches:
             oks = np.empty(len(pdf), dtype=bool)
@@ -729,6 +743,9 @@ def dtw_selfcheck(
             a_arrs = [np.asarray(a_col[r], dtype=np.float64) for r in range(len(pdf))]
             b_arrs = [np.asarray(b_col[r], dtype=np.float64) for r in range(len(pdf))]
             fast_all = dtw_banded_batch(
+                a_arrs, b_arrs, sakoe_chiba_radius, "euclidean", pattern
+            )
+            lb_all = lb_keogh_pairs(
                 a_arrs, b_arrs, sakoe_chiba_radius, "euclidean", pattern
             )
             for r in range(len(pdf)):
@@ -754,10 +771,7 @@ def dtw_selfcheck(
                     oks[r] = np.isinf(fast) == np.isinf(full)
                 else:
                     oks[r] = abs(fast - full) <= atol
-                L, U = keogh_envelope(s2, s1.size, sakoe_chiba_radius)
-                lb = pattern.normalize(
-                    lb_keogh(s1, L, U, "euclidean"), s1.size, s2.size
-                )
+                lb = lb_all[r]
                 lb_valid = lb <= fast + atol
                 prune_safe = (lb <= eps) or (fast > eps)
                 oks_pruned[r] = bool(lb_valid and prune_safe)

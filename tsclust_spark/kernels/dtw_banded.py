@@ -1,27 +1,80 @@
-"""Band-limited DTW: O(n * band_width) time AND memory.
+"""Band-limited DTW: O(n * band) time and memory.
 
 The generic kernel (kernels/dtw.py) materializes the full (n, m) cost
 and DP matrices and masks out-of-band cells — fine for small alignments
-but O(n*m) regardless of the band. This kernel computes local costs and
+but O(n*m) regardless of the band. These kernels compute local costs and
 DP values ONLY inside the Sakoe-Chiba band: for radius 8 on 4096x4096
-that is ~25/4096 of the work and ~1/670 of the memory (a 4096x4096
-float64 DP matrix alone is 134 MB; the banded one is ~800 KB).
+that is ~25/4096 of the work and ~1/670 of the memory.
 
 Semantics are identical to the generic kernel with
-``global_constraint='sakoe_chiba'`` (asserted in tests/test_dtw.py
-against both the generic vectorized kernel and the slow triple-loop
-oracle). 1-D series only (the engine's token sequences); the generic
-kernel remains the fallback for multidimensional input, Itakura, or
-path extraction.
+``global_constraint='sakoe_chiba'``. 1-D series only (the engine's token
+sequences); the generic kernel remains the fallback for
+multidimensional input, Itakura, or path extraction.
+
+:func:`dtw_banded_distance` is the scalar column DP, one pair at a time.
+It is the test oracle. :func:`dtw_banded_batch` is the production
+kernel: it runs many pairs in lockstep, one numpy op per column step for
+all of them, so the Python column loop is paid once per bucket instead of
+once per pair. Every float op a band cell sees is the scalar kernel's, in
+the same order, so results are bit-identical to it.
+
+Lanes. Buffers are ``(lanes, pairs)``. With ``k_lo = -r - max(0, m-n)``
+the band holds the diagonals ``i - j`` in ``[k_lo, k_lo + W)``,
+``W = |n-m| + 2r + 1``. When ``W <= n`` a pair's lane is its diagonal,
+``lane = i - j - k_lo``; otherwise (a band wider than the series) it is
+the row, ``lane = i``, over ``W = n`` lanes. Either way a step
+``(dx, dy)`` reads the previous column at one lane offset for the whole
+bucket (``dx - dy`` on diagonals, ``-dy`` on rows), so a step is one
+slice, and the vertical step is a scan along the lane axis. Lanes outside
+a pair's band hold ``BIG``, the scalar kernel's "no candidate". Pairs are
+sorted by length of ``b``, so the pairs still running at column ``j`` are
+a prefix and finished pairs cost nothing.
+
+Buckets. The pairs of one lane layout are sorted by ``W`` and cut into
+contiguous runs by a DP over the kernel's own cost, ``_COLUMN_S`` per
+column step plus ``_CELL_S`` per lane cell (a run pays its widest pair's
+``W`` on every cell). A run whose buffers would pass ``_BUCKET_CELLS``
+float64 cells is split, longest pairs first, so a bucket's buffers hold
+at most ``max(_BUCKET_CELLS, one pair's cells)``: the transient memory is
+O(sum(n + m) + P*W), never O(P * n_max), however long the batch's
+longest series.
 """
 
 from __future__ import annotations
+
+import operator
 
 import numpy as np
 
 from tsclust_spark.compat.stepattern import PATTERNS, StepPattern
 
 BIG = 1e300
+
+# Cost model of the lockstep kernel, measured once (4 vCPU, numpy 1.26,
+# one thread; 15-17 us per column step and 9-19 ns per cell over
+# buckets of 8-1,500 pairs and 17-417 lanes): the fixed cost of one
+# column step of a bucket, and the cost of one lane cell in it.
+_COLUMN_S = 16e-6
+_CELL_S = 18e-9
+# float64 cells one bucket's buffers may hold (16 MB); a pair that needs
+# more runs in a bucket of its own
+_BUCKET_CELLS = 1 << 21
+
+
+def check_radius(radius) -> int:
+    """The Sakoe-Chiba radius as an int. An integer or an integral float
+    (2.0) passes; a ValueError names any other value (-1, 2.5)."""
+    if isinstance(radius, (float, np.floating)) and float(radius).is_integer():
+        radius = int(radius)
+    try:
+        r = operator.index(radius)
+    except TypeError:
+        r = -1
+    if r < 0:
+        raise ValueError(
+            f"sakoe_chiba_radius must be a non-negative integer, got {radius!r}"
+        )
+    return r
 
 
 def _band_bounds(n: int, m: int, radius: int):
@@ -46,6 +99,16 @@ def _local_1d(a_slice: np.ndarray, bj: float, metric: str) -> np.ndarray:
     raise ValueError(f"banded 1-D kernel does not support metric {metric!r}")
 
 
+def _split_steps(step_pattern: StepPattern):
+    """Horizontal ``(dx, dy, w)`` steps and the (at most one) vertical."""
+    steps = step_pattern.to_numpy()
+    horiz = [(int(dx), int(dy), float(w)) for dx, dy, w in steps if dx > 0]
+    vert = [(int(dx), int(dy), float(w)) for dx, dy, w in steps if dx == 0]
+    if len(vert) > 1 or any(dy != 1 for _, dy, _ in vert):
+        raise NotImplementedError("one vertical dy=1 step max")
+    return horiz, vert
+
+
 def dtw_banded_distance(
     a: np.ndarray,
     b: np.ndarray,
@@ -54,6 +117,7 @@ def dtw_banded_distance(
     step_pattern: StepPattern | str = "symmetric1",
 ) -> float:
     """Banded DTW distance between two 1-D series."""
+    radius = check_radius(radius)
     if isinstance(step_pattern, str):
         step_pattern = PATTERNS[step_pattern]
     a = np.asarray(a, dtype=np.float64).ravel()
@@ -62,11 +126,7 @@ def dtw_banded_distance(
     if n == 0 or m == 0:
         return 0.0 if n == m else float("inf")
 
-    steps = step_pattern.to_numpy()
-    horiz = [(int(dx), int(dy), float(w)) for dx, dy, w in steps if dx > 0]
-    vert = [(int(dx), int(dy), float(w)) for dx, dy, w in steps if dx == 0]
-    if len(vert) > 1 or any(dy != 1 for _, dy, _ in vert):
-        raise NotImplementedError("one vertical dy=1 step max")
+    horiz, vert = _split_steps(step_pattern)
     max_dx = max(dx for dx, _, _ in horiz)
 
     lo, hi = _band_bounds(n, m, radius)
@@ -108,315 +168,198 @@ def dtw_banded_distance(
     return step_pattern.normalize(float(terminal), n, m)
 
 
-def dtw_banded_lockstep(
-    A: np.ndarray,
-    B: np.ndarray,
-    radius: int = 1,
-    metric: str = "euclidean",
-    step_pattern: StepPattern | str = "symmetric1",
-) -> np.ndarray:
-    """Banded DTW for a BATCH of same-length pairs, in lockstep.
+def _lockstep(a_arrs, b_arrs, n, m, k_lo, k_hi, diag, horiz, vert, sq):
+    """Unnormalized terminal cost of one bucket of pairs.
 
-    ``A`` is (P, n) and ``B`` is (P, m); returns (P,) normalized
-    distances.  The DP is the exact column recurrence of
-    :func:`dtw_banded_distance` with every numpy op carrying a leading
-    batch axis — identical op order per cell, so results are
-    bit-identical to the scalar kernel (asserted in tests/test_dtw.py).
-    Amortizes the ~n-column Python loop over P pairs: on 256-point
-    radius-8 pairs this is the difference between ~1.4k and >20k
-    pairs/sec per core (bench dtw_block_64), which is what a
-    10^6-series clustering run needs (VERDICT r4 item 4; numba is
-    unavailable in this environment, so the lockstep axis IS the jit).
+    ``n``, ``m``, ``k_lo`` and ``k_hi`` are int64 arrays over the
+    bucket's pairs, sorted by ``m`` descending; ``diag`` picks the lane
+    layout for all of them (module docstring).
     """
-    if isinstance(step_pattern, str):
-        step_pattern = PATTERNS[step_pattern]
-    A = np.ascontiguousarray(A, dtype=np.float64)
-    B = np.ascontiguousarray(B, dtype=np.float64)
-    P, n = A.shape
-    Pb, m = B.shape
-    if Pb != P:
-        raise ValueError("batch sizes differ")
-    if n == 0 or m == 0:
-        return np.full(P, 0.0 if n == m else np.inf)
+    P = n.size
+    W = k_hi - k_lo + 1 if diag else n
+    Wm = int(W.max())
+    m_max = int(m[0])
+    off = k_lo if diag else np.zeros_like(k_lo)
+    # A[t, p] = a_p[t + off_p]: column j's lanes are rows t = j + lane
+    # (diagonals) or t = lane (rows), so a local cost is one slice
+    A = np.zeros((m_max + Wm - 1 if diag else Wm, P))
+    B = np.zeros((m_max, P))
+    for p in range(P):
+        A[-off[p] : n[p] - off[p], p] = a_arrs[p]
+        B[: m[p], p] = b_arrs[p]
 
-    steps = step_pattern.to_numpy()
-    horiz = [(int(dx), int(dy), float(w)) for dx, dy, w in steps if dx > 0]
-    vert = [(int(dx), int(dy), float(w)) for dx, dy, w in steps if dx == 0]
-    if len(vert) > 1 or any(dy != 1 for _, dy, _ in vert):
-        raise NotImplementedError("one vertical dy=1 step max")
-    max_dx = max(dx for dx, _, _ in horiz)
-
-    lo, hi = _band_bounds(n, m, radius)
-    w_max = int(np.max(hi - lo)) + 1
-    # ring of reusable column buffers (each column's values must survive
-    # max_dx more columns) + scratch; same per-cell float ops as before
-    ring = [np.empty((P, w_max)) for _ in range(max_dx + 1)]
-    local_buf = np.empty((P, w_max))
-    cand_buf = np.empty((P, w_max))
-    tmp_buf = np.empty((P, w_max)) if vert else None
-    cols: list[np.ndarray] = []  # ring buffer of the last max_dx columns
-    for j in range(m):
-        l, h = int(lo[j]), int(hi[j])
-        width = h - l + 1
-        local = local_buf[:, :width]
-        np.subtract(A[:, l : h + 1], B[:, j : j + 1], out=local)
-        if metric == "sqeuclidean":
-            local *= local
-        elif metric in ("euclidean", "cityblock", "manhattan", "chebyshev"):
-            np.abs(local, out=local)
-        else:
-            raise ValueError(f"banded 1-D kernel does not support metric {metric!r}")
-        bvec = ring[j % (max_dx + 1)][:, :width]
-        bvec.fill(BIG)
-        if j == 0 and l == 0:
-            bvec[:, 0] = local[:, 0]
-        for dx, dy, wgt in horiz:
-            if j - dx < 0:
-                continue
-            parr = cols[-dx]
-            pl, ph = int(lo[j - dx]), int(hi[j - dx])
-            i0 = max(l, pl + dy)
-            i1 = min(h, ph + dy)
-            if i0 > i1:
-                continue
-            cand = cand_buf[:, : i1 - i0 + 1]
-            if wgt == 1.0:
-                # x * 1.0 is bitwise x for every float
-                np.add(
-                    parr[:, i0 - dy - pl : i1 - dy - pl + 1],
-                    local[:, i0 - l : i1 - l + 1],
-                    out=cand,
-                )
-            else:
-                np.multiply(local[:, i0 - l : i1 - l + 1], wgt, out=cand)
-                cand += parr[:, i0 - dy - pl : i1 - dy - pl + 1]
-            seg = bvec[:, i0 - l : i1 - l + 1]
-            np.minimum(seg, cand, out=seg)
-        if vert:
-            (_, _, wgt) = vert[0]
-            C = np.cumsum(local if wgt == 1.0 else local * wgt, axis=1)
-            scan = tmp_buf[:, :width]
-            np.subtract(bvec, C, out=scan)
-            np.minimum.accumulate(scan, axis=1, out=scan)
-            scan += C
-            np.minimum(bvec, scan, out=bvec)
-        np.minimum(bvec, BIG, out=bvec)
-        cols.append(bvec)
-        if len(cols) > max_dx:
-            cols.pop(0)
-
-    terminal = cols[-1][:, -1].copy() if int(hi[m - 1]) == n - 1 else np.full(P, BIG)
-    out = np.where(terminal >= BIG / 2, np.inf, step_pattern.normalize(terminal, n, m))
-    return out
-
-
-def _ragged_lockstep_group(
-    A_pad: np.ndarray,
-    n_arr: np.ndarray,
-    B_pad: np.ndarray,
-    m_arr: np.ndarray,
-    radius: int,
-    metric: str,
-    step_pattern: StepPattern,
-) -> np.ndarray:
-    """Banded DTW for a batch of DIFFERENT-length pairs, in lockstep.
-
-    ``A_pad``/``B_pad`` are right-padded (P, n_max)/(P, m_max); ``n_arr``
-    and ``m_arr`` carry the true lengths.  Per pair the band geometry
-    (column range, per-column row bounds) differs, so each column step
-    aligns the previous column's lanes per pair; every float op a
-    cell sees (one add per horizontal step, the same cumsum/scan pair
-    for the vertical step, the same minimum order) is identical to
-    :func:`dtw_banded_distance`, so results are BIT-identical to the
-    scalar kernel (asserted in tests/test_dtw.py).
-
-    This is the kernel that keeps real corpora fast: shape-exact
-    grouping (``dtw_banded_batch``) degenerates to median-size-2 groups
-    on a 512-doc block of 64-256-token walks (11.5k groups), falling
-    back to ~scalar speed; width/length bucketing bounds the masked-lane
-    waste while amortizing the Python column loop across the whole
-    bucket.
-
-    Execution shape (round-6 rewrite, same cell-for-cell float ops):
-
-    - rows are sorted by ``m`` descending, so at column ``j`` the ACTIVE
-      pairs (``m > j``) are a prefix and every per-column op runs on
-      ``[:c]`` only — finished pairs cost nothing instead of computing
-      masked garbage until the bucket's last column;
-    - the per-pair band bounds for every column are precomputed in one
-      vectorized sweep (the per-column ``np.where`` chains were pure
-      overhead);
-    - the previous column is read through BIG-sentinel shifted SLICES
-      selected per shift class (``shift = lo_j - dy - lo_(j-dx)`` takes
-      at most ``dx + 1`` values because ``lo`` is nondecreasing with
-      unit steps) instead of a ``take_along_axis`` gather; dead lanes of
-      each stored column are overwritten with BIG so an out-of-band read
-      contributes ``BIG + local*wgt >= BIG`` and never wins the min —
-      exactly the candidate the old mask produced.
-    """
-    P, _ = A_pad.shape
-    steps = step_pattern.to_numpy()
-    horiz = [(int(dx), int(dy), float(w)) for dx, dy, w in steps if dx > 0]
-    vert = [(int(dx), int(dy), float(w)) for dx, dy, w in steps if dx == 0]
-    if len(vert) > 1 or any(dy != 1 for _, dy, _ in vert):
-        raise NotImplementedError("one vertical dy=1 step max")
-    max_dx = max(dx for dx, _, _ in horiz)
-    if metric == "sqeuclidean":
-        sq = True
-    elif metric in ("euclidean", "cityblock", "manhattan", "chebyshev"):
-        sq = False
+    # lane offset of each step's source column
+    g = 1 if diag else 0
+    steps = [(dx, w, g * dx - dy) for dx, dy, w in horiz]
+    ring = np.empty((max(dx for dx, _, _ in steps) + 1, Wm, P))
+    bufs = np.empty((4 if vert else 2, Wm, P))  # local, cand, cumsum, scan
+    lane = np.arange(Wm)[:, None]
+    pairs = np.arange(P)
+    top = lane >= W if int(W.min()) < Wm else None
+    # active pairs at column j are the prefix [:c_at[j]]
+    c_at = np.searchsorted(-m, -np.arange(m_max + 1), side="left")
+    # columns where all of a pair's W lanes are in its band; outside
+    # them ("edge" columns) some lanes fall before row 0 or past row n-1
+    if diag:
+        in_lo = np.maximum.accumulate(-k_lo)
+        in_hi = np.minimum.accumulate(n - k_lo - W)
     else:
-        raise ValueError(
-            f"banded 1-D kernel does not support metric {metric!r}"
-        )
+        in_lo = np.maximum.accumulate(n - 1 - k_hi)
+        in_hi = np.minimum.accumulate(-k_lo)
+    cols = np.arange(m_max)
+    edge = (cols < in_lo[c_at[:-1] - 1]) | (cols > in_hi[c_at[:-1] - 1])
 
-    order = np.argsort(-m_arr, kind="stable")
-    A_pad = A_pad[order]
-    B_pad = B_pad[order]
-    n_arr = n_arr[order]
-    m_arr = m_arr[order]
-    m_max = int(m_arr[0])
+    def bounds(j, c):
+        """Each active pair's band lanes [va, vb) at column j."""
+        if not edge[j]:
+            return None, W[:c]
+        lo = np.maximum(j + k_lo[:c], 0)
+        hi = np.minimum(j + k_hi[:c], n[:c] - 1) + 1
+        if diag:
+            base = j + k_lo[:c]
+            return lo - base, hi - base
+        return lo, hi
 
-    delta = np.abs(n_arr - m_arr)
-    w_max = int(np.minimum(n_arr, delta + 2 * radius + 1).max())
-    lanes = np.arange(w_max)[None, :]
-    n_cap = A_pad.shape[1] - 1
-
-    # band geometry for every (pair, column) in one sweep
-    j_row = np.arange(m_max)[None, :]
-    ge = (n_arr >= m_arr)[:, None]
-    lo_all = np.where(
-        ge, j_row - radius, j_row - (m_arr - n_arr + radius)[:, None]
-    )
-    np.maximum(lo_all, 0, out=lo_all)
-    hi_all = np.where(
-        ge, j_row + (n_arr - m_arr)[:, None] + radius, j_row + radius
-    )
-    np.minimum(hi_all, (n_arr - 1)[:, None], out=hi_all)
-    width_all = hi_all - lo_all + 1
-
-    neg_m = -m_arr  # ascending; actives at column j are [:c]
+    row0 = -k_lo if diag else np.zeros_like(k_lo)
+    term = n - m - k_lo if diag else n - 1
     terminal = np.full(P, BIG)
-    # preallocated working storage, reused across columns: a ring of
-    # DP-column buffers (each column's values must survive max_dx more
-    # columns), per-step sentinel pads whose BIG borders never need
-    # refilling (the interior is overwritten whole every column), and
-    # scratch for candidates / the vertical scan
-    ring = [np.empty((P, w_max)) for _ in range(max_dx + 1)]
-    pads = {
-        (dx, dy): np.full((P, w_max + max(dx, dy)), BIG)
-        for dx, dy, _ in horiz
-    }
-    cand_buf = np.empty((P, w_max))
-    tmp_buf = np.empty((P, w_max)) if vert else None
-    # sliding A-window: win[i, lane] == A_pad[i, lo_j[i] + lane].
-    # lo(0) == 0 for every pair and lo advances by 0/1 per column, so
-    # the window is a pure slice at j == 0 and a one-lane conditional
-    # slide afterwards — no per-column take_along_axis gather.
-    A_win = [np.empty((P, w_max)), np.empty((P, w_max))]
-    rows_idx = np.arange(P)
-    local_buf = np.empty((P, w_max))
-    cols: list[np.ndarray] = []
+    c = -1
     for j in range(m_max):
-        c = int(np.searchsorted(neg_m, -j, side="left"))
-        lo = lo_all[:c, j]
-        width = width_all[:c, j]
-        curA = A_win[j % 2][:c]
-        if j == 0:
-            curA[:] = A_pad[:c, :w_max]
-        else:
-            prevA = A_win[(j - 1) % 2][:c]
-            lo_prev = lo_all[:c, j - 1]
-            adv = lo != lo_prev
-            n_adv = int(np.count_nonzero(adv))
-            if n_adv == 0:
-                curA[:] = prevA
-            elif n_adv == c:
-                curA[:, : w_max - 1] = prevA[:, 1:]
-                curA[:, w_max - 1] = A_pad[
-                    rows_idx[:c], np.minimum(lo_prev + w_max, n_cap)
-                ]
-            else:
-                curA[:] = prevA
-                np.copyto(
-                    curA[:, : w_max - 1], prevA[:, 1:], where=adv[:, None]
-                )
-                np.copyto(
-                    curA[:, w_max - 1],
-                    A_pad[rows_idx[:c], np.minimum(lo_prev + w_max, n_cap)],
-                    where=adv,
-                )
-        local = local_buf[:c]
-        np.subtract(curA, B_pad[:c, j, None], out=local)
+        if c_at[j] != c:
+            # views over the running prefix, rebuilt when pairs finish
+            c = int(c_at[j])
+            A_c, B_c = A[:, :c], B[:, :c]
+            top_c = None if top is None else top[:, :c]
+            col_c = ring[:, :, :c]
+            local, cand_c, *scan_c = bufs[:, :, :c]
+        np.subtract(A_c[j * g : j * g + Wm], B_c[j], out=local)
         if sq:
-            local *= local
+            np.multiply(local, local, out=local)
         else:
             np.abs(local, out=local)
-        bvec = ring[j % (max_dx + 1)][:c]
-        bvec.fill(BIG)
-        if j == 0:
-            bvec[:, 0] = local[:, 0]  # lo(0) == 0 for every pair
-        for dx, dy, wgt in horiz:
-            if j - dx < 0:
+        bvec = col_c[j % len(ring)]
+        filled = False
+        for dx, w, o in steps:
+            if j < dx:
                 continue
-            parr = cols[-dx]
-            shift = lo - dy - lo_all[:c, j - dx]
-            # sentinel-padded view bank: reading lane k of the shift-s
-            # view yields parr[:, k + s], or BIG outside [0, w_max)
-            pad = pads[(dx, dy)]
-            pad[:c, dy : dy + w_max] = parr[:c]
-            smin = int(shift.min())
-            smax = int(shift.max())
-            g = pad[:c, smin + dy : smin + dy + w_max]
-            for s in range(smin + 1, smax + 1):
-                g = np.where(
-                    (shift >= s)[:, None],
-                    pad[:c, s + dy : s + dy + w_max],
-                    g,
-                )
-            cand = cand_buf[:c]
-            if wgt == 1.0:
-                # x * 1.0 is bitwise x for every float (incl. -0, nan)
-                np.add(local, g, out=cand)
+            prev = col_c[(j - dx) % len(ring)]
+            l0, l1 = max(0, -o), min(Wm, Wm - o)
+            if l0 >= l1:
+                continue
+            if not filled and l0 == 0 and l1 == Wm:
+                # min(BIG, cand) written straight into the column
+                if w == 1.0:
+                    # x * 1.0 is bitwise x for every float
+                    np.add(prev, local, out=bvec)
+                else:
+                    np.multiply(local, w, out=bvec)
+                    bvec += prev
+                np.minimum(bvec, BIG, out=bvec)
+                filled = True
+                continue
+            if not filled:
+                bvec.fill(BIG)
+                filled = True
+            cand = cand_c[l0:l1]
+            if w == 1.0:
+                np.add(prev[l0 + o : l1 + o], local[l0:l1], out=cand)
             else:
-                np.multiply(local, wgt, out=cand)
-                cand += g
-            np.minimum(bvec, cand, out=bvec)
+                np.multiply(local[l0:l1], w, out=cand)
+                cand += prev[l0 + o : l1 + o]
+            seg = bvec[l0:l1]
+            np.minimum(seg, cand, out=seg)
+        if not filled:
+            bvec.fill(BIG)
+        if j == 0:
+            bvec[row0[:c], pairs[:c]] = local[row0[:c], pairs[:c]]
+        va, vb = bounds(j, c)
         if vert:
-            (_, _, wgt) = vert[0]
-            C = np.cumsum(local if wgt == 1.0 else local * wgt, axis=1)
-            scan = tmp_buf[:c]
+            if va is not None:
+                # lanes before row lo_j: the scan must start at lo_j
+                # with C == 0 and bvec == BIG, exactly as the scalar does
+                lead = lane < va
+                np.copyto(local, 0.0, where=lead)
+                np.copyto(bvec, BIG, where=lead)
+            wgt = vert[0][2]
+            C, scan = scan_c
+            np.add.accumulate(local if wgt == 1.0 else local * wgt, axis=0, out=C)
             np.subtract(bvec, C, out=scan)
-            np.minimum.accumulate(scan, axis=1, out=scan)
+            np.minimum.accumulate(scan, axis=0, out=scan)
             scan += C
             np.minimum(bvec, scan, out=bvec)
-        np.minimum(bvec, BIG, out=bvec)
-        # dead lanes -> BIG so the next column's shifted reads see the
-        # same out-of-band sentinel the old src-bound mask enforced
-        if int(width.min()) != w_max:
-            bvec[lanes >= width[:, None]] = BIG
-        cols.append(bvec)
-        if len(cols) > max_dx:
-            cols.pop(0)
-        c_next = int(np.searchsorted(neg_m, -(j + 1), side="left"))
+        elif j > 0 and (
+            top is not None or any(edge[j - dx] for dx, _, _ in steps if j >= dx)
+        ):
+            # no vertical step: a cell none of whose sources is in the
+            # band keeps BIG in the scalar kernel, whatever its local
+            # cost (an out-of-band source lane holds BIG, and BIG + NaN
+            # would be NaN)
+            nosrc = np.ones(bvec.shape, dtype=bool)
+            for dx, _, o in steps:
+                if j >= dx:
+                    sa, sb = bounds(j - dx, c)
+                    ok = lane < sb - o
+                    ok &= lane >= (0 if sa is None else sa) - o
+                    nosrc &= ~ok
+            np.copyto(bvec, BIG, where=nosrc)
+        # lanes outside the band hold BIG for the next columns' reads
+        if va is not None:
+            np.copyto(bvec, BIG, where=(lane < va) | (lane >= vb))
+        elif top_c is not None:
+            np.copyto(bvec, BIG, where=top_c)
+        c_next = int(c_at[j + 1])
         if c_next < c:
-            # rows finishing at this column (m == j + 1); their terminal
-            # sits in lane width-1 (hi(m-1) == n-1 always)
-            fin = np.arange(c_next, c)
-            terminal[fin] = bvec[fin, width[fin] - 1]
-    res = np.where(
-        terminal >= BIG / 2,
-        np.inf,
-        step_pattern.normalize(terminal, n_arr, m_arr),
-    )
-    out = np.empty(P, dtype=np.float64)
-    out[order] = res
+            fin = pairs[c_next:c]
+            terminal[fin] = bvec[term[fin], fin]
+    return terminal
+
+
+def _buckets(W: np.ndarray, m: np.ndarray, ring: int) -> list[np.ndarray]:
+    """Cut pairs into buckets: contiguous runs of ``W`` order picked by a
+    DP over the kernel's cost, each split to fit ``_BUCKET_CELLS``.
+
+    Returns index arrays, each sorted by ``m`` descending."""
+    order = np.argsort(W, kind="stable")
+    Ws, ms = W[order], m[order]
+    # groups of equal W; group g is order[edges[g] : edges[g + 1]]
+    starts = np.flatnonzero(np.r_[True, Ws[1:] != Ws[:-1]])
+    edges = np.r_[starts, Ws.size]
+    g_w = Ws[starts]
+    g_max = np.maximum.reduceat(ms, starts)
+    sum_m = np.r_[0, np.cumsum(np.add.reduceat(ms, starts))]
+
+    def cells(m_max, w):
+        # A, B, the column ring, local/cand/cumsum/scan
+        return 2 * m_max + (ring + 5) * w
+
+    G = starts.size
+    best = np.zeros(G + 1)
+    cut = np.zeros(G + 1, dtype=np.int64)
+    for e in range(1, G + 1):
+        run_max = np.maximum.accumulate(g_max[e - 1 :: -1])[::-1]
+        run_cells = (edges[e] - edges[:e]) * cells(run_max, g_w[e - 1])
+        n_split = np.ceil(run_cells / _BUCKET_CELLS)
+        cost = (
+            best[:e]
+            + _COLUMN_S * n_split * run_max
+            + _CELL_S * g_w[e - 1] * (sum_m[e] - sum_m[:e])
+        )
+        cut[e] = int(np.argmin(cost))
+        best[e] = cost[cut[e]]
+    out = []
+    e = G
+    while e > 0:
+        s = cut[e]
+        run = order[edges[s] : edges[e]]
+        run = run[np.argsort(-m[run], kind="stable")]
+        w = int(g_w[e - 1])
+        i = 0
+        while i < run.size:
+            take = max(1, _BUCKET_CELLS // cells(int(m[run[i]]), w))
+            out.append(run[i : i + take])
+            i += take
+        e = s
     return out
-
-
-# exact-shape groups at least this large keep the slice-aligned kernel
-# (zero masked lanes); smaller ones pool into ragged width/length buckets
-_RAGGED_MIN_EXACT = 32
 
 
 def dtw_banded_batch(
@@ -429,71 +372,46 @@ def dtw_banded_batch(
     """Banded DTW over ragged pair lists, lockstep-batched.
 
     ``a_list``/``b_list`` are sequences of 1-D arrays (any lengths).
-    Exact-shape groups of at least ``_RAGGED_MIN_EXACT`` pairs run the
-    slice-aligned :func:`dtw_banded_lockstep` (zero masked lanes); the
-    remaining pairs pool into width/length buckets for
-    :func:`_ragged_lockstep_group` (real corpora fragment exact shapes
-    into median-size-2 groups, which would otherwise fall back to
-    ~scalar speed).  Results scatter back in input order and are
-    bit-identical to the scalar kernel either way.  Empty series follow
-    the scalar kernel's convention (0.0 if both empty else inf).
+    Returns the distances in input order, bit-identical to
+    :func:`dtw_banded_distance` per pair. Empty series follow its
+    convention (0.0 if both empty else inf).
     """
+    radius = check_radius(radius)
     if isinstance(step_pattern, str):
         step_pattern = PATTERNS[step_pattern]
-    k = len(a_list)
-    out = np.empty(k, dtype=np.float64)
-    groups: dict[tuple[int, int], list[int]] = {}
-    arrs_a: list[np.ndarray] = []
-    arrs_b: list[np.ndarray] = []
-    for r in range(k):
-        sa = np.asarray(a_list[r], dtype=np.float64).ravel()
-        sb = np.asarray(b_list[r], dtype=np.float64).ravel()
-        arrs_a.append(sa)
-        arrs_b.append(sb)
-        if sa.size == 0 or sb.size == 0:
-            out[r] = 0.0 if sa.size == sb.size else np.inf
+    if metric == "sqeuclidean":
+        sq = True
+    elif metric in ("euclidean", "cityblock", "manhattan", "chebyshev"):
+        sq = False
+    else:
+        raise ValueError(f"banded 1-D kernel does not support metric {metric!r}")
+    horiz, vert = _split_steps(step_pattern)
+    ring = max(dx for dx, _, _ in horiz) + 1
+
+    a_arrs = [np.asarray(s, dtype=np.float64).ravel() for s in a_list]
+    b_arrs = [np.asarray(s, dtype=np.float64).ravel() for s in b_list]
+    n = np.array([s.size for s in a_arrs], dtype=np.int64)
+    m = np.array([s.size for s in b_arrs], dtype=np.int64)
+    out = np.where(n == m, 0.0, np.inf)  # empty-series convention
+    k_lo = -radius - np.maximum(m - n, 0)
+    k_hi = radius + np.maximum(n - m, 0)
+    diag = k_hi - k_lo + 1 <= n
+    for layout in (True, False):
+        idx = np.flatnonzero((n > 0) & (m > 0) & (diag == layout))
+        if idx.size == 0:
             continue
-        groups.setdefault((sa.size, sb.size), []).append(r)
-    ragged: dict[tuple[int, int], list[int]] = {}
-    for (n, m), idxs in groups.items():
-        if len(idxs) < _RAGGED_MIN_EXACT:
-            # pool into 8-lane band-width buckets only: the ragged
-            # kernel drops finished pairs from its active prefix, so
-            # mixing LENGTHS in one bucket costs nothing, while a tight
-            # width class keeps masked-lane waste low (the kernel is
-            # bandwidth-bound; measured best at granularity 8 of
-            # {8,16,32,64} on the 512-doc bench mix)
-            w_cap = min(n, abs(n - m) + 2 * radius + 1)
-            key = ((w_cap + 7) // 8,)
-            ragged.setdefault(key, []).extend(idxs)
-            continue
-        A = np.empty((len(idxs), n))
-        Bm = np.empty((len(idxs), m))
-        for row, r in enumerate(idxs):
-            A[row] = arrs_a[r]
-            Bm[row] = arrs_b[r]
-        out[np.asarray(idxs)] = dtw_banded_lockstep(
-            A, Bm, radius=radius, metric=metric, step_pattern=step_pattern
-        )
-    for idxs in ragged.values():
-        if len(idxs) < 4:  # gather overhead beats the loop amortization
-            for r in idxs:
-                out[r] = dtw_banded_distance(
-                    arrs_a[r],
-                    arrs_b[r],
-                    radius=radius,
-                    metric=metric,
-                    step_pattern=step_pattern,
-                )
-            continue
-        n_arr = np.array([arrs_a[r].size for r in idxs], dtype=np.int64)
-        m_arr = np.array([arrs_b[r].size for r in idxs], dtype=np.int64)
-        A = np.zeros((len(idxs), int(n_arr.max())))
-        Bm = np.zeros((len(idxs), int(m_arr.max())))
-        for row, r in enumerate(idxs):
-            A[row, : n_arr[row]] = arrs_a[r]
-            Bm[row, : m_arr[row]] = arrs_b[r]
-        out[np.asarray(idxs)] = _ragged_lockstep_group(
-            A, n_arr, Bm, m_arr, radius, metric, step_pattern
-        )
+        W = k_hi[idx] - k_lo[idx] + 1 if layout else n[idx]
+        for bucket in _buckets(W, m[idx], ring):
+            sel = idx[bucket]
+            terminal = _lockstep(
+                [a_arrs[r] for r in sel],
+                [b_arrs[r] for r in sel],
+                n[sel], m[sel], k_lo[sel], k_hi[sel],
+                layout, horiz, vert, sq,
+            )
+            out[sel] = np.where(
+                terminal >= BIG / 2,
+                np.inf,
+                step_pattern.normalize(terminal, n[sel], m[sel]),
+            )
     return out

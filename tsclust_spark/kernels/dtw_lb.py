@@ -30,8 +30,8 @@ from typing import Iterator
 
 import numpy as np
 
-from tsclust_spark.compat.stepattern import PATTERNS
-from tsclust_spark.kernels.dtw_banded import _band_bounds
+from tsclust_spark.compat.stepattern import PATTERNS, StepPattern
+from tsclust_spark.kernels.dtw_banded import _band_bounds, check_radius
 
 
 def keogh_envelope(b: np.ndarray, n: int, radius: int):
@@ -91,6 +91,21 @@ def lb_keogh(
     raise ValueError(f"lb_keogh does not support metric {metric!r}")
 
 
+def lb_keogh_pairs(
+    a_arrs, b_arrs, radius: int, metric: str, pattern: StepPattern
+) -> np.ndarray:
+    """The normalized LB_Keogh bound of each pair ``(a, b)``: the
+    envelope of ``b`` over ``a``'s rows, ``lb_keogh``, then the pattern's
+    normalizer. 0.0 where either series is empty."""
+    out = np.zeros(len(a_arrs))
+    for r, (s1, s2) in enumerate(zip(a_arrs, b_arrs)):
+        if s1.size == 0 or s2.size == 0:
+            continue
+        L, U = keogh_envelope(s2, s1.size, radius)
+        out[r] = pattern.normalize(lb_keogh(s1, L, U, metric), s1.size, s2.size)
+    return out
+
+
 def dtw_pairs_pruned(
     pairs_df,
     eps: float,
@@ -119,6 +134,7 @@ def dtw_pairs_pruned(
             "LB_Keogh pruning requires a step pattern whose match weights "
             "are >= 1 (symmetric1/symmetric2)"
         )
+    sakoe_chiba_radius = check_radius(sakoe_chiba_radius)
 
     def compute(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -126,39 +142,21 @@ def dtw_pairs_pruned(
         from tsclust_spark.kernels.dtw_banded import dtw_banded_batch
 
         for pdf in batches:
-            k = len(pdf)
-            lbs = np.empty(k, dtype=np.float64)
-            dists = np.full(k, np.nan)
-            pruned = np.zeros(k, dtype=bool)
-            a_col = pdf["tokens_a"].to_numpy()
-            b_col = pdf["tokens_b"].to_numpy()
-            survivors: list[int] = []
-            surv_a: list[np.ndarray] = []
-            surv_b: list[np.ndarray] = []
-            for r in range(k):
-                s1 = np.asarray(a_col[r], dtype=np.float64).ravel()
-                s2 = np.asarray(b_col[r], dtype=np.float64).ravel()
-                if s1.size == 0 or s2.size == 0:
-                    lbs[r] = 0.0
-                    dists[r] = 0.0 if s1.size == s2.size else np.inf
-                    continue
-                L, U = keogh_envelope(s2, s1.size, sakoe_chiba_radius)
-                lb_raw = lb_keogh(s1, L, U, metric)
-                lb_norm = pattern.normalize(lb_raw, s1.size, s2.size)
-                lbs[r] = lb_norm
-                if lb_norm > eps:
-                    pruned[r] = True
-                    continue
-                survivors.append(r)
-                surv_a.append(s1)
-                surv_b.append(s2)
-            if survivors:
-                # surviving DPs run lockstep in one batched call
-                # (bit-identical to the scalar kernel; exact-shape
-                # groups slice-aligned, fragments ragged-lockstep)
+            a_arrs = [np.asarray(t, dtype=np.float64).ravel() for t in pdf["tokens_a"]]
+            b_arrs = [np.asarray(t, dtype=np.float64).ravel() for t in pdf["tokens_b"]]
+            lbs = lb_keogh_pairs(a_arrs, b_arrs, sakoe_chiba_radius, metric, pattern)
+            # an empty pair's bound is 0.0, but it is never pruned
+            pruned = np.array(
+                [a.size > 0 and b.size > 0 for a, b in zip(a_arrs, b_arrs)], dtype=bool
+            ) & (lbs > eps)
+            dists = np.full(len(pdf), np.nan)
+            survivors = np.flatnonzero(~pruned)
+            if survivors.size:
+                # surviving DPs (and empty pairs, which take the empty
+                # convention) run lockstep in one batched call
                 dists[survivors] = dtw_banded_batch(
-                    surv_a,
-                    surv_b,
+                    [a_arrs[r] for r in survivors],
+                    [b_arrs[r] for r in survivors],
                     radius=sakoe_chiba_radius,
                     metric=metric,
                     step_pattern=pattern,
@@ -215,6 +213,7 @@ def dtw_pruned_consistency(
     )
     pairs = left.join(right, F.col("id_a") < F.col("id_b"))
     pattern = PATTERNS[pattern_name]
+    sakoe_chiba_radius = check_radius(sakoe_chiba_radius)
 
     def compute(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -231,16 +230,14 @@ def dtw_pruned_consistency(
             dist_all = dtw_banded_batch(
                 a_arrs, b_arrs, sakoe_chiba_radius, "euclidean", pattern
             )
+            lb_all = lb_keogh_pairs(
+                a_arrs, b_arrs, sakoe_chiba_radius, "euclidean", pattern
+            )
             for r in range(k):
-                s1, s2 = a_arrs[r], b_arrs[r]
-                if s1.size == 0 or s2.size == 0:
+                if a_arrs[r].size == 0 or b_arrs[r].size == 0:
                     oks[r] = True
                     continue
-                L, U = keogh_envelope(s2, s1.size, sakoe_chiba_radius)
-                lb = pattern.normalize(
-                    lb_keogh(s1, L, U, "euclidean"), s1.size, s2.size
-                )
-                dist = dist_all[r]
+                lb, dist = lb_all[r], dist_all[r]
                 lb_valid = lb <= dist + atol
                 prune_safe = (lb <= eps) or (dist > eps)
                 oks[r] = bool(lb_valid and prune_safe)

@@ -22,30 +22,22 @@ from tsclust_spark.kernels.dtw import _accumulate, build_mask, pairwise_cost
 from tsclust_spark.kernels.dtw_banded import dtw_banded_batch
 
 
-# pairs per banded batch: the batch pads each bucket to its longest
-# series, so cap the pairs by the longest length to keep the padded
-# matrices near 32 MB each
-_BATCH_CELLS = 1 << 22
-
-
 def _dtw_dist_matrix(series: list[np.ndarray], pattern_name: str, band: int | None):
     pattern = PATTERNS[pattern_name]
     n = len(series)
     iu, ju = np.triu_indices(n, k=1)
-    d = np.empty(iu.size)
     if band is not None and all(s.ndim == 1 for s in series):
         # O(n*band) lockstep kernel, bit-identical to dtw_banded_distance
-        # per pair (empty series included)
-        chunk = max(1, _BATCH_CELLS // max([1] + [s.size for s in series]))
-        for c in range(0, iu.size, chunk):
-            d[c : c + chunk] = dtw_banded_batch(
-                [series[i] for i in iu[c : c + chunk]],
-                [series[j] for j in ju[c : c + chunk]],
-                band,
-                "euclidean",
-                pattern,
-            )
+        # per pair (empty series included); it bounds its own memory
+        d = dtw_banded_batch(
+            [series[i] for i in iu],
+            [series[j] for j in ju],
+            band,
+            "euclidean",
+            pattern,
+        )
     else:
+        d = np.empty(iu.size)
         steps = pattern.to_numpy()
         for p, (i, j) in enumerate(zip(iu, ju)):
             a, b = series[i], series[j]
