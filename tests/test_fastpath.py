@@ -140,3 +140,117 @@ def test_rollup_flat_property_vs_naive(rows):
                 seg[(len(seg) + 1) // 2 - 1],
             )
     assert {k: tuple(int(x) for x in v) for k, v in out.items()} == want
+
+
+def _with_session_tz(spark, tz, fn):
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, tz)
+    try:
+        return fn()
+    finally:
+        spark.conf.set(key, old)
+
+
+# around DST transitions: New York's spring gap and autumn overlap,
+# Lord Howe's 30-minute shift, Sao Paulo's midnight gap (2018-11-04)
+_ZONE_WINDOWS = {
+    "UTC": ["2024-01-01T00:00:00Z"],
+    "Asia/Kolkata": ["2024-01-01T00:00:00Z"],
+    "America/New_York": ["2024-03-10T07:00:00Z", "2024-11-03T06:00:00Z"],
+    "Australia/Lord_Howe": ["2024-04-06T15:00:00Z", "2024-10-05T15:30:00Z"],
+    "America/Sao_Paulo": ["2018-11-04T03:00:00Z", "2019-02-17T02:00:00Z"],
+}
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("tz", sorted(_ZONE_WINDOWS))
+def test_floor_local_matches_date_trunc(spark, tz):
+    """The kernel's hour/day floors equal Spark's ``date_trunc`` in the
+    session time zone, across DST gaps and overlaps."""
+    import datetime as dt
+
+    import numpy as np
+
+    from tsclust_spark.kernels.rollup_arrow import CASCADE, floor_local, session_zone
+
+    ts_us = np.concatenate([
+        int(dt.datetime.fromisoformat(c).timestamp()) * 1_000_000
+        + np.arange(-36 * 3600, 36 * 3600, 450, dtype=np.int64) * 1_000_000
+        for c in _ZONE_WINDOWS[tz]
+    ])
+
+    def check():
+        df = spark.createDataFrame([(int(t),) for t in ts_us], "us long").select(
+            "us", F.timestamp_micros("us").alias("ts")
+        )
+        zone = session_zone(spark)
+        for tier, unit_us in CASCADE:
+            trunc = {"1h": "hour", "1d": "day"}[tier]
+            want = df.select(
+                "us", F.unix_micros(F.date_trunc(trunc, "ts")).alias("f")
+            ).orderBy("us").collect()
+            got = floor_local(ts_us, unit_us, zone)
+            assert [int(g) for g in got] == [r.f for r in want], (tz, tier)
+
+    _with_session_tz(spark, tz, check)
+
+
+def _parity_rows():
+    """Edge rows: empty, 1, 59/60/61 points, int32 extremes, and rows
+    long enough to cross hour and day boundaries at every step size."""
+    lo, hi = -(2**31), 2**31 - 1
+    walk = [((i * 7919) % 2001) - 1000 for i in range(20000)]
+    return [
+        ("empty", []),
+        ("one", [5]),
+        ("p59", list(range(59))),
+        ("p60", list(range(60, 0, -1))),
+        ("p61", [3] * 61),
+        ("extremes", [lo, hi] * 1900),
+        ("maxed", [hi] * 4000),
+        ("walk", walk),
+        ("long", [(i * 31) % 97 for i in range(90000)]),
+    ]
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("tz", ["UTC", "Asia/Kolkata"])
+@pytest.mark.parametrize("step_seconds", [1, 2, 5])
+@pytest.mark.parametrize(
+    "t0_epoch",
+    # midnight UTC; 23:17:00 UTC, neither hour- nor Kolkata-aligned
+    [1704067200, 1704067200 + 23 * 3600 + 17 * 60],
+)
+def test_tier_kernel_equals_jvm_cascade(spark, tz, step_seconds, t0_epoch):
+    """The one-pass kernel's 1h/1d rows equal the JVM cascade
+    (``_cascade_with_rep``) over its own 1m rows, row for row."""
+    from tsclust_spark.kernels.rollup_arrow import (
+        rollup_sequences_1m_arrow,
+        rollup_sequences_tiers_arrow,
+        tier_slice,
+    )
+    from tsclust_spark.plans.rollup_job import _cascade_with_rep
+
+    seq = spark.createDataFrame(
+        [(d, v, len(v), "web") for d, v in _parity_rows()],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+
+    def check():
+        tiers = rollup_sequences_tiers_arrow(seq, t0_epoch, step_seconds).cache()
+        prev = rollup_sequences_1m_arrow(seq, t0_epoch, step_seconds)
+        try:
+            for tier in ["1h", "1d"]:
+                want = _cascade_with_rep(prev, tier)
+                got = tier_slice(tiers, tier).select(*want.columns)
+                key = ["doc_id", "bucket_ts"]
+                a = [tuple(r) for r in got.orderBy(key).collect()]
+                b = [tuple(r) for r in want.orderBy(key).collect()]
+                assert a == b, tier
+                assert len({r[0] for r in a}) == len(_parity_rows()) - 1
+                prev = want
+        finally:
+            tiers.unpersist()
+
+    _with_session_tz(spark, tz, check)

@@ -2,6 +2,7 @@
 an interrupted run + resume produces byte-identical tier tables to a
 clean full run, and completed units are not recomputed."""
 
+import glob
 import json
 import os
 
@@ -280,39 +281,56 @@ def test_manifest_mixed_spark_and_driver_records(spark, tmp_path_factory):
     assert m.pending_units(["3", "4", "5", "6"]) == ["3", "6"]
 
 
-def _spy_upserts(monkeypatch, fail_target=None):
-    """Record each rollup upsert's target and optimized plan; raise
-    inside the upsert whose target ends with ``fail_target``."""
+def _staging_dirs(out):
+    """Hidden staging directories left under ``out`` or any target."""
+    return glob.glob(f"{out}/_staging-*") + glob.glob(f"{out}/*/_staging-*")
+
+
+def _spy_commits(monkeypatch, fail_target=None, before=None):
+    """Record each tier commit's target; call ``before(target)`` first,
+    and raise inside the commit whose target ends with ``fail_target``."""
     import tsclust_spark.plans.rollup_job as rj
 
     seen = []
-    real = rj.upsert_partitioned
+    real = rj.commit_staged
 
-    def spy(spark_, target, updates, *args, **kwargs):
-        plan = updates._jdf.queryExecution().optimizedPlan().toString()
-        seen.append((os.path.basename(target), plan))
-        if fail_target and target.endswith(fail_target):
+    def spy(spark_, target, *args, **kwargs):
+        name = os.path.basename(target)
+        seen.append(name)
+        if before is not None:
+            before(name)
+        if fail_target and name == fail_target:
             raise RuntimeError(f"injected in {fail_target}")
-        return real(spark_, target, updates, *args, **kwargs)
+        return real(spark_, target, *args, **kwargs)
 
-    monkeypatch.setattr(rj, "upsert_partitioned", spy)
+    monkeypatch.setattr(rj, "commit_staged", spy)
     return seen
 
 
 @pytest.mark.spark
 def test_unit_1m_kernel_evaluated_once(spark, seq, tmp_path_factory, monkeypatch):
-    """Every tier upsert reads the unit's materialized 1m scratch: no
-    tier plan re-runs the Arrow 1m kernel, and the scratch is gone
-    after the run."""
+    """Each unit's tiers come from ONE staging write whose plan runs the
+    Arrow kernel once and aggregates nothing (no cascade shuffle); all
+    three tiers are committed from it and no staging is left."""
+    import tsclust_spark.plans.rollup_job as rj
+
     out = str(tmp_path_factory.mktemp("once"))
-    seen = _spy_upserts(monkeypatch)
+    plans = []
+    real = rj.staged_write
+
+    def spy(spark_, base, updates, *args, **kwargs):
+        plans.append(updates._jdf.queryExecution().optimizedPlan().toString())
+        return real(spark_, base, updates, *args, **kwargs)
+
+    monkeypatch.setattr(rj, "staged_write", spy)
+    commits = _spy_commits(monkeypatch)
     run_rollup(spark, seq, out, n_units=2, write_raw=True)
-    agg = [(t, p) for t, p in seen if t.startswith("agg_")]
-    assert sorted(t for t, _ in agg) == sorted(
-        ["agg_1m", "agg_1h", "agg_1d"] * 2
-    )
-    for target, plan in agg:
-        assert "MapInArrow" not in plan, target
+    assert len(plans) == 2
+    for plan in plans:
+        assert plan.count("MapInArrow") == 1, plan
+        assert "Aggregate" not in plan, plan
+    assert sorted(commits) == sorted(["agg_1m", "agg_1h", "agg_1d"] * 2)
+    assert _staging_dirs(out) == []
     assert not os.path.exists(f"{out}/_work")
 
 
@@ -321,10 +339,10 @@ def test_unit_scratch_removed_when_upsert_fails(
     spark, seq, tmp_path_factory, monkeypatch
 ):
     out = str(tmp_path_factory.mktemp("scratchfail"))
-    _spy_upserts(monkeypatch, fail_target="agg_1h")
+    _spy_commits(monkeypatch, fail_target="agg_1h")
     with pytest.raises(RuntimeError, match="injected in agg_1h"):
         run_rollup(spark, seq, out, n_units=2, write_raw=False)
-    assert not os.path.exists(f"{out}/_work")
+    assert _staging_dirs(out) == []
     (r,) = Manifest(spark, f"{out}/_manifest").read().collect()
     assert r.status == "failed"
     assert json.loads(r.lineage)["error"] == "RuntimeError: injected in agg_1h"
@@ -332,70 +350,70 @@ def test_unit_scratch_removed_when_upsert_fails(
 
 @pytest.mark.spark
 def test_unit_sinks_overlap(spark, seq, tmp_path_factory, monkeypatch):
-    """A unit's raw upsert is still running when its agg_1m upsert
-    starts: the sinks run as overlapping branches, not in sequence."""
+    """A unit's raw upsert is still running when its tiers branch
+    commits agg_1m: the sinks run as overlapping branches, not in
+    sequence."""
     import threading
 
     import tsclust_spark.plans.rollup_job as rj
 
     out = str(tmp_path_factory.mktemp("overlap"))
-    agg_1m_started = threading.Event()
-    raw_saw_agg_1m = []
+    tiers_committing = threading.Event()
+    raw_saw_tiers = []
     real = rj.upsert_partitioned
 
     def spy(spark_, target, updates, *args, **kwargs):
-        name = os.path.basename(target)
-        if name == "agg_1m":
-            agg_1m_started.set()
-        elif name == "raw":
-            raw_saw_agg_1m.append(agg_1m_started.wait(20))
+        if os.path.basename(target) == "raw":
+            raw_saw_tiers.append(tiers_committing.wait(20))
         return real(spark_, target, updates, *args, **kwargs)
 
     monkeypatch.setattr(rj, "upsert_partitioned", spy)
+    _spy_commits(monkeypatch, before=lambda name: tiers_committing.set())
     run_rollup(spark, seq, out, n_units=1, write_raw=True)
-    assert raw_saw_agg_1m == [True]
+    assert raw_saw_tiers == [True]
     assert spark.read.parquet(f"{out}/raw").count() == seq.count()
 
 
 @pytest.mark.spark
-def test_unit_branches_keep_caller_job_group(
-    spark, seq, tmp_path_factory, monkeypatch
-):
-    import tsclust_spark.plans.rollup_job as rj
+def test_unit_branches_keep_caller_job_group(spark, seq, tmp_path_factory):
+    """Every Spark job of the run, in both branches, carries the
+    caller's job group and description."""
+    import time
 
     out = str(tmp_path_factory.mktemp("jobgroup"))
     sc = spark.sparkContext
-    seen = []
-    real = rj.upsert_partitioned
+    store = sc._jsc.sc().statusStore()
 
-    def spy(spark_, target, updates, *args, **kwargs):
-        seen.append((
-            os.path.basename(target),
-            sc.getLocalProperty("spark.jobGroup.id"),
-            sc.getLocalProperty("spark.job.description"),
-        ))
-        return real(spark_, target, updates, *args, **kwargs)
+    def jobs():
+        jl = store.jobsList(None)
+        return [jl.apply(i) for i in range(jl.size())]
 
-    monkeypatch.setattr(rj, "upsert_partitioned", spy)
+    known = {j.jobId() for j in jobs()}
     sc.setJobGroup("rollup-branches", "rollup branch probe")
     try:
         run_rollup(spark, seq, out, n_units=2, write_raw=True)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert sorted(t for t, _, _ in seen) == sorted(
-        ["raw", "agg_1m", "agg_1h", "agg_1d"] * 2
-    )
-    for target, group, desc in seen:
-        assert (group, desc) == ("rollup-branches", "rollup branch probe"), target
+    for _ in range(50):  # the listener bus is asynchronous
+        mine = [j for j in jobs() if j.jobId() not in known]
+        if mine and all(j.completionTime().isDefined() for j in mine):
+            break
+        time.sleep(0.1)
+    # both branches ran jobs: the raw and the tiers staging writes
+    assert len(mine) >= 2 * 2
+    for j in mine:
+        group = j.jobGroup().get() if j.jobGroup().isDefined() else None
+        desc = j.description().get() if j.description().isDefined() else None
+        assert (group, desc) == ("rollup-branches", "rollup branch probe"), j.name()
 
 
 @pytest.mark.spark
 def test_unit_failure_waits_for_every_branch(
     spark, seq, tmp_path_factory, monkeypatch
 ):
-    """The raw upsert fails while the slowed tier upserts run: the unit
-    waits for them before deleting its scratch, then raises the raw
+    """The raw upsert fails while the slowed tiers branch runs: the unit
+    waits for the tiers branch to return before it raises the raw
     error, and the failed unit is recorded once."""
     import threading
     import time
@@ -405,41 +423,60 @@ def test_unit_failure_waits_for_every_branch(
     out = str(tmp_path_factory.mktemp("branchfail"))
     lock = threading.Lock()
     events = []
-    tier_started = threading.Event()
-    real_upsert, real_delete = rj.upsert_partitioned, rj._delete_unit_scratch
+    tiers_started = threading.Event()
+    real_upsert, real_tiers, real_unit = rj.upsert_partitioned, rj._commit_tiers, rj.run_unit
 
     def log(*event):
         with lock:
             events.append(event)
 
-    def spy(spark_, target, updates, *args, **kwargs):
-        name = os.path.basename(target)
-        if name == "raw":
-            tier_started.wait(20)
+    def upsert(spark_, target, updates, *args, **kwargs):
+        if os.path.basename(target) == "raw":
+            tiers_started.wait(20)
             raise RuntimeError("injected in raw")
-        log("start", name)
-        tier_started.set()
+        return real_upsert(spark_, target, updates, *args, **kwargs)
+
+    def tiers(*args):
+        log("start", "tiers")
+        tiers_started.set()
         try:
             time.sleep(1.0)
-            return real_upsert(spark_, target, updates, *args, **kwargs)
+            return real_tiers(*args)
         finally:
-            log("end", name)
+            log("end", "tiers")
 
-    def delete(spark_, work):
-        log("delete", os.path.basename(work))
-        real_delete(spark_, work)
+    def unit(*args, **kwargs):
+        try:
+            return real_unit(*args, **kwargs)
+        except Exception:
+            log("raise", "unit")
+            raise
 
-    monkeypatch.setattr(rj, "upsert_partitioned", spy)
-    monkeypatch.setattr(rj, "_delete_unit_scratch", delete)
+    monkeypatch.setattr(rj, "upsert_partitioned", upsert)
+    monkeypatch.setattr(rj, "_commit_tiers", tiers)
+    monkeypatch.setattr(rj, "run_unit", unit)
     with pytest.raises(RuntimeError, match="injected in raw"):
         run_rollup(spark, seq, out, n_units=2, write_raw=True)
 
-    started = {e[1] for e in events if e[0] == "start"}
-    assert started, "no tier upsert started beside the raw branch"
-    deleted_at = [e[0] for e in events].index("delete")
-    for tier in started:
-        assert events.index(("end", tier)) < deleted_at, tier
-    assert not os.path.exists(f"{out}/_work")
+    assert events == [("start", "tiers"), ("end", "tiers"), ("raise", "unit")]
+    assert _staging_dirs(out) == []
     (r,) = Manifest(spark, f"{out}/_manifest").read().collect()
     assert r.status == "failed"
     assert json.loads(r.lineage)["error"] == "RuntimeError: injected in raw"
+
+
+@pytest.mark.spark
+def test_rollup_job_budget(spark, seq, tmp_path):
+    """A 2-unit ``run_rollup`` with raw over a file-backed input starts
+    at most 13 Spark jobs: the input staging write, then 6 per unit
+    (its count, the raw and the tiers staging writes), with no
+    schema-inference read and no cascade."""
+    from tests.test_merge import jobs_in_group
+
+    src = str(tmp_path / "in")
+    seq.write.parquet(src)
+    inp = spark.read.parquet(src)
+    names = jobs_in_group(spark, "rollup-job-budget", lambda: run_rollup(
+        spark, inp, str(tmp_path / "out"), n_units=2, resume=False,
+    ))
+    assert 0 < len(names) <= 13, names

@@ -1,5 +1,7 @@
-"""Arrow/numpy 1m-rollup kernel — the Python-worker twin of the JVM
-array fast path (operators/rollup.py::rollup_sequences_1m_fast).
+"""Arrow/numpy tier kernel: each sequence's 1m, 1h and 1d rows in one
+map-only ``mapInArrow`` pass -- the Python-worker twin of the JVM array
+fast path (operators/rollup.py::rollup_sequences_1m_fast) followed by
+the JVM cascade (plans/rollup_job.py::_cascade_with_rep).
 
 Motivation (measured in this sandbox): Arrow-batched Python workers
 scale across cores at ~1.0 efficiency while the JVM array-expression
@@ -18,7 +20,9 @@ Fully vectorized per Arrow batch, no per-point Python:
   int32 matrix, one vectorized ``np.partition`` selects the median;
   partial tail buckets (at most one per row) are grouped BY LENGTH and
   each length class is selected vectorized — ≤59 numpy calls per batch
-  instead of a per-row Python loop (which measured ~85% of kernel time).
+  instead of a per-row Python loop (which measured ~85% of kernel time);
+- 1h from 1m and 1d from 1h: ``reduceat`` over runs of equal (row,
+  bucket start) and one ``lexsort`` per step for the medoid-of-medoids.
 """
 
 from __future__ import annotations
@@ -111,28 +115,120 @@ ROLLUP_1M_SCHEMA = (
     "doc_id string, bucket_ts timestamp, min_value int, max_value int, "
     "sum_value bigint, count_value bigint, rep_value int, mean_value double"
 )
+TIERS_SCHEMA = "tier string, " + ROLLUP_1M_SCHEMA
+
+# the tiers cascaded from 1m inside the worker, with their bucket width
+CASCADE = (("1h", 3600 * 1_000_000), ("1d", 86400 * 1_000_000))
 
 
-def rollup_sequences_1m_arrow(
+def cascade_flat(
+    cols: dict[str, np.ndarray], starts: np.ndarray
+) -> dict[str, np.ndarray]:
+    """One cascade step over a tier's rows (ordered by row, then
+    bucket): the groups are runs of equal (``row_idx``, ``starts``), so
+    min/max/sum/count are exact ``reduceat``s, and ``rep`` is the lower
+    median of the members' reps -- the medoid-of-medoids the JVM
+    cascade takes with ``element_at(sort_array(collect_list(rep)),
+    (size + 1) / 2)``. Returns the next tier's columns, ``ts`` holding
+    the group starts."""
+    row = cols["row_idx"]
+    new = np.ones(row.size, dtype=bool)
+    new[1:] = (row[1:] != row[:-1]) | (starts[1:] != starts[:-1])
+    bounds = np.flatnonzero(new)
+    members = np.diff(np.append(bounds, row.size))
+    # sorting by (group, rep) keeps every group at its own positions
+    group = np.repeat(np.arange(bounds.size), members)
+    reps = cols["rep"][np.lexsort((cols["rep"], group))]
+    return {
+        "row_idx": row[bounds],
+        "ts": starts[bounds],
+        "min": np.minimum.reduceat(cols["min"], bounds),
+        "max": np.maximum.reduceat(cols["max"], bounds),
+        "sum": np.add.reduceat(cols["sum"], bounds),
+        "count": np.add.reduceat(cols["count"], bounds),
+        "rep": reps[bounds + (members + 1) // 2 - 1],
+    }
+
+
+def session_zone(spark) -> tuple[int, str | None]:
+    """The session time zone, resolved the way Spark resolves it:
+    ``(offset_us, None)`` for a fixed offset (UTC included), else
+    ``(0, region id)``."""
+    from tsclust_spark.hadoopfs import jvm_class
+
+    utils = jvm_class(spark, "org.apache.spark.sql.catalyst.util.DateTimeUtils")
+    zone = utils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+    zone = zone.normalized()  # a ZoneOffset when the offset is fixed
+    if zone.getRules().isFixedOffset():
+        return zone.getTotalSeconds() * 1_000_000, None
+    return 0, zone.getId()
+
+
+def _offsets_us(ts_us: np.ndarray, region: str) -> np.ndarray:
+    """UTC offset of ``region`` at each instant, in microseconds."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    local = pc.local_timestamp(pa.array(ts_us, pa.timestamp("us", region)))
+    return local.cast(pa.int64()).to_numpy() - ts_us
+
+
+def floor_local(
+    ts_us: np.ndarray, unit_us: int, zone: tuple[int, str | None]
+) -> np.ndarray:
+    """Floor epoch-microsecond instants to an hour or day of local time
+    in ``zone`` (see :func:`session_zone`), as ``date_trunc`` does:
+    the local wall time is truncated and keeps the instant's own offset
+    when that offset is valid there; across a DST transition the valid
+    offset is taken, and a truncated time inside a gap maps to the
+    instant it would have had before the gap."""
+    offset_us, region = zone
+    if region is None:
+        return (ts_us + offset_us) // unit_us * unit_us - offset_us
+    own = _offsets_us(ts_us, region)
+    local = (ts_us + own) // unit_us * unit_us
+    out = local - own
+    moved = np.flatnonzero(_offsets_us(out, region) != own)
+    if moved.size:
+        local, first = local[moved], out[moved]
+        other = _offsets_us(first, region)
+        alt = local - other
+        # the other offset is valid at the truncated time, or it falls
+        # in a gap: then the later instant is the pre-gap offset's
+        out[moved] = np.where(
+            _offsets_us(alt, region) == other, alt, np.maximum(first, alt)
+        )
+    return out
+
+
+def rollup_sequences_tiers_arrow(
     seq_df: DataFrame,
     t0_epoch: int = T0_EPOCH_DEFAULT,
     step_seconds: int = 1,
 ) -> DataFrame:
-    """``mapInArrow`` surface; output schema/order matches the JVM fast
-    path. The Arrow list column's flat values buffer + value lengths go
-    STRAIGHT into the numpy kernel — no pandas materialization, no
-    per-row Python objects (a measured ~2.5x on the Spark-side wall vs
-    the earlier mapInPandas wrapper; the numpy kernel itself was never
-    the bottleneck)."""
+    """``mapInArrow`` surface: every sequence's 1m, 1h and 1d rows in
+    ONE map-only pass, tagged by a ``tier`` column (``TIERS_SCHEMA``).
+
+    Each row holds a whole sequence, so every bucket of every tier lies
+    inside one input row: the 1m rows come from :func:`rollup_1m_flat`,
+    the 1h rows cascade from them and the 1d rows from the 1h rows
+    (:func:`cascade_flat`), with hour and day starts floored in the
+    session time zone (:func:`floor_local`). No shuffle, and the result
+    equals the JVM cascade over the 1m tier row for row
+    (tests/test_fastpath.py). The Arrow list column's flat values
+    buffer and value lengths go straight into numpy -- no pandas, no
+    per-row Python objects."""
     if 60 % step_seconds != 0:
         raise ValueError("fast path needs step_seconds dividing 60")
     per_bucket = 60 // step_seconds
+    zone = session_zone(seq_df.sparkSession)
 
     def compute(batches: Iterator) -> Iterator:
         import pyarrow as pa
 
         out_fields = pa.schema(
             [
+                ("tier", pa.string()),
                 ("doc_id", pa.string()),
                 ("bucket_ts", pa.timestamp("us")),
                 ("min_value", pa.int32()),
@@ -143,23 +239,13 @@ def rollup_sequences_1m_arrow(
                 ("mean_value", pa.float64()),
             ]
         )
-        for batch in batches:
-            tok = batch.column(batch.schema.get_field_index("tokens"))
-            doc = batch.column(batch.schema.get_field_index("doc_id"))
-            # flatten() honors the array's slice offset; value_lengths
-            # gives per-row counts (mandated schema: tokens non-null)
-            values = tok.flatten().to_numpy(zero_copy_only=False)
-            lengths = tok.value_lengths().to_numpy(zero_copy_only=False)
-            lengths = np.asarray(lengths, dtype=np.int64)
-            cols = rollup_1m_flat(values, lengths, per_bucket)
-            n = len(cols["row_idx"])
-            if n == 0:
-                continue
-            ts_us = (t0_epoch + cols["bucket_idx"] * 60) * 1_000_000
-            yield pa.RecordBatch.from_arrays(
+
+        def tier_batch(tier: str, doc, cols: dict) -> pa.RecordBatch:
+            return pa.RecordBatch.from_arrays(
                 [
+                    pa.repeat(tier, cols["row_idx"].size),
                     doc.take(pa.array(cols["row_idx"], pa.int64())),
-                    pa.array(ts_us, pa.timestamp("us")),
+                    pa.array(cols["ts"], pa.timestamp("us")),
                     pa.array(cols["min"].astype(np.int32), pa.int32()),
                     pa.array(cols["max"].astype(np.int32), pa.int32()),
                     pa.array(cols["sum"], pa.int64()),
@@ -170,6 +256,42 @@ def rollup_sequences_1m_arrow(
                 schema=out_fields,
             )
 
+        for batch in batches:
+            tok = batch.column(batch.schema.get_field_index("tokens"))
+            doc = batch.column(batch.schema.get_field_index("doc_id"))
+            # flatten() honors the array's slice offset; value_lengths
+            # gives per-row counts (mandated schema: tokens non-null)
+            values = tok.flatten().to_numpy(zero_copy_only=False)
+            lengths = tok.value_lengths().to_numpy(zero_copy_only=False)
+            lengths = np.asarray(lengths, dtype=np.int64)
+            cols = rollup_1m_flat(values, lengths, per_bucket)
+            if len(cols["row_idx"]) == 0:
+                continue
+            cols["ts"] = (t0_epoch + cols["bucket_idx"] * 60) * 1_000_000
+            yield tier_batch("1m", doc, cols)
+            for tier, unit_us in CASCADE:
+                cols = cascade_flat(cols, floor_local(cols["ts"], unit_us, zone))
+                yield tier_batch(tier, doc, cols)
+
     return seq_df.select("doc_id", "tokens").mapInArrow(
-        compute, schema=ROLLUP_1M_SCHEMA
+        compute, schema=TIERS_SCHEMA
+    )
+
+
+def tier_slice(tiers: DataFrame, tier: str) -> DataFrame:
+    """One tier's rows of :func:`rollup_sequences_tiers_arrow`, in
+    ``ROLLUP_1M_SCHEMA``."""
+    return tiers.filter(F.col("tier") == tier).drop("tier")
+
+
+def rollup_sequences_1m_arrow(
+    seq_df: DataFrame,
+    t0_epoch: int = T0_EPOCH_DEFAULT,
+    step_seconds: int = 1,
+) -> DataFrame:
+    """The 1m slice of :func:`rollup_sequences_tiers_arrow`; output
+    schema and values match the JVM fast path
+    (operators/rollup.py::rollup_sequences_1m_fast)."""
+    return tier_slice(
+        rollup_sequences_tiers_arrow(seq_df, t0_epoch, step_seconds), "1m"
     )

@@ -75,8 +75,8 @@ def compact_partition(spark: SparkSession, dir_path: str, target_n: int) -> None
     the honest parquet equivalent.)
     """
     fs, hdir = hadoopfs.fs_path(spark, dir_path)
-    jvm = spark._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(dir_path + "/_compact_tmp")
+    Path = hadoopfs.jvm_class(spark, "org.apache.hadoop.fs.Path")
+    tmp = Path(dir_path + "/_compact_tmp")
     old_files = [p for p, _ in _data_files(fs, hdir)]
     (
         spark.read.parquet(dir_path)
@@ -92,7 +92,7 @@ def compact_partition(spark: SparkSession, dir_path: str, target_n: int) -> None
             hadoopfs.rename(
                 fs,
                 status.getPath(),
-                jvm.org.apache.hadoop.fs.Path(dir_path + "/" + name),
+                Path(dir_path + "/" + name),
             )
     fs.delete(tmp, True)
 

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tsclust_spark import hadoopfs
+
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("unit_id", T.StringType(), False),
@@ -53,8 +55,7 @@ class Manifest:
         self.path = path
 
     def _fs_root(self):
-        root = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
-        return root.getFileSystem(self.spark._jsc.hadoopConfiguration()), root
+        return hadoopfs.fs_path(self.spark, self.path)
 
     def _exists(self) -> bool:
         fs, root = self._fs_root()
@@ -112,7 +113,7 @@ class Manifest:
         # write under a hidden name, then rename: Spark never lists a
         # partial file
         fs, root = self._fs_root()
-        Path = self.spark._jvm.org.apache.hadoop.fs.Path
+        Path = hadoopfs.jvm_class(self.spark, "org.apache.hadoop.fs.Path")
         name = f"part-{uuid.uuid4().hex}.parquet"
         final, tmp = Path(root, name), Path(root, f"_{name}.tmp")
         out = fs.create(tmp, True)

@@ -10,12 +10,13 @@ On a cluster with an Iceberg catalog this is literally::
 has no catalog, so the fallback implements the same semantics on
 partitioned parquet with Iceberg's file-level replace as the commit
 model: the updates are written once to a hidden staging directory
-under the target; which target partitions they touch comes from
-filesystem metadata (the staged and the target partition directories),
-not from a scan; only those partitions are read back and merged
-row-wise (anti-join out the replaced keys, union the updates) into a
-second staging directory; and each touched partition directory is then
-swapped in by Hadoop FS renames. Unchanged partitions are never read or
+(under the target, or one directory staging the partitions of several
+targets, committed one target at a time); which target partitions
+they touch comes from filesystem metadata (the staged and the target
+partition directories), not from a scan; only those partitions are
+read back and merged row-wise (anti-join out the replaced keys, union
+the updates) into a second staging directory; and each touched
+partition directory is then swapped in by Hadoop FS renames. Unchanged partitions are never read or
 rewritten, which is the property that matters at 100 TB. A failed
 rename undoes the swap's earlier renames, so each partition holds its
 old rows or its new rows, never both and never neither.
@@ -24,6 +25,8 @@ old rows or its new rows, never both and never neither.
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -148,7 +151,7 @@ def _swap(
     the new one (if any) moves into its place under ``target_path``.
     On a failure every rename done so far is undone in reverse, so each
     partition holds its old rows again, and the error is re-raised."""
-    Path = spark._jvm.org.apache.hadoop.fs.Path
+    Path = hadoopfs.jvm_class(spark, "org.apache.hadoop.fs.Path")
     fs, _ = hadoopfs.fs_path(spark, target_path)
     done = []
     try:
@@ -173,6 +176,82 @@ def _swap(
         raise
 
 
+@contextmanager
+def staged_write(
+    spark: SparkSession, base: str, updates: DataFrame, partition_cols: list[str]
+) -> Iterator[str]:
+    """Write ``updates`` once, partitioned by ``partition_cols``, to a
+    hidden ``{base}/_staging-<uuid>`` directory and yield its path for
+    :func:`commit_staged`. The directory is deleted on leaving, unless
+    a swap that could not be undone keeps replaced partitions in it."""
+    staging = f"{base}/_staging-{uuid.uuid4().hex}"
+    try:
+        _write_partitioned(updates, partition_cols, staging)
+        yield staging
+    except _SwapNotUndone:
+        staging = None  # it holds the replaced partitions
+        raise
+    finally:
+        if staging is not None:
+            _delete(spark, staging)
+
+
+def _delete(spark: SparkSession, path: str) -> None:
+    fs, hpath = hadoopfs.fs_path(spark, path)
+    fs.delete(hpath, True)
+
+
+def _prune_prefix(partition_cols: list[str], prune_cols: list[str] | None) -> list[str]:
+    if prune_cols is None:
+        return partition_cols
+    if partition_cols[: len(prune_cols)] != prune_cols:
+        raise ValueError("prune_cols must be a prefix of partition_cols")
+    return prune_cols
+
+
+def commit_staged(
+    spark: SparkSession,
+    target_path: str,
+    staged: str,
+    schema,
+    key_cols: list[str],
+    partition_cols: list[str],
+    prune_cols: list[str] | None = None,
+) -> None:
+    """MERGE the partition directories staged under ``staged`` (a
+    partitioned parquet write of rows with ``schema``, partition
+    columns included) into ``target_path``: see
+    :func:`upsert_partitioned`, which stages and then calls this. A
+    staged directory that does not exist commits nothing. Replaced
+    partitions move aside under ``{staged}/_replaced``, so the caller
+    deletes ``staged`` afterwards, as :func:`staged_write` does."""
+    prune_cols = _prune_prefix(partition_cols, prune_cols)
+    n, k = len(partition_cols), len(prune_cols)
+    merged = None
+    try:
+        new_dirs = _partition_dirs(spark, staged, n)
+        prefixes = {t[:k] for t in new_dirs}
+        old_dirs = {
+            t: p
+            for t, p in _partition_dirs(spark, target_path, n).items()
+            if t[:k] in prefixes
+        }
+        if old_dirs:
+            old = _read_dirs(spark, schema, target_path, old_dirs.values())
+            new = _read_dirs(spark, schema, staged, new_dirs.values())
+            keep = old.join(new.select(*key_cols).distinct(), key_cols, "left_anti")
+            merged = f"{target_path}/_staging-{uuid.uuid4().hex}"
+            _write_partitioned(keep.unionByName(new), partition_cols, merged)
+            new_dirs = _partition_dirs(spark, merged, n)
+        _swap(spark, target_path, new_dirs, old_dirs, f"{staged}/_replaced")
+    except _SwapNotUndone:
+        merged = None  # keep every staged row next to the replaced ones
+        raise
+    finally:
+        if merged is not None:
+            _delete(spark, merged)
+
+
 def upsert_partitioned(
     spark: SparkSession,
     target_path: str,
@@ -185,11 +264,12 @@ def upsert_partitioned(
 
     ``updates`` must contain the partition columns. It is evaluated
     once, by a partitioned write to a hidden ``_staging-<uuid>``
-    directory under the target. Two metadata walks (staging and target)
-    give the affected target partitions: those sharing a ``prune_cols``
-    prefix with a staged partition. Directory names are compared with
-    directory names, so nulls, booleans and escaped values need no
-    canonicalization.
+    directory under the target (:func:`staged_write`), which
+    :func:`commit_staged` then commits. Two metadata walks (staging and
+    target) give the affected target partitions: those sharing a
+    ``prune_cols`` prefix with a staged partition. Directory names are
+    compared with directory names, so nulls, booleans and escaped
+    values need no canonicalization.
 
     - No affected partition (a new unit or date): the staged partition
       directories are renamed into place.
@@ -216,35 +296,9 @@ def upsert_partitioned(
     and leave a stale duplicate — pass the key-determined prefix (e.g.
     ``["unit"]``) so every partition the key could live in is merged.
     """
-    if prune_cols is None:
-        prune_cols = partition_cols
-    if partition_cols[: len(prune_cols)] != prune_cols:
-        raise ValueError("prune_cols must be a prefix of partition_cols")
-    n, k = len(partition_cols), len(prune_cols)
-    staging = [f"{target_path}/_staging-{uuid.uuid4().hex}"]
-    try:
-        _write_partitioned(updates, partition_cols, staging[0])
-        new_dirs = _partition_dirs(spark, staging[0], n)
-        prefixes = {t[:k] for t in new_dirs}
-        old_dirs = {
-            t: p
-            for t, p in _partition_dirs(spark, target_path, n).items()
-            if t[:k] in prefixes
-        }
-        if old_dirs:
-            old = _read_dirs(spark, updates.schema, target_path, old_dirs.values())
-            new = _read_dirs(spark, updates.schema, staging[0], new_dirs.values())
-            keep = old.join(new.select(*key_cols).distinct(), key_cols, "left_anti")
-            staging.append(f"{target_path}/_staging-{uuid.uuid4().hex}")
-            _write_partitioned(
-                keep.unionByName(new), partition_cols, staging[1]
-            )
-            new_dirs = _partition_dirs(spark, staging[1], n)
-        _swap(spark, target_path, new_dirs, old_dirs, f"{staging[0]}/_replaced")
-    except _SwapNotUndone:
-        staging = []  # they hold the replaced partitions
-        raise
-    finally:
-        for s in staging:
-            fs, hpath = hadoopfs.fs_path(spark, s)
-            fs.delete(hpath, True)
+    _prune_prefix(partition_cols, prune_cols)
+    with staged_write(spark, target_path, updates, partition_cols) as staged:
+        commit_staged(
+            spark, target_path, staged, updates.schema, key_cols,
+            partition_cols, prune_cols,
+        )

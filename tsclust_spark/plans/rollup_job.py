@@ -10,19 +10,18 @@ after another. Per unit:
    its rows and points
 2. raw branch: Gorilla-compress each row -> ``raw`` retention tier
    (C23/C24), running beside step 3
-3. map-only 1m tier (Arrow kernel, C16/C17) with exact sums and a
-   lower-medoid ``rep_value`` per window (C27), written ONCE to the
-   unit-scoped scratch parquet ``{out_dir}/_work/unit=<u>``
-4. once the scratch is written, three tier branches run together:
-   1m as is, and the 1h/1d cascade (medoid-of-medoids), each read
-   from the scratch only, so the scan and the 1m kernel run once per
-   unit, not once per tier
-5. every branch MERGEs into its partitioned target (C3), partitions
+3. tiers branch: ONE map-only Arrow pass (C16/C17) emits every row's
+   1m, 1h and 1d rows -- exact sums and a lower-medoid ``rep_value``
+   per window (C27), cascaded 1m -> 1h -> 1d inside the worker, since
+   every bucket of every tier lies inside one sequence row -- written
+   once to a hidden ``{out_dir}/_staging-<uuid>`` partitioned by
+   ``(tier, unit, bucket_date)``; each tier's directories are then
+   committed into ``agg_<tier>``. No scratch table, no cascade shuffle
+4. every sink MERGEs into its partitioned target (C3), partitions
    ``(unit, bucket_date)`` so units and targets never touch each
-   other's files. A failing branch does not cancel the others: the
-   unit waits for all of them, deletes the scratch, then raises the
-   first failure in pipeline order (raw, 1m, 1h, 1d)
-6. append a manifest record with lineage + points/sec (C4), or, for a
+   other's files. A failing branch does not cancel the other: the
+   unit waits for both, then raises the first failure (raw, tiers)
+5. append a manifest record with lineage + points/sec (C4), or, for a
    failed unit, the error in its lineage
 
 A killed job resumes by skipping manifest-complete units. Tier tables
@@ -33,20 +32,23 @@ sequence of runs (asserted by tests/test_resume.py).
 from __future__ import annotations
 
 import time
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tsclust_spark import hadoopfs
 from tsclust_spark.kernels.barycenter import window_representative
 from tsclust_spark.kernels.codec import compress_sequences
+from tsclust_spark.kernels.rollup_arrow import rollup_sequences_tiers_arrow, tier_slice
 from tsclust_spark.operators.rollup import TIER_ORDER, rollup_tier
 from tsclust_spark.plans.manifest import Manifest
-from tsclust_spark.plans.merge import upsert_partitioned
+from tsclust_spark.plans.merge import commit_staged, staged_write, upsert_partitioned
 
 TIER_KEYS = ["doc_id", "bucket_ts"]
+TIER_PARTITIONS = ["unit", "bucket_date"]
 
 
 def _cascade_with_rep(prev: DataFrame, tier: str) -> DataFrame:
@@ -99,44 +101,33 @@ def build_tiers_from_sequences(
     step_seconds: int = 1,
     kernel: str = "arrow",
 ) -> dict[str, DataFrame]:
-    """Fast path for the mandated nested input: map-only 1m tier (zero
-    shuffle), then cascade shuffles touch only tier rows (1/60th then
-    1/3600th of the points).
+    """Fast path for the mandated nested input, one plan per tier.
 
-    Two interchangeable, bit-exact 1m kernels (tests/test_fastpath.py):
-    ``arrow`` (zero-copy mapInArrow: the list column's flat buffers go
-    straight into numpy reduceat — measured 0.976 scaling efficiency
-    local[1]->local[4] and 22.6M rolled-up pts/s end-to-end incl. sinks
-    at sf0.1/local[32], BENCH/BASELINE.md) and ``jvm`` (pure array
-    expressions, whole-stage codegen — competitive at very low core
-    counts, but anti-scales under this sandbox's shared JVM heap).
-    Default arrow: its isolated-worker shape is also what scales on a
+    Two interchangeable, bit-exact kernels (tests/test_fastpath.py):
+    ``arrow`` -- the tiers of one map-only ``mapInArrow`` pass
+    (:func:`rollup_sequences_tiers_arrow`, the kernel ``run_unit``
+    writes from: the list column's flat buffers go straight into numpy
+    ``reduceat``, and the 1h/1d cascade runs inside the worker, no
+    shuffle) -- and ``jvm`` (a map-only 1m tier of pure array
+    expressions, whole-stage codegen, then the cascade shuffles of
+    :func:`_cascade_with_rep`, which touch only tier rows). Default
+    arrow: its isolated-worker shape is also what scales on a
     1000-executor cluster.
     """
-    from tsclust_spark.kernels.rollup_arrow import rollup_sequences_1m_arrow
     from tsclust_spark.operators.rollup import rollup_sequences_1m_fast
 
-    tiers: dict[str, DataFrame] = {}
     if kernel == "arrow":
-        t0_epoch = 1704067200 if t0 == "2024-01-01 00:00:00" else None
-        if t0_epoch is None:
-            import datetime as _dt
+        import datetime as _dt
 
-            t0_epoch = int(
-                _dt.datetime.fromisoformat(t0)
-                .replace(tzinfo=_dt.timezone.utc)
-                .timestamp()
-            )
-        tiers["1m"] = rollup_sequences_1m_arrow(seq_df, t0_epoch, step_seconds)
-    else:
-        tiers["1m"] = rollup_sequences_1m_fast(
-            seq_df, t0, step_seconds, with_rep=True
+        t0_epoch = int(
+            _dt.datetime.fromisoformat(t0).replace(tzinfo=_dt.timezone.utc).timestamp()
         )
-    prev = tiers["1m"]
-    for tier in TIER_ORDER[1:]:
-        tiers[tier] = _cascade_with_rep(prev, tier)
-        prev = tiers[tier]
-    return tiers
+        tiers = rollup_sequences_tiers_arrow(seq_df, t0_epoch, step_seconds)
+        return {tier: tier_slice(tiers, tier) for tier in TIER_ORDER}
+    out = {"1m": rollup_sequences_1m_fast(seq_df, t0, step_seconds, with_rep=True)}
+    for prev, tier in zip(TIER_ORDER, TIER_ORDER[1:]):
+        out[tier] = _cascade_with_rep(out[prev], tier)
+    return out
 
 
 def _input_fingerprint(seq: DataFrame) -> str:
@@ -151,16 +142,6 @@ def _input_fingerprint(seq: DataFrame) -> str:
     if files:
         return "files:" + hashlib.md5(";".join(files).encode()).hexdigest()
     return f"rows:{seq.count()}"
-
-
-def _delete_unit_scratch(spark: SparkSession, work: str) -> None:
-    """Delete a unit's scratch dir, then its ``_work`` parent once no
-    other unit's scratch is left in it."""
-    fs, hpath = hadoopfs.fs_path(spark, work)
-    fs.delete(hpath, True)
-    parent = hpath.getParent()
-    if fs.exists(parent) and len(fs.listStatus(parent)) == 0:
-        fs.delete(parent, False)
 
 
 def _upsert_raw(
@@ -207,46 +188,30 @@ def _upsert_raw(
     )
 
 
-def _write_scratch(
+def _commit_tiers(
     spark: SparkSession,
     part: DataFrame,
-    work: str,
+    unit: int,
+    out_dir: str,
     t0_epoch: int,
     step_seconds: int,
-) -> DataFrame:
-    """Write the unit's 1m tier once to its scratch ``work`` and return
-    the scratch read back."""
-    import datetime as _dt
-
-    t0_str = _dt.datetime.fromtimestamp(
-        t0_epoch, _dt.timezone.utc
-    ).strftime("%Y-%m-%d %H:%M:%S")
-    tier_1m = build_tiers_from_sequences(
-        part, t0=t0_str, step_seconds=step_seconds
-    )["1m"]
-    tier_1m.write.mode("overwrite").parquet(work)
-    # the known schema spares the footer-inference job of a bare read
-    return spark.read.schema(tier_1m.schema).parquet(work)
-
-
-def _upsert_tier(
-    spark: SparkSession, scratch: DataFrame, unit: int, out_dir: str, tier: str
 ) -> None:
-    """A tier branch: cascade ``tier`` from the 1m scratch and merge it
-    into ``{out_dir}/agg_<tier>``."""
-    tier_df = scratch
-    for step in TIER_ORDER[1 : TIER_ORDER.index(tier) + 1]:
-        tier_df = _cascade_with_rep(tier_df, step)
-    out = tier_df.withColumn("unit", F.lit(unit)).withColumn(
-        "bucket_date", F.to_date("bucket_ts")
+    """The tiers branch: one map-only kernel pass yields the unit's 1m,
+    1h and 1d rows, written once to a hidden staging directory
+    partitioned by ``(tier, unit, bucket_date)``; each tier's
+    directories are then committed into ``{out_dir}/agg_<tier>``."""
+    tiers = (
+        rollup_sequences_tiers_arrow(part, t0_epoch, step_seconds)
+        .withColumn("unit", F.lit(unit))
+        .withColumn("bucket_date", F.to_date("bucket_ts"))
     )
-    upsert_partitioned(
-        spark,
-        f"{out_dir}/agg_{tier}",
-        out,
-        key_cols=TIER_KEYS,
-        partition_cols=["unit", "bucket_date"],
-    )
+    schema = tiers.drop("tier").schema
+    with staged_write(spark, out_dir, tiers, ["tier", *TIER_PARTITIONS]) as staged:
+        for tier in TIER_ORDER:
+            commit_staged(
+                spark, f"{out_dir}/agg_{tier}", f"{staged}/tier={tier}",
+                schema, TIER_KEYS, TIER_PARTITIONS,
+            )
 
 
 def run_unit(
@@ -267,16 +232,16 @@ def run_unit(
     ``pmod(hash(doc_id))`` predicate, which cannot prune and re-scans
     the full input per unit (fine for one unit, ruinous for many).
 
-    Once the unit's row and point count is known, its sinks run as
+    Once the unit's row and point count is known, its two sinks run as
     overlapping branches on a thread pool named ``rollup-unit-<u>``:
-    the raw branch (compress, then the ``raw`` upsert) runs beside the
-    1m scratch write, and once the scratch is written the ``agg_1m``,
-    ``agg_1h`` and ``agg_1d`` upserts run together, each reading only
-    the scratch. Every branch runs its jobs under the caller's job
-    group and description. A failing branch does not cancel the
-    others: the unit waits for every branch, deletes the scratch, then
-    raises the first failure in pipeline order (raw, 1m, 1h, 1d), so
-    the caller records a failed unit once and retries it whole.
+    the raw branch (compress, then the ``raw`` upsert) and the tiers
+    branch (one map-only kernel pass for 1m, 1h and 1d, one staging
+    write, then the ``agg_1m``, ``agg_1h`` and ``agg_1d`` commits).
+    Every branch runs its jobs under the caller's job group and
+    description. A failing branch does not cancel the other: the unit
+    waits for both, then raises the first failure in pipeline order
+    (raw, tiers), so the caller records a failed unit once and retries
+    it whole.
     """
     if "unit" in seq.columns:
         part = seq.filter(F.col("unit") == unit).drop("unit")
@@ -289,40 +254,20 @@ def run_unit(
     if rows == 0:
         return 0, 0
 
-    # the unit's 1m tier is materialized ONCE to a unit-scoped scratch
-    # parquet and every tier upsert reads it back: otherwise each upsert
-    # re-runs the unit's scan and the Arrow 1m kernel under its cascade
-    # (three kernel passes per unit). The scratch lives and dies inside
-    # this unit, so nothing is reused across units or runs.
-    work = f"{out_dir}/_work/unit={unit}"
-    branches: list[Future] = []
-    try:
-        with ThreadPoolExecutor(
-            max_workers=len(TIER_ORDER) + write_raw,
-            thread_name_prefix=f"rollup-unit-{unit}",
-        ) as pool:
-
-            def submit(fn, *args) -> Future:
-                # wrapped per branch: each gets its own copy of the
-                # caller's local properties (job group, description)
-                return pool.submit(inheritable_thread_target(spark)(fn), *args)
-
-            if write_raw:
-                branches.append(submit(
-                    _upsert_raw, spark, part, unit, out_dir, t0_epoch, step_seconds
-                ))
-            scratch = submit(
-                _write_scratch, spark, part, work, t0_epoch, step_seconds
+    sinks = [_upsert_raw, _commit_tiers] if write_raw else [_commit_tiers]
+    with ThreadPoolExecutor(
+        max_workers=len(sinks), thread_name_prefix=f"rollup-unit-{unit}"
+    ) as pool:
+        # wrapped per branch: each gets its own copy of the caller's
+        # local properties (job group, description)
+        branches = [
+            pool.submit(
+                inheritable_thread_target(spark)(sink),
+                spark, part, unit, out_dir, t0_epoch, step_seconds,
             )
-            branches.append(scratch)
-            if scratch.exception() is None:
-                branches += [
-                    submit(_upsert_tier, spark, scratch.result(), unit, out_dir, tier)
-                    for tier in TIER_ORDER
-                ]
-            # leaving the pool waits for every branch
-    finally:
-        _delete_unit_scratch(spark, work)
+            for sink in sinks
+        ]
+        # leaving the pool waits for every branch
     for branch in branches:
         branch.result()  # raises the first failure in pipeline order
     return rows, points_n
@@ -386,7 +331,11 @@ def run_rollup(
             hadoopfs.write_text(
                 spark, fpr_path, fpr or _input_fingerprint(seq)
             )
-        seq = spark.read.parquet(staged_path)
+        # the known schema spares the footer-inference job of a bare read
+        unit_field = T.StructField("unit", T.IntegerType())
+        seq = spark.read.schema(
+            T.StructType([*seq.schema, unit_field])
+        ).parquet(staged_path)
 
     total_rows = total_points = 0
     t_start = time.time()
